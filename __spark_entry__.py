@@ -160,7 +160,7 @@ def _reap_stale_scratch() -> None:
             pass  # pid alive under another uid, or probe failed: keep
 
 
-# (context id, sf_dir, per-table (exists, mtime) signature) -> [(table,
+# (session id, sf_dir, per-table (exists, mtime) signature) -> [(table,
 # analyzed reader DataFrame)].  Schema inference (footer read + file
 # listing) is ~0.1 s per table per call — ~1 s of pure driver overhead on
 # EVERY query invocation at bench scale (BENCH/PROFILE_r10_before.json:
@@ -170,10 +170,14 @@ def _reap_stale_scratch() -> None:
 # restored exactly as before), and every query still computes from the
 # parquet files.  The mtime signature (10 stat calls, ~µs) invalidates
 # the memo when a table dir is rewritten or appears mid-session, so a
-# regenerated sf_dir never serves a stale file listing; keyed by context
-# id so a restarted session re-infers (the util._SHIPPED idiom).  One
-# entry per key tuple: a changed signature inserts a fresh entry and the
-# stale one is dropped below.
+# regenerated sf_dir never serves a stale file listing.  Keyed by SESSION
+# id, not context id: a reader DataFrame is bound to the session that
+# built it, so createOrReplaceTempView on it registers the view in THAT
+# session's catalog — a spark.newSession() sharing the context must get
+# its own readers.  The cached DataFrames keep their session alive, so
+# its id cannot be reused while the entry exists.  One entry per key
+# tuple: a changed signature inserts a fresh entry and the stale one is
+# dropped below.
 _READER_CACHE: dict[tuple, list] = {}
 
 
@@ -212,10 +216,10 @@ def _prepare(spark: SparkSession, sf_dir: str) -> None:
     # that one invocation instead of every later scan (advice r9)
     spark.conf.unset("spark.sql.parquet.pushdown.inFilterThreshold")
     base = os.path.abspath(sf_dir)
-    key = (id(spark.sparkContext), base, _sf_signature(base))
+    key = (id(spark), base, _sf_signature(base))
     readers = _READER_CACHE.get(key)
     if readers is None:
-        # drop any stale entries for this (context, dir) pair so a
+        # drop any stale entries for this (session, dir) pair so a
         # rewritten sf_dir does not pin dead file listings in memory
         for k in [k for k in _READER_CACHE if k[:2] == key[:2]]:
             del _READER_CACHE[k]

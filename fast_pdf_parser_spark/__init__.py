@@ -10,7 +10,7 @@ A from-scratch re-expression of mboros1/fast-pdf-parser (reference at
   (src/hierarchical_chunker.cpp:82-462) as pure-pandas functions executed
   inside vectorized Arrow UDFs,
 - interleaved text+media span documents processed with whole-doc locality
-  via ``mapInPandas`` (one input row per document → zero-shuffle pipeline),
+  via ``mapInArrow`` (one input row per document → zero-shuffle pipeline),
 - scale features the reference lacks: salted size-aware repartition,
   AQE, per-partition lineage/metrics checkpoint table with
   resume-from-partition.

@@ -8,9 +8,13 @@ Reference:
   — the internal overlap default of 50 is kept only as a named constant; the
   public default remains 0.
 - ``ParseOptions``: include/fast_pdf_parser/fast_pdf_parser.h:12-19
-  (thread_count=hw, max_memory_per_page=50MB, extract_positions/fonts/colors,
-  batch_size=10). ``thread_count`` maps to Spark task parallelism,
-  ``batch_size`` to Arrow ``maxRecordsPerBatch``.
+  (thread_count=hw, max_memory_per_page=50MB, batch_size=10).
+  ``thread_count`` maps to Spark task parallelism, ``batch_size`` to Arrow
+  ``maxRecordsPerBatch``, the per-page memory budget to the giant-doc
+  routing threshold. The reference's extract_positions/fonts projection
+  flags are not options here: the pipeline selects only (doc_id, spans)
+  before the fold, and ``pdf_lexer.extract_page_structured`` takes them
+  as its own parameters.
 """
 
 from __future__ import annotations
@@ -68,15 +72,6 @@ class ParseOptions(_PartialUpdate):
     # Arrow batch sizing — the analogue of the reference's batch_size=10 /
     # 50MB-per-page memory budget (fast_pdf_parser.h:15,18).
     arrow_max_records_per_batch: int = 64
-    # Extraction projection flags (text_extractor.h:9-14). The chunking path
-    # turns positions/fonts off (src/hierarchical_chunker.cpp:562-563).
-    extract_positions: bool = False
-    extract_fonts: bool = False
-    # JVM↔Python transport for the extraction fold: mapInArrow (pyarrow
-    # RecordBatches straight through, no pandas materialization either
-    # direction) vs mapInPandas. Same fold, same output — benchmarked in
-    # BENCH/ARROW_NATIVE_r5.json; False restores the pandas path.
-    arrow_native: bool = True
     # Giant-doc auto-routing threshold in span-text bytes (the Spark
     # analogue of the reference's per-page/batch memory budget,
     # fast_pdf_parser.h:15-18). 0 = off (every doc takes the zero-shuffle

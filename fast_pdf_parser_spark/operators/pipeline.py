@@ -5,13 +5,15 @@ Spark-first design (SURVEY.md §3.1 "Spark lifecycle equivalent"):
 
 - The input table has ONE ROW PER DOCUMENT with the span array inline, so the
   whole-document locality the 7 sequential passes need (SURVEY.md §2.7) is
-  already present — the pipeline is a single ``mapInPandas`` stage with
+  already present — the pipeline is a single ``mapInArrow`` stage with
   **zero shuffles**. No groupBy, no join, no sort: at 100 TB the only data
   movement is the optional salted repartition for skew.
 - Everything crossing the JVM↔Python boundary moves as Arrow batches; the
   per-row work inside the UDF is the per-document sequential fold that
-  defines the algorithm (the "loops inside a pandas UDF" contract,
-  SURVEY.md §4).
+  defines the algorithm (the "loops inside a vectorized UDF" contract,
+  SURVEY.md §4). Both input shapes — one row per document and the giant-doc
+  split's one row per span — run through the same fold loop
+  (``_fold_batches``) and the same Arrow processor.
 - Column pruning: only (doc_id, spans) are selected before the UDF — Catalyst
   prunes the parquet scan to exactly those (the analogue of
   extract_positions=false/extract_fonts=false, hierarchical_chunker.cpp:562-563).
@@ -45,7 +47,6 @@ from __future__ import annotations
 
 import base64
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from fast_pdf_parser_spark.config import ChunkOptions, ParseOptions
@@ -62,8 +63,6 @@ OUTPUT_DDL = (
     "doc_error string"
 )
 
-_COLUMNS = [f.split(" ")[0] for f in OUTPUT_DDL.split(", ")]
-
 
 class _DocFold:
     """Incremental per-document fold: spans pushed ONE AT A TIME in
@@ -74,14 +73,14 @@ class _DocFold:
     never the whole document's output (the Spark-side analogue of the
     reference's batch-bounded consume, src/fast_pdf_parser.cpp:75-115).
 
-    ``finish()`` flushes the tail and populates ``self.meta`` with
-    {total_pages, parse_failures, bytes_decoded, first_error} — doc
-    totals only exist at doc end, which is exactly why they can't ride on
+    ``finish()`` flushes the tail; ``doc_meta()`` then reads the doc
+    totals (pages, parse failures, bytes decoded, first error) — they only
+    exist at doc end, which is exactly why they can't ride on
     incrementally-emitted rows (see _FlushState for where they attach).
 
-    The incremental form exists so extract_documents_split can feed a
-    document whose spans arrive as MULTIPLE shuffled rows (the giant-doc
-    path) through the identical fold the one-row-per-doc path runs.
+    The incremental form exists so _fold_batches can feed a document whose
+    spans arrive as MULTIPLE shuffled rows (the giant-doc split path)
+    through the identical fold the one-row-per-doc path runs.
     """
 
     def __init__(self, doc_id: str, tokenizer,
@@ -96,7 +95,6 @@ class _DocFold:
         self._emitted = 0
         self._pushed = 0
         self._chunker = None
-        self.meta: dict = {}
 
     def _chunk_rows(self, chunks):
         rows = []
@@ -203,8 +201,8 @@ class _DocFold:
             yield self._passthrough_row(kind, s["text"], s["media_ref"])
 
     def finish(self):
-        """Flush the tail, emit the no-output meta row if needed, and
-        populate ``self.meta``; yields the remaining rows."""
+        """Flush the tail and emit the no-output meta row if needed;
+        yields the remaining rows."""
         if self._chunker is not None:
             yield from self._chunk_rows(self._chunker.finish())
             self._chunker = None
@@ -214,29 +212,17 @@ class _DocFold:
             # meta counters (pages seen, failures, first error) are the
             # error-containment contract. One kind='meta' row carries them.
             yield self._passthrough_row("meta", None, None)
-        self.meta = {
-            "total_pages": self.total_pages,
-            "parse_failures": self.parse_failures,
-            "bytes_decoded": self.bytes_decoded,
-            "first_error": self.first_error,
-        }
 
     def doc_meta(self) -> tuple:
-        """The four doc_* meta columns (valid after finish())."""
-        return (self.meta["total_pages"], self.meta["parse_failures"],
-                self.meta["bytes_decoded"], self.meta["first_error"])
+        """The four doc_* meta columns (final after finish())."""
+        return (self.total_pages, self.parse_failures,
+                self.bytes_decoded, self.first_error)
 
 
-def _iter_doc_rows(
-    doc_id: str,
-    spans,
-    tokenizer,
-    chunk_options: ChunkOptions,
-    meta_out: dict,
-):
-    """One-row-per-doc form of the fold: sort the span array, stream it
-    through _DocFold. Input references are released as they are consumed
-    (ordered[i] = None) so a giant document's span text becomes
+def _in_fold_order(spans):
+    """Yield a document's spans in fold order, releasing each one as it is
+    consumed (ordered[i] = None): once the caller has dropped its own
+    reference to ``spans``, a giant document's span text becomes
     collectable span by span."""
     # (offset, kind, text) — offset is THE document order; the null-safe
     # kind/text tiebreak only matters for (out-of-contract) duplicate
@@ -247,13 +233,11 @@ def _iter_doc_rows(
         spans,
         key=lambda s: (s["offset"], s["kind"] or "", s["text"] or ""),
     )
-    fold = _DocFold(doc_id, tokenizer, chunk_options)
+    del spans
     for i in range(len(ordered)):
         s = ordered[i]
         ordered[i] = None  # release the span (and its text) once consumed
-        yield from fold.push_span(s)
-    yield from fold.finish()
-    meta_out.update(fold.meta)
+        yield s
 
 
 def process_document(
@@ -266,22 +250,22 @@ def process_document(
 
     ``spans`` is an iterable of dict-like {kind, text, media_ref, offset}.
     Returns rows matching OUTPUT_DDL. Unit-testable without Spark. This is
-    the materialized view of the streaming fold (_iter_doc_rows): every
+    the materialized view of the streaming fold (_fold_batches): every
     row carries the doc's final meta columns.
     """
-    meta: dict = {}
-    rows = list(_iter_doc_rows(doc_id, spans, tokenizer, chunk_options, meta))
-    doc_meta = (
-        meta["total_pages"], meta["parse_failures"],
-        meta["bytes_decoded"], meta["first_error"],
-    )
+    fold = _DocFold(doc_id, tokenizer, chunk_options)
+    rows = []
+    for s in _in_fold_order(spans):
+        rows.extend(fold.push_span(s))
+    rows.extend(fold.finish())
+    doc_meta = fold.doc_meta()
     return [row + doc_meta for row in rows]
 
 
 # Output-side memory bound for the fold: accumulated result rows are
 # flushed as their own Arrow batch once their text payload crosses this
 # many characters (or _FLUSH_ROWS rows) — both BETWEEN documents and,
-# since round 5, INSIDE a document: _iter_doc_rows streams chunk rows out
+# since round 5, INSIDE a document: _DocFold streams chunk rows out
 # page by page, so a giant document's output leaves the worker in
 # ~_FLUSH_CHARS slices instead of accumulating whole. Peak worker memory
 # therefore tracks the input batch plus O(_FLUSH_CHARS), not ~15x the
@@ -302,8 +286,8 @@ _NULL_META = (None, None, None, None)
 
 
 class _FlushState:
-    """Budget-bounded row buffering shared by the one-row-per-doc and the
-    split (one-row-per-span) processors: rows go in via ``add_row`` /
+    """Budget-bounded row buffering of the fold loop (_fold_batches), for
+    both input shapes: rows go in via ``add_row`` /
     ``end_doc`` / ``end``, each of which yields zero or more row-tuple
     BATCHES honoring the _FLUSH_CHARS/_FLUSH_ROWS budget and the meta
     contract (offset-0 row withheld to doc end so it always carries final
@@ -366,53 +350,74 @@ class _FlushState:
             self.rows, self.pending_chars = [], 0
 
     def end(self):
-        """Input exhausted: flush whatever remains."""
+        """End of an input batch (or of the input): flush the completed-doc
+        rows; an open document's rows stay buffered."""
         if self.rows:
             yield self.rows
             self.rows, self.pending_chars = [], 0
 
 
-def _iter_flush_batches(doc_ids, spans_col, tokenizer, chunk_options):
-    """Shared flush loop of the one-row-per-doc processors: (doc ids, span
-    lists) → row-tuple batches via _FlushState. ``spans_col`` entries are
-    nulled as consumed."""
-    state = _FlushState()
+def _whole_docs(doc_ids, spans_col):
+    """Input adapter of the contiguous path: each row is ONE complete
+    document (two rows with the same doc_id stay two folds)."""
     for j, doc_id in enumerate(doc_ids):
-        spans = spans_col[j]
-        spans_col[j] = None
-        meta: dict = {}
-        for row in _iter_doc_rows(
-            doc_id, spans, tokenizer, chunk_options, meta
-        ):
+        spans = _in_fold_order(spans_col[j])
+        spans_col[j] = None  # the fold holds the only reference now
+        yield doc_id, spans, True
+
+
+def _span_rows(doc_ids, span_col):
+    """Input adapter of the split path: one span per row, clustered by
+    doc_id and already in fold order; a document may continue into the
+    next input batch, so it completes only on a doc_id change."""
+    for j, doc_id in enumerate(doc_ids):
+        span = span_col[j]
+        span_col[j] = None  # release as consumed
+        yield doc_id, (span,), False
+
+
+def _fold_batches(inputs, tokenizer, chunk_options: ChunkOptions):
+    """The one fold loop: ``inputs`` yields, per input Arrow batch, an
+    iterable of (doc_id, spans in fold order, complete) pieces (from
+    _whole_docs or _span_rows); row-tuple batches come out via _FlushState.
+
+    A piece continues the open document when its doc_id matches and the
+    previous piece was not ``complete``; the open document carries across
+    input batches. Completed-doc rows are flushed at the end of EVERY
+    input batch, so output never waits on the next input batch's fold."""
+    state = _FlushState()
+    fold: _DocFold | None = None
+
+    def close():
+        for row in fold.finish():
             yield from state.add_row(row)
-        del spans
-        yield from state.end_doc((
-            meta["total_pages"], meta["parse_failures"],
-            meta["bytes_decoded"], meta["first_error"],
-        ))
-    yield from state.end()
+        yield from state.end_doc(fold.doc_meta())
+
+    for pieces in inputs:
+        for doc_id, spans, complete in pieces:
+            if fold is not None and fold.doc_id != doc_id:
+                yield from close()
+                fold = None
+            if fold is None:
+                fold = _DocFold(doc_id, tokenizer, chunk_options)
+            for s in spans:
+                for row in fold.push_span(s):
+                    yield from state.add_row(row)
+            if complete:
+                yield from close()
+                fold = None
+        yield from state.end()
+    if fold is not None:
+        yield from close()
+        yield from state.end()
 
 
-def _make_processor(chunk_options: ChunkOptions, vocab_path: str | None):
-    def process_batches(batches):
-        tokenizer = get_tokenizer(vocab_path)  # per-worker singleton
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].tolist()
-            spans_col = pdf["spans"].tolist()
-            del pdf  # drop the pandas batch; spans free as docs complete
-            for rows in _iter_flush_batches(
-                doc_ids, spans_col, tokenizer, chunk_options
-            ):
-                yield pd.DataFrame(rows, columns=_COLUMNS)
-
-    return process_batches
-
-
-def _make_arrow_processor(chunk_options: ChunkOptions, vocab_path: str | None):
-    """mapInArrow twin of _make_processor: same fold, same flush contract,
-    but the JVM↔Python columns move as pyarrow RecordBatches directly —
-    no pandas Series materialization on input (ListArray.to_pylist is the
-    single conversion) and no pandas→Arrow re-conversion on output."""
+def _make_processor(chunk_options: ChunkOptions, vocab_path: str | None,
+                    column: str, pieces_of):
+    """The mapInArrow processor of every extraction path: (doc_id,
+    ``column``) Arrow batches in, OUTPUT_DDL Arrow batches out.
+    ListArray.to_pylist is the single input conversion; ``pieces_of``
+    (_whole_docs or _span_rows) says what one input row is."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
@@ -430,60 +435,16 @@ def _make_arrow_processor(chunk_options: ChunkOptions, vocab_path: str | None):
 
     def process_batches(batches):
         tokenizer = get_tokenizer(vocab_path)  # per-worker singleton
-        for batch in batches:
-            doc_ids = batch.column(0).to_pylist()
-            spans_col = batch.column(1).to_pylist()
-            del batch
-            for rows in _iter_flush_batches(
-                doc_ids, spans_col, tokenizer, chunk_options
-            ):
-                yield rows_to_batch(rows)
 
-    return process_batches
+        def inputs():
+            for batch in batches:
+                doc_ids = batch.column("doc_id").to_pylist()
+                values = batch.column(column).to_pylist()
+                del batch  # spans free as they are folded
+                yield pieces_of(doc_ids, values)
 
-
-def _make_split_processor(chunk_options: ChunkOptions, vocab_path: str | None):
-    """mapInPandas processor of the split (one-row-per-span) path: rows
-    arrive clustered by doc_id and sorted by span position WITHIN each
-    partition (extract_documents_split arranges this), so a document is a
-    consecutive run of rows — possibly spanning several Arrow batches.
-    The fold state (_DocFold) and the flush buffer (_FlushState) carry
-    across batch boundaries; doc completion is detected by doc_id change
-    or partition end."""
-
-    def process_batches(batches):
-        tokenizer = get_tokenizer(vocab_path)  # per-worker singleton
-        state = _FlushState()
-        fold: _DocFold | None = None
-
-        def rows_of(gen):
-            for row in gen:
-                yield from state.add_row(row)
-
-        def close_fold():
-            assert fold is not None
-            yield from rows_of(fold.finish())
-            yield from state.end_doc(fold.doc_meta())
-
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].tolist()
-            span_col = pdf["span"].tolist()
-            del pdf
-            for j, doc_id in enumerate(doc_ids):
-                span = span_col[j]
-                span_col[j] = None  # release as consumed
-                if fold is None or fold.doc_id != doc_id:
-                    if fold is not None:
-                        for b in close_fold():
-                            yield pd.DataFrame(b, columns=_COLUMNS)
-                    fold = _DocFold(doc_id, tokenizer, chunk_options)
-                for b in rows_of(fold.push_span(span)):
-                    yield pd.DataFrame(b, columns=_COLUMNS)
-        if fold is not None:
-            for b in close_fold():
-                yield pd.DataFrame(b, columns=_COLUMNS)
-        for b in state.end():
-            yield pd.DataFrame(b, columns=_COLUMNS)
+        for rows in _fold_batches(inputs(), tokenizer, chunk_options):
+            yield rows_to_batch(rows)
 
     return process_batches
 
@@ -637,13 +598,9 @@ def _extract_contiguous(
     if parse_options.num_partitions > 0:
         pruned = repartition_for_skew(pruned, parse_options.num_partitions)
 
-    if parse_options.arrow_native:
-        return pruned.mapInArrow(
-            _make_arrow_processor(chunk_options, vocab_path),
-            schema=OUTPUT_DDL,
-        )
-    return pruned.mapInPandas(
-        _make_processor(chunk_options, vocab_path), schema=OUTPUT_DDL
+    return pruned.mapInArrow(
+        _make_processor(chunk_options, vocab_path, "spans", _whole_docs),
+        schema=OUTPUT_DDL,
     )
 
 
@@ -721,16 +678,19 @@ def extract_documents_split(
                          F.posexplode(ordered).alias("pos", "span"))
     n = parse_options.num_partitions \
         or spark.sparkContext.defaultParallelism
+    # pos only orders the rows: the fold reads (doc_id, span)
     flat = (flat.repartition(n, "doc_id")
-            .sortWithinPartitions("doc_id", "pos"))
+            .sortWithinPartitions("doc_id", "pos")
+            .select("doc_id", "span"))
 
     if vocab_path is None:
         from fast_pdf_parser_spark.functions.tokenizer import find_real_vocab
 
         vocab_path = find_real_vocab()
 
-    return flat.mapInPandas(
-        _make_split_processor(chunk_options, vocab_path), schema=OUTPUT_DDL
+    return flat.mapInArrow(
+        _make_processor(chunk_options, vocab_path, "span", _span_rows),
+        schema=OUTPUT_DDL,
     )
 
 

@@ -9,7 +9,7 @@ exactly-once sink semantics via ``foreachBatch`` + Spark's own streaming
 checkpoint.
 
 Stateless per-document extraction needs no watermark or state store — each
-micro-batch runs the same zero-shuffle mapInPandas pipeline. (Watermarked
+micro-batch runs the same zero-shuffle mapInArrow pipeline. (Watermarked
 windowed aggregation is demonstrated on the metrics stream.)
 """
 

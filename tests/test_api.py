@@ -71,3 +71,6 @@ def test_options_partial_update():
     with pytest.raises(ValueError):
         base.updated(min_tokens=500).validate()
     assert ParseOptions().updated(num_partitions=8).num_partitions == 8
+    for removed in ("arrow_native", "extract_positions", "extract_fonts"):
+        with pytest.raises(TypeError, match=removed):
+            ParseOptions().updated(**{removed: True})

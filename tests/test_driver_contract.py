@@ -23,6 +23,17 @@ def test_entry_returns_rows(spark):
     assert {"doc_id", "offset", "kind", "text", "media_ref"} <= cols
 
 
+def test_prepare_registers_views_per_session(spark):
+    """Temp views are session-scoped: _prepare on a second session that
+    shares the SparkContext must register its views in THAT session, not
+    reuse reader DataFrames bound to the first one."""
+    entrymod._prepare(spark, SF_DIR)
+    spark2 = spark.newSession()
+    entrymod._prepare(spark2, SF_DIR)
+    assert spark2.table("documents").count() == \
+        spark.table("documents").count() > 0
+
+
 def test_queries_and_oracles_consistent():
     q = entrymod.queries()
     o = entrymod.oracle_sql()

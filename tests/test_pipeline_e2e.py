@@ -3,7 +3,7 @@ order) per doc_id — the north-rule invariant (BASELINE.json).
 
 Golden sequences are computed doc-by-doc with the pure-Python path
 (process_document) — which is itself pinned by the hand-computed pass tests —
-and the Spark pipeline must reproduce them EXACTLY through mapInPandas,
+and the Spark pipeline must reproduce them EXACTLY through mapInArrow,
 including media passthrough positions and output offset renumbering.
 Edge-case docs from FIXTURES.md §3.2 are asserted literally.
 """
@@ -121,8 +121,7 @@ def test_page_limit_pushdown(spark):
     # source Catalyst may then constant-fold it — also fine)
     plan = limited._jdf.queryExecution().analyzed().toString()
     assert "slice" in plan
-    udf_node = "MapInArrow" if "MapInArrow" in plan else "MapInPandas"
-    assert plan.index("slice") > plan.index(udf_node)  # child of the UDF
+    assert plan.index("slice") > plan.index("MapInArrow")  # UDF's child
 
 
 def test_span_sequence_equality_all_kinds(spark):
@@ -237,7 +236,7 @@ def test_zero_shuffle_plan(spark, corpus_df):
     plan = extract_documents(df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "FlatMapGroupsInPandas" not in plan  # no groupBy needed
-    assert "MapInArrow" in plan or "MapInPandas" in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
 def test_unknown_kind_passthrough(spark):

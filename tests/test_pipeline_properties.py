@@ -70,11 +70,13 @@ def test_fold_invariants(spans):
 
 
 def test_flush_batches_bounded_by_one_budget(monkeypatch):
-    """Every batch _iter_flush_batches emits must stay within ONE flush
-    budget (plus at most one row of overshoot): completed-doc rows and a
-    giant doc's mid-doc rows must never stack into a ~2x batch. Docs that
+    """Every batch _fold_batches emits must stay within ONE flush budget
+    (plus at most one row of overshoot): completed-doc rows and a giant
+    doc's mid-doc rows must never stack into a ~2x batch. Docs that
     individually fit under the budget must keep meta on every row, and
-    the union of all batches must equal the non-streaming fold."""
+    the union of all batches must equal the non-streaming fold. Both input
+    shapes: whole docs in one input batch, and the split path's one span
+    per row across small input batches (the giant doc straddling them)."""
     from fast_pdf_parser_spark.operators import pipeline as P
 
     budget = 2000
@@ -98,36 +100,66 @@ def test_flush_batches_bounded_by_one_budget(monkeypatch):
         for p in range(8)
     ]))
 
-    ids = [d[0] for d in docs]
-    spans = [d[1] for d in docs]
-    batches = list(P._iter_flush_batches(ids, spans, TOK,
-                                         ChunkOptions(min_tokens=1)))
-    assert len(batches) > 3  # the budget actually exercised
+    whole = [P._whole_docs([d[0] for d in docs], [d[1] for d in docs])]
+    span_rows = [(doc_id, s) for doc_id, ss in docs for s in ss]
+    split = [P._span_rows([r[0] for r in span_rows[i:i + 5]],
+                          [r[1] for r in span_rows[i:i + 5]])
+             for i in range(0, len(span_rows), 5)]
+    for inputs in (whole, split):
+        batches = list(P._fold_batches(inputs, TOK,
+                                       ChunkOptions(min_tokens=1)))
+        assert len(batches) > 3  # the budget actually exercised
 
-    flat = []
-    for b in batches:
-        chars = sum(len(r[3] or "") for r in b)
-        max_row = max((len(r[3] or "") for r in b), default=0)
-        assert chars <= budget + max_row, (chars, budget, max_row)
-        flat.extend(b)
+        flat = []
+        for b in batches:
+            chars = sum(len(r[3] or "") for r in b)
+            max_row = max((len(r[3] or "") for r in b), default=0)
+            assert chars <= budget + max_row, (chars, budget, max_row)
+            flat.extend(b)
 
-    # non-giant docs: meta on EVERY row (never NULL-streamed just because
-    # unrelated completed rows shared the buffer)
-    for r in flat:
-        if r[0] != "giant":
-            assert r[12] is not None, r
+        # non-giant docs: meta on EVERY row (never NULL-streamed just
+        # because unrelated completed rows shared the buffer)
+        for r in flat:
+            if r[0] != "giant":
+                assert r[12] is not None, r
 
-    # union equality with the materialized fold, doc by doc
-    by_doc: dict = {}
-    for r in flat:
-        by_doc.setdefault(r[0], []).append(r)
-    for doc_id, doc_spans_ in docs:
-        expect = P.process_document(doc_id, doc_spans_, TOK,
-                                    ChunkOptions(min_tokens=1))
-        got = sorted(by_doc[doc_id], key=lambda r: r[1])
-        assert [g[:12] for g in got] == [e[:12] for e in expect]
-        # the offset-0 row always carries final meta
-        assert got[0][12:] == expect[0][12:]
+        # union equality with the materialized fold, doc by doc
+        by_doc: dict = {}
+        for r in flat:
+            by_doc.setdefault(r[0], []).append(r)
+        for doc_id, doc_spans_ in docs:
+            expect = P.process_document(doc_id, doc_spans_, TOK,
+                                        ChunkOptions(min_tokens=1))
+            got = sorted(by_doc[doc_id], key=lambda r: r[1])
+            assert [g[:12] for g in got] == [e[:12] for e in expect]
+            # the offset-0 row always carries final meta
+            assert got[0][12:] == expect[0][12:]
+
+
+def test_fold_flushes_completed_rows_per_input_batch():
+    """On the contiguous path every completed row of input batch k leaves
+    _fold_batches before batch k+1 is pulled: output never accumulates
+    across input batches up to the flush budget."""
+    from fast_pdf_parser_spark.operators import pipeline as P
+
+    batches = [[(f"b{k}d{d}", [{"kind": "text", "media_ref": None,
+                                "text": f"batch {k} doc {d} words",
+                                "offset": 0}])
+                for d in range(2)] for k in range(3)]
+    pulled = []
+
+    def inputs():
+        for k, docs in enumerate(batches):
+            pulled.append(k)
+            yield P._whole_docs([d[0] for d in docs], [d[1] for d in docs])
+
+    emitted = []  # (input batches pulled so far, doc_id) per output row
+    for rows in P._fold_batches(inputs(), TOK, ChunkOptions(min_tokens=1)):
+        emitted.extend((len(pulled), r[0]) for r in rows)
+    assert sorted(d for _, d in emitted) == \
+        sorted(d[0] for docs in batches for d in docs)
+    for n_pulled, doc_id in emitted:
+        assert n_pulled == int(doc_id[1]) + 1, (n_pulled, doc_id)
 
 
 def test_spark_partition_invariance(spark):

@@ -348,7 +348,8 @@ def test_routed_extraction_plan_shape(spark, wide_corpus):
     """Auto-routed skew tail (ParseOptions.giant_doc_bytes): the union
     plan carries EXACTLY ONE Exchange — the split-path repartition of the
     giant bucket's span rows — while the bulk side stays the zero-shuffle
-    pruned-scan fold. Both branches' scans stay pruned to (doc_id, spans)."""
+    pruned-scan fold. Both branches' scans stay pruned to (doc_id, spans)
+    and both folds run on the one Arrow transport."""
     from fast_pdf_parser_spark.config import ParseOptions
     from fast_pdf_parser_spark.operators.pipeline import extract_documents
 
@@ -359,6 +360,7 @@ def test_routed_extraction_plan_shape(spark, wide_corpus):
     # the one Exchange is the tail's doc_id hash repartition, not a
     # corpus-wide single partition
     assert "SinglePartition" not in plan
+    assert plan.count("MapInArrow") == 2 and "MapInPandas" not in plan
     for read_schema in plan.split("ReadSchema:")[1:]:
         assert "extra" not in read_schema[:200]
 

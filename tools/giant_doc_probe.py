@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Giant-document Arrow memory probe (VERDICT r3 #7).
 
-A document is ONE row into the zero-shuffle mapInPandas fold (whole-doc
+A document is ONE row into the zero-shuffle mapInArrow fold (whole-doc
 locality is the design), so the skew tail's memory question is: what does
 one very large document cost the Python worker and the JVM? This probe
 synthesizes a single ~N-MB text document (default 256 MB of span text,
