@@ -71,8 +71,47 @@ def _scratch(kind: str, sf_name: str) -> str:
     return path
 
 
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+        return True
+    except ProcessLookupError:
+        return False  # definitely dead: collect
+    except OSError:
+        return True  # alive under another uid, or probe failed: keep
+
+
+def _marker_owner_alive(marker: str) -> bool:
+    """True when the process instance named by a ``.owner`` marker (or
+    this process) may still be using its scratch."""
+    import json
+
+    try:
+        with open(marker) as f:
+            owner = json.load(f)
+        pid, start = int(owner["pid"]), owner["start"]
+    except (OSError, ValueError, KeyError, TypeError):
+        return False  # unreadable marker: treat as dead
+    if pid == os.getpid():
+        return True
+    if pid <= 0:
+        # no identity to probe (os.kill(-1, 0) would signal-check EVERY
+        # process and never raise ProcessLookupError); treat as dead
+        return False
+    ticks = _proc_start_ticks(pid) if start is not None else None
+    if ticks is not None:
+        # exact instance match; a different start time means the pid was
+        # recycled and the owner is dead
+        return ticks == start
+    # instance-exact matching impossible (marker written — or /proc probed
+    # just now — while /proc was unreadable): fall back to the kill(0)
+    # liveness probe instead of treating a LIVE owner as dead and
+    # clobbering its in-progress scratch (advice r9)
+    return _pid_alive(pid)
+
+
 def _reap_stale_scratch() -> None:
-    """Delete /tmp scratch dirs left by DEAD prior invocations.
+    """Delete /tmp scratch dirs and markers left by DEAD prior invocations.
 
     Every scratch path here embeds os.getpid() so concurrent runs can't
     clobber each other — but that means a dir from a finished/crashed
@@ -81,9 +120,11 @@ def _reap_stale_scratch() -> None:
     rounds (advice finding, round 7). Ownership is decided by the
     ``.owner`` marker written by _scratch (pid + process start ticks —
     exact across pid recycling); dirs without a marker fall back to the
-    pid-parse + kill(0) probe. A live owner's dirs are never touched."""
+    pid-parse + kill(0) probe. A live owner's dirs and marker are never
+    touched. Markers are visited after every dir, and a dead owner's
+    marker goes once none of its dirs remain — which is the normal end
+    state, since each scratch query deletes its own dirs when done."""
     import glob
-    import json
     import re
     import shutil
 
@@ -94,70 +135,32 @@ def _reap_stale_scratch() -> None:
                 "spark_graft_clean_", "spark_graft_warc_clean_",
                 "spark_graft_pack_", "spark_graft_ivf_",
                 "spark_graft_crawl_", "spark_graft_tapack_")
-    for path in glob.glob("/tmp/spark_graft_*"):
-        name = os.path.basename(path)
-        if name.endswith(".owner") or not any(
-                name.startswith(p) for p in prefixes):
+    paths = [p for p in glob.glob("/tmp/spark_graft_*")
+             if os.path.basename(p).startswith(prefixes)]
+    for path in sorted(paths, key=lambda p: p.endswith(".owner")):
+        if path.endswith(".owner"):
+            base = path[:-len(".owner")]
+            # a member is the base itself or base_<suffix> (_verdict, ...)
+            if (os.path.exists(base) or glob.glob(base + "_*")
+                    or _marker_owner_alive(path)):
+                continue
+            try:
+                os.remove(path)
+            except OSError:
+                pass
             continue
         # suffixed members (_verdict, _corpus, ...) share the base's marker
         m = re.match(r"^(.*_\d+)(?:_[a-z]+)?$", path)
-        base = m.group(1) if m else path
-        marker = base + ".owner"
+        marker = (m.group(1) if m else path) + ".owner"
         if os.path.exists(marker):
-            try:
-                with open(marker) as f:
-                    owner = json.load(f)
-                pid, start = int(owner["pid"]), owner["start"]
-            except (OSError, ValueError, KeyError, TypeError):
-                pid, start = -1, None  # unreadable marker: treat as dead
-            if pid == os.getpid():
-                continue
-            alive = False
-            if pid > 0:
-                # pid <= 0 means the marker itself was unreadable — no
-                # identity to probe (os.kill(-1, 0) would signal-check
-                # EVERY process and never raise ProcessLookupError, so
-                # it must not reach the liveness probe); treat as dead,
-                # the pre-r10 behavior.
-                ticks = (_proc_start_ticks(pid)
-                         if start is not None else None)
-                if start is not None and ticks == start:
-                    alive = True  # exact owner instance still alive
-                elif start is None or ticks is None:
-                    # instance-exact matching impossible (marker written
-                    # — or /proc probed just now — while /proc was
-                    # unreadable): fall back to the kill(0) liveness
-                    # probe instead of treating a LIVE owner as dead and
-                    # clobbering its in-progress scratch (advice r9)
-                    try:
-                        os.kill(pid, 0)
-                        alive = True  # pid alive: never guess ownership
-                    except ProcessLookupError:
-                        alive = False  # definitely dead: collect
-                    except (PermissionError, OSError):
-                        alive = True  # alive under another uid: keep
-                # else: ticks readable and != start — definitively a
-                # different process instance; the owner is dead
-            if alive:
-                continue
-            shutil.rmtree(path, ignore_errors=True)
-            if not glob.glob(base + "*") or glob.glob(base + "*") == [marker]:
-                try:
-                    os.remove(marker)
-                except OSError:
-                    pass
+            if not _marker_owner_alive(marker):
+                shutil.rmtree(path, ignore_errors=True)
             continue
         if not m:
             continue  # no marker, no parseable pid: never guess (advice r8)
         pid = int(m.group(1).rsplit("_", 1)[1])
-        if pid == os.getpid():
-            continue
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
+        if pid != os.getpid() and not _pid_alive(pid):
             shutil.rmtree(path, ignore_errors=True)
-        except (PermissionError, OSError):
-            pass  # pid alive under another uid, or probe failed: keep
 
 
 # (session id, sf_dir, per-table (exists, mtime) signature) -> [(table,
@@ -215,6 +218,10 @@ def _prepare(spark: SparkSession, sf_dir: str) -> None:
     # lever the v1 reader honors); resetting it here bounds the leak to
     # that one invocation instead of every later scan (advice r9)
     spark.conf.unset("spark.sql.parquet.pushdown.inFilterThreshold")
+    # free every block util.materialize persisted in earlier queries: they
+    # keep their lineage, so a DataFrame still held from an earlier query
+    # recomputes instead of pinning its intermediates on the heap
+    spark.catalog.clearCache()
     base = os.path.abspath(sf_dir)
     key = (id(spark), base, _sf_signature(base))
     readers = _READER_CACHE.get(key)
@@ -549,9 +556,9 @@ def _dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.when(F.col("clean_hash").isNull() & (F.col("rn") == 1),
                           1).otherwise(0).cast("int").alias("kept")))
     # materialize the verdict DURABLY before dropping the scratch corpus
-    # it was derived from: localCheckpoint blocks are not fault-tolerant,
-    # so on a real cluster an executor loss after the delete would make a
-    # checkpointed verdict unrecomputable (and the verdict is O(batch)
+    # it was derived from: on a real cluster an executor loss after the
+    # delete would make a cached or checkpointed verdict unrecomputable
+    # (and the verdict is O(batch)
     # rows — never round-trip it through the driver). A parquet write +
     # read-back is the fault-tolerant equivalent; the tiny verdict dir is
     # reclaimed at the start of the next run.
@@ -597,6 +604,7 @@ def _dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         probe_band_table,
         write_docs_bucketed,
     )
+    from fast_pdf_parser_spark.util import materialize
 
     _prepare(spark, sf_dir)
     h = _HASH60_SPARK.format(x="text")
@@ -615,13 +623,13 @@ def _dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = write_docs_bucketed(spark, prev, out, run_id="prev",
                                  num_buckets=2, write_bands=True)
     corpus.createOrReplaceTempView("incr_near_corpus")
-    # batch bands derived ONCE (localCheckpoint: they feed both the
-    # probe's key collection and the candidate join), then the stored
-    # band table is read PRUNED to those keys
+    # batch bands derived ONCE (they feed both the probe's key
+    # collection and the candidate join), then the stored band table is
+    # read PRUNED to those keys
     spark.sql(near_batch_spark_sql()).createOrReplaceTempView(
         "incr_near_batch")
-    bb = spark.sql(band_signatures_spark_sql(
-        "incr_near_batch", text_col="text")).localCheckpoint(eager=True)
+    bb = materialize(spark.sql(band_signatures_spark_sql(
+        "incr_near_batch", text_col="text")))
     bb.createOrReplaceTempView("incr_near_batch_bands")
     probe_band_table(spark, out, bb).createOrReplaceTempView(
         "incr_near_corpus_bands")
@@ -629,8 +637,8 @@ def _dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
         "incr_near_batch", "incr_near_batch_bands",
         "incr_near_corpus", "incr_near_corpus_bands"))
     # durable materialization before the scratch delete (the
-    # dedup_incremental pattern: localCheckpoint would not survive an
-    # executor loss once the corpus files are gone)
+    # dedup_incremental pattern: cached blocks could not be recomputed
+    # once the corpus files are gone)
     vout = out + "_verdict"
     verdict.write.mode("overwrite").parquet(vout)
     _fs_delete(spark, out)
@@ -686,6 +694,7 @@ def _crawl_increment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_docs_bucketed,
     )
     from fast_pdf_parser_spark.sources.warc import read_warc_documents
+    from fast_pdf_parser_spark.util import materialize
 
     _prepare(spark, sf_dir)
     sf_name = os.path.basename(os.path.normpath(sf_dir))
@@ -713,22 +722,21 @@ def _crawl_increment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds ~6 downstream actions (stage counts, joins, the sink write);
     # without materialization each one re-synthesizes and re-parses the
     # WARC files, so the capstone pays the parse several times over
-    # (review r8). localCheckpoint is the right tier here: scratch
-    # lineage-cut for single-pass evaluation — the durable artifacts this
-    # row reports are still READ BACK from the sinks below.
+    # (review r8). The durable artifacts this row reports are still READ
+    # BACK from the sinks below.
     parsed = read_warc_documents(
         _warc_files_df(spark, crawl_batch_spark_sql()))
-    batch_raw = (parsed.filter(F.col("error").isNull())
-                 .select(F.element_at(F.split("url", "/"), -1)
-                         .cast("bigint").alias("doc_id"),
-                         F.col("main_text").alias("text"))
-                 .localCheckpoint())
+    batch_raw = materialize(
+        parsed.filter(F.col("error").isNull())
+        .select(F.element_at(F.split("url", "/"), -1)
+                .cast("bigint").alias("doc_id"),
+                F.col("main_text").alias("text")))
     batch_raw.createOrReplaceTempView("crawl_batch_raw")
     n_batch = batch_raw.count()
 
     # (2) cleaning gates (materialized once: feeds the exact join, the
     # near verdict and the survivor sink)
-    clean = spark.sql(warc_gates_sql("crawl_batch_raw")).localCheckpoint()
+    clean = materialize(spark.sql(warc_gates_sql("crawl_batch_raw")))
     clean.createOrReplaceTempView("crawl_batch_clean")
     n_clean = clean.count()
 
@@ -736,12 +744,11 @@ def _crawl_increment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_hashes = (corpus.select(F.col("clean_hash").alias("ch"))
                      .distinct())
     bc = spark.table("crawl_batch_clean")
-    exact = (bc.join(corpus_hashes, bc["clean_hash"] == F.col("ch"),
-                     "left")
-             .withColumn("in_corpus",
-                         F.when(F.col("ch").isNotNull(), 1).otherwise(0))
-             .drop("ch")
-             .localCheckpoint())  # feeds two counts + near + survivors
+    exact = materialize(  # feeds two counts + near + survivors
+        bc.join(corpus_hashes, bc["clean_hash"] == F.col("ch"), "left")
+        .withColumn("in_corpus",
+                    F.when(F.col("ch").isNotNull(), 1).otherwise(0))
+        .drop("ch"))
     n_exact_dropped = exact.filter("in_corpus = 1").count()
     exact0 = exact.filter("in_corpus = 0")
     (exact0.select("doc_id", F.col("clean_text").alias("text"))
@@ -749,9 +756,8 @@ def _crawl_increment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # (4) incremental near dedup: candidates from the STORED band table,
     # scan PRUNED to the batch's own band keys (probe_band_table)
-    sb = spark.sql(band_signatures_spark_sql(
-        "crawl_exact_survivors", text_col="text")).localCheckpoint(
-        eager=True)
+    sb = materialize(spark.sql(band_signatures_spark_sql(
+        "crawl_exact_survivors", text_col="text")))
     sb.createOrReplaceTempView("crawl_surv_bands")
     probe_band_table(spark, base + "_corpus", sb).createOrReplaceTempView(
         "crawl_corpus_bands_pruned")
@@ -851,16 +857,16 @@ def _train_assembly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark_sql,
     )
     from fast_pdf_parser_spark.plans.checkpoint import _fs_delete
+    from fast_pdf_parser_spark.util import materialize
 
     _prepare(spark, sf_dir)
     sf_name = os.path.basename(os.path.normpath(sf_dir))
 
-    # (1) mixture sample: the kept set (localCheckpoint — feeds shuffle,
+    # (1) mixture sample: the kept set (materialized — feeds shuffle,
     # batching, the data card and the pack)
-    kept = spark.sql(
+    kept = materialize(spark.sql(
         "SELECT m.doc_id, m.source, m.doc_toks AS toks FROM ("
-        + spark_sql("text_mixture_sample") + ") m WHERE m.kept = 1"
-    ).localCheckpoint(eager=True)
+        + spark_sql("text_mixture_sample") + ") m WHERE m.kept = 1"))
     kept.createOrReplaceTempView("ta_kept")
     ka = kept.agg(F.count("*").alias("n"),
                   F.sum("toks").alias("t")).collect()[0]
@@ -882,12 +888,11 @@ def _train_assembly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (2) epoch-0 shuffle into loader shards (the text_shard_shuffle
     # discipline: per-shard rank window, no global sort)
     h = _HASH60_SPARK.format(x="concat(CAST(doc_id AS STRING), ':0')")
-    shuf = spark.sql(f"""
+    shuf = materialize(spark.sql(f"""
         SELECT doc_id, toks, CAST(k % {TRAIN_ASM_SHARDS} AS INT) AS shard,
                row_number() OVER (PARTITION BY k % {TRAIN_ASM_SHARDS}
                                   ORDER BY k, doc_id) AS pos
-        FROM (SELECT doc_id, toks, {h} AS k FROM ta_kept)"""
-    ).localCheckpoint(eager=True)
+        FROM (SELECT doc_id, toks, {h} AS k FROM ta_kept)"""))
     n_shuffled = shuf.count()
     n_shards = shuf.select("shard").distinct().count()
     order_hash = int(shuf.selectExpr(
@@ -1016,21 +1021,21 @@ def _text_encode_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_token_ids,
         pack_token_ids,
     )
+    from fast_pdf_parser_spark.util import materialize
 
     _prepare(spark, sf_dir)
     # the small sf corpus is one parquet split — spread the compute-bound
     # encoder across cores (at 100 TB the scan splits make this a no-op
     # knob; see encode_token_ids docstring).  Encode ONCE and materialize
-    # (localCheckpoint — the _text_encode_pack_geometry idiom; persist()
-    # to MEMORY_AND_DISK at cluster scale): pack_token_ids' default form
+    # (the _text_encode_pack_geometry idiom): pack_token_ids' default form
     # runs a second id-free counting pass over the whole corpus for the
     # shard totals, i.e. ~1.33x the dominant tokenizer compute (guide
     # §1.2: don't compute things twice) — with `encoded` supplied it
     # derives totals from the materialized ids instead.
-    enc = encode_token_ids(
+    enc = materialize(encode_token_ids(
         spark.table("documents"),
         num_partitions=spark.sparkContext.defaultParallelism
-    ).filter(F.col("n_ids") > 0).localCheckpoint(eager=True)
+    ).filter(F.col("n_ids") > 0))
     packed = pack_token_ids(spark.table("documents"), encoded=enc)
     return packed.select(
         "seq_id", "n_docs", "n_tokens",
@@ -1096,14 +1101,15 @@ def _text_encode_pack_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_token_ids,
         pack_token_ids,
     )
+    from fast_pdf_parser_spark.util import materialize
 
     _prepare(spark, sf_dir)
     docs = spark.table("documents")
-    # encode ONCE (localCheckpoint): feeds the pack, the totals and the
-    # ids-sum conservation check
-    enc = encode_token_ids(
+    # encode ONCE: feeds the pack, the totals and the ids-sum
+    # conservation check
+    enc = materialize(encode_token_ids(
         docs, num_partitions=spark.sparkContext.defaultParallelism
-    ).filter(F.col("n_ids") > 0).localCheckpoint(eager=True)
+    ).filter(F.col("n_ids") > 0))
     packed = pack_token_ids(docs, encoded=enc)
 
     e = enc.agg(

@@ -13,10 +13,16 @@ tests/test_bpe_winnow.py):
   vocabulary run.
 - ``train_bpe(spark, docs, steps)`` (this module): the production shape —
   the corpus collapses ONCE to the word-frequency table, the symbol table
-  is localCheckpoint'ed each iteration (vocabulary-sized: ~O(sqrt corpus)
-  rows; the 100 TB corpus is read exactly once), so every step is a
-  linear plan over a few-GB relation, and the only driver transfer is the
-  ONE-ROW argmax per step. steps=50k is the same loop, not a bigger plan.
+  is lineage-cut each iteration with ``util.checkpoint`` (vocabulary-sized:
+  ~O(sqrt corpus) rows; the 100 TB corpus is read exactly once), so every
+  step is a linear plan over a few-GB relation, and the only driver
+  transfer is the ONE-ROW argmax per step. steps=50k is the same loop, not
+  a bigger plan. Of the two materialization tiers in ``util`` this loop
+  needs the cut, not ``materialize`` (persist keeps lineage, so plan depth
+  would still grow with steps). Each step releases the previous snapshot
+  through its RDD handle, and the last one is released before returning:
+  storage is O(1) snapshots at any step count, and none outlives the
+  call.
 """
 
 from __future__ import annotations
@@ -25,26 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _persistent_ids(spark: SparkSession) -> set[int]:
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return set(jmap.keySet().toArray())
-    except AttributeError:  # API moved: degrade, never fail training
-        return set()
-
-
-def _release_rdds(spark: SparkSession, ids: set[int]) -> None:
-    if not ids:
-        return
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for i in ids:
-            rdd = jmap.get(i)
-            if rdd is not None:
-                rdd.unpersist()
-    except AttributeError:
-        pass
+from fast_pdf_parser_spark.util import checkpoint
 
 
 def train_bpe(spark: SparkSession, docs: DataFrame,
@@ -70,85 +57,81 @@ def train_bpe(spark: SparkSession, docs: DataFrame,
 
     w_doc = Window.partitionBy("word").orderBy("i")
     merges: list[tuple[str, int]] = []
-    prev_ids: set[int] = set()
-    for _k in range(steps):
-        _t0 = time.time()
-        # eager, vocab-sized: cuts the per-step lineage so plan depth and
-        # re-computation stay constant across iterations. The PREVIOUS
-        # step's checkpoint blocks are released explicitly — without this
-        # they linger until driver GC + ContextCleaner happen to reclaim
-        # them, so a deep vocabulary run (steps=50k) would grow executor
-        # storage linearly with steps instead of O(1). DataFrame
-        # .unpersist() does NOT release localCheckpoint blocks (it only
-        # talks to the SQL cache manager), so the release goes through
-        # the persistent-RDD map; a guarded reach-in like clusters.py's
-        # pinned _jdf use — if the API moves, we degrade to the old
-        # GC-eventually behavior rather than fail the training run.
-        before = _persistent_ids(spark)
-        syms = syms.localCheckpoint()
-        new_ids = _persistent_ids(spark) - before
-        _release_rdds(spark, prev_ids)
-        prev_ids = new_ids
-        e = syms.withColumn("nxt", F.lead("sym").over(w_doc))
-        top = (e.where("nxt IS NOT NULL")
-               .groupBy("sym", "nxt").agg(F.sum("freq").alias("cnt"))
-               .orderBy(F.desc("cnt"), F.asc("sym"), F.asc("nxt"))
-               .limit(1).collect())          # the one-row argmax
-        if not top:
-            break
-        b1, b2, cnt = top[0]["sym"], top[0]["nxt"], int(top[0]["cnt"])
-        merges.append((b1 + b2, cnt))
+    handle = None  # the live symbol-table snapshot
+    try:
+        for _k in range(steps):
+            _t0 = time.time()
+            # eager, vocab-sized lineage cut; the previous snapshot is
+            # released at once (else storage would grow with steps until
+            # driver GC + ContextCleaner reclaim it)
+            syms, new_handle = checkpoint(syms)
+            if handle is not None:
+                handle.unpersist(False)
+            handle = new_handle
+            e = syms.withColumn("nxt", F.lead("sym").over(w_doc))
+            top = (e.where("nxt IS NOT NULL")
+                   .groupBy("sym", "nxt").agg(F.sum("freq").alias("cnt"))
+                   .orderBy(F.desc("cnt"), F.asc("sym"), F.asc("nxt"))
+                   .limit(1).collect())          # the one-row argmax
+            if not top:
+                break
+            b1, b2, cnt = top[0]["sym"], top[0]["nxt"], int(top[0]["cnt"])
+            merges.append((b1 + b2, cnt))
 
-        # Greedy leftmost-first merge application as PURE WINDOW algebra
-        # over one (word ORDER BY i) pass — deliberately join-free. The
-        # original form applied merges via two (word, i) self-joins;
-        # correct, but Catalyst's size estimator MULTIPLIES join
-        # children's sizeInBytes (BigInt) and localCheckpoint PRESERVES
-        # the origin statistics, so the estimate compounds ~squared per
-        # step and by merge ~15 the driver spends minutes per step
-        # inside BigInteger.multiplyToomCook3 during planning (found by
-        # the depth probe, r9). Window/filter/project nodes only scale
-        # stats by bounded factors, so this form holds O(1) planning at
-        # any merge count — and drops two shuffle joins per step.
-        #
-        # Semantics (pinned vs the imperative greedy reference at depth
-        # 8 and vs the relational twin's oracle at depths 3 and 8):
-        # positions i are consecutive within a word (renumbered every
-        # step), so a run of consecutive merge candidates starts where
-        # flag rises, and within a run the leftmost-first rule keeps
-        # even offsets from the run start ('aaaa' overlap rule); the
-        # follower of every applied merge is consumed (lag).
-        applied = (
-            e.withColumn(
-                "flag",
-                F.coalesce((F.col("sym") == F.lit(b1))
-                           & (F.col("nxt") == F.lit(b2)), F.lit(False)))
-            .withColumn(
-                "run_start",
-                F.col("flag") & ~F.coalesce(F.lag("flag").over(w_doc),
-                                            F.lit(False)))
-            .withColumn(
-                "last_start",
-                F.max(F.when(F.col("run_start"), F.col("i")))
-                .over(w_doc.rowsBetween(Window.unboundedPreceding,
-                                        Window.currentRow)))
-            .withColumn(
-                "is_merge",
-                F.col("flag")
-                & (((F.col("i") - F.col("last_start")) % 2) == 0))
-            .withColumn(
-                "after_merge",
-                F.coalesce(F.lag("is_merge").over(w_doc), F.lit(False)))
-        )
-        syms = (applied
-                .where(~F.col("after_merge"))  # drop consumed followers
-                .select("word", "freq",
-                        F.when(F.col("is_merge"), F.concat("sym", "nxt"))
-                         .otherwise(F.col("sym")).alias("sym"),
-                        F.col("i").alias("old_i"))
-                .withColumn("i", F.row_number().over(
-                    Window.partitionBy("word").orderBy("old_i")))
-                .drop("old_i"))
-        if on_step is not None:
-            on_step(_k, time.time() - _t0)
+            # Greedy leftmost-first merge application as PURE WINDOW algebra
+            # over one (word ORDER BY i) pass — deliberately join-free. The
+            # original form applied merges via two (word, i) self-joins;
+            # correct, but Catalyst's size estimator MULTIPLIES join
+            # children's sizeInBytes (BigInt) and localCheckpoint PRESERVES
+            # the origin statistics, so the estimate compounds ~squared per
+            # step and by merge ~15 the driver spends minutes per step
+            # inside BigInteger.multiplyToomCook3 during planning (found by
+            # the depth probe, r9). Window/filter/project nodes only scale
+            # stats by bounded factors, so this form holds O(1) planning at
+            # any merge count — and drops two shuffle joins per step.
+            #
+            # Semantics (pinned vs the imperative greedy reference at depth
+            # 8 and vs the relational twin's oracle at depths 3 and 8):
+            # positions i are consecutive within a word (renumbered every
+            # step), so a run of consecutive merge candidates starts where
+            # flag rises, and within a run the leftmost-first rule keeps
+            # even offsets from the run start ('aaaa' overlap rule); the
+            # follower of every applied merge is consumed (lag).
+            applied = (
+                e.withColumn(
+                    "flag",
+                    F.coalesce((F.col("sym") == F.lit(b1))
+                               & (F.col("nxt") == F.lit(b2)), F.lit(False)))
+                .withColumn(
+                    "run_start",
+                    F.col("flag") & ~F.coalesce(F.lag("flag").over(w_doc),
+                                                F.lit(False)))
+                .withColumn(
+                    "last_start",
+                    F.max(F.when(F.col("run_start"), F.col("i")))
+                    .over(w_doc.rowsBetween(Window.unboundedPreceding,
+                                            Window.currentRow)))
+                .withColumn(
+                    "is_merge",
+                    F.col("flag")
+                    & (((F.col("i") - F.col("last_start")) % 2) == 0))
+                .withColumn(
+                    "after_merge",
+                    F.coalesce(F.lag("is_merge").over(w_doc), F.lit(False)))
+            )
+            syms = (applied
+                    .where(~F.col("after_merge"))  # drop consumed followers
+                    .select("word", "freq",
+                            F.when(F.col("is_merge"), F.concat("sym", "nxt"))
+                             .otherwise(F.col("sym")).alias("sym"),
+                            F.col("i").alias("old_i"))
+                    .withColumn("i", F.row_number().over(
+                        Window.partitionBy("word").orderBy("old_i")))
+                    .drop("old_i"))
+            if on_step is not None:
+                on_step(_k, time.time() - _t0)
+    finally:
+        # merges is a plain list: nothing reads the last snapshot
+        if handle is not None:
+            handle.unpersist(False)
     return merges

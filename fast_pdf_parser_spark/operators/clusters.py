@@ -28,16 +28,21 @@ Algorithm: iterative min-label propagation with pointer jumping.
 
 Scale notes (100 TB / 10^12 docs):
 
-- Per-round lineage is cut with localCheckpoint (single-JVM test rig); on a
-  real cluster substitute ``df.checkpoint()`` to HDFS/object storage or
-  persist(MEMORY_AND_DISK) — the call site is one line. The previous
-  round's snapshot is freed at the JVM RDD level as soon as the new one
-  is materialized (DataFrame.unpersist is a no-op for localCheckpoint
-  blocks; the persisted RDD handle is read off the checkpointed plan's
-  LogicalRDD, never by diffing the global persistent-RDD map, which races
-  with concurrent jobs). In-loop residency: edges + one label table; on
-  return (or raise) edges are freed too — only the final label snapshot,
-  which the returned DataFrame reads, stays resident.
+- Each round references ``labels`` three times, so without a lineage cut
+  the plan tree grows exponentially with the round count. Rounds are cut
+  with ``util.checkpoint`` (the iterative-loop tier: localCheckpoint plus
+  the persisted RDD's JVM handle, read off the checkpointed plan rather
+  than by diffing the global persistent-RDD map, which races with
+  concurrent jobs). The previous round's snapshot is released through
+  that handle as soon as the new one is materialized. In-loop residency:
+  edges + one label table; on return (or raise) edges are freed too —
+  only the final label snapshot, which the returned DataFrame reads,
+  stays resident. localCheckpoint blocks are not fault-tolerant; a
+  reliable checkpoint directory would be the cluster-scale substitute.
+  Non-iterative intermediates (e.g. the LSH member table behind the
+  candidate pairs) use the other tier, ``util.materialize``: persisted
+  with lineage, so they recompute after a loss, and freed by
+  ``spark.catalog.clearCache()`` at the next query boundary.
 - The label table is 16 bytes/node; the edge table is bounded by the LSH
   band caps upstream (mega-buckets are skipped at candidate generation,
   so no skewed join key survives to this stage). AQE handles residual
@@ -54,70 +59,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fast_pdf_parser_spark.util import checkpoint
+
 
 class ClusterConvergenceError(RuntimeError):
     """max_iters exhausted before the label fixpoint: the clustering is
     incomplete and must not be consumed (it would under-deduplicate)."""
-
-
-class _NoopRddHandle:
-    """Fallback persisted-RDD handle: unpersist is a no-op and the block
-    is left for Spark's ContextCleaner (the pre-r4 residency behavior)."""
-
-    def unpersist(self, blocking=False):  # noqa: ARG002 - handle protocol
-        return None
-
-
-_warned_no_handle = False
-
-
-def _checkpointed(df: DataFrame):
-    """localCheckpoint + a DIRECT handle to the persisted JVM RDD.
-
-    DataFrame.unpersist() is a silent no-op for localCheckpoint blocks
-    (they are RDD-level persisted, not CacheManager plans), and diffing
-    sc.getPersistentRDDs() snapshots is racy under concurrent Spark
-    jobs on the same session (plans/checkpoint.py runs a thread pool) —
-    another thread's persist landing between two snapshots would be
-    misattributed and wrongly freed. The checkpointed Dataset's
-    analyzed plan IS a LogicalRDD wrapping the persisted RDD, so the
-    handle is read straight off it; unpersist calls it directly.
-
-    The read goes through private JVM internals (``_jdf`` + the analyzed
-    plan's ``rdd()``), which a Spark upgrade or Spark Connect can remove
-    — in that case degrade to a no-op handle (blocks wait for the
-    ContextCleaner, the old residency behavior) instead of failing
-    resolve_clusters before any clustering work runs. The handle's
-    liveness is pinned by tests/test_clusters.py so a silent API change
-    shows up as a red test, not a leak discovered in production."""
-    global _warned_no_handle
-    ckpt = df.localCheckpoint(eager=True)
-    try:
-        from py4j.protocol import Py4JError
-
-        expected = (AttributeError, Py4JError)
-    except ImportError:  # Spark Connect ships no py4j at all
-        expected = (AttributeError,)
-    try:
-        jrdd = ckpt._jdf.queryExecution().analyzed().rdd()
-    except expected as exc:
-        # ONLY the API-removal / internals-shape failure modes degrade to
-        # ContextCleaner-based freeing (AttributeError: _jdf or a plan
-        # method gone; Py4JError incl. Py4JJavaError: the JVM call shape
-        # changed). A transient runtime error must surface — the
-        # once-per-process warning would otherwise swallow every
-        # recurrence after the first.
-        if not _warned_no_handle:
-            _warned_no_handle = True
-            import warnings
-
-            warnings.warn(
-                "clusters._checkpointed: cannot read the persisted-RDD "
-                f"handle off the analyzed plan ({exc!r}); localCheckpoint "
-                "blocks will be freed by the ContextCleaner instead of "
-                "eagerly", RuntimeWarning, stacklevel=2)
-        jrdd = _NoopRddHandle()
-    return ckpt, jrdd
 
 
 def _symmetric_edges(pairs: DataFrame) -> DataFrame:
@@ -198,16 +145,16 @@ def resolve_clusters(pairs: DataFrame, docs: DataFrame,
             F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
         ).first()["s"]
 
-    edges, edges_rdd = _checkpointed(_symmetric_edges(pairs))
+    edges, edges_rdd = checkpoint(_symmetric_edges(pairs))
     labels_rdd = None
     try:
-        labels, labels_rdd = _checkpointed(_initial_labels(edges))
+        labels, labels_rdd = checkpoint(_initial_labels(edges))
 
         prev = _label_sum(labels)
         converged = prev is None  # no candidate pairs at all
         changing_rounds = 0
         while not converged:
-            new_labels, new_rdd = _checkpointed(
+            new_labels, new_rdd = checkpoint(
                 _propagation_round(edges, labels)
             )
             try:

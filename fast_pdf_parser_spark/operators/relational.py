@@ -923,13 +923,17 @@ def dedup_lsh_pairs_df(spark):
     member's bands, and both self-join sides get their own scans (AQE's
     per-side broadcast conversion defeats ReusedExchange). The member table
     is tiny (≤4 rows/doc, a few strings) while the chain below it dominates
-    the cost, so materialize member once (localCheckpoint — at cluster
-    scale, a persist() to MEMORY_AND_DISK) and self-join the materialized
+    the cost, so materialize member once and self-join the materialized
     rows. Wall-time ~2× better at sf0.1; output is byte-identical.
+    ``util.materialize`` is the tier: persisted with lineage (a lost block
+    recomputes), freed by ``spark.catalog.clearCache()`` at the next query
+    boundary; no lineage cut is needed for a one-shot relation.
     """
     from pyspark.sql import functions as F
 
-    member = spark.sql(_LSH_MEMBER_SPARK).localCheckpoint(eager=True)
+    from fast_pdf_parser_spark.util import materialize
+
+    member = materialize(spark.sql(_LSH_MEMBER_SPARK))
     a, b = member.alias("a"), member.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))
@@ -3856,16 +3860,19 @@ QUERIES["ann_recall_report"] = _pair(
 
 
 def _emb_lsh_view(spark) -> str:
-    """Materialize the banded-vector table ONCE (localCheckpoint; persist
-    on a real cluster) and register it as a temp view. The tail SQL
+    """Materialize the banded-vector table ONCE (``util.materialize``:
+    persisted with lineage, freed by ``spark.catalog.clearCache()`` at the
+    next query boundary) and register it as a temp view. The tail SQL
     references the vector table ~8 times (6 band branches + 2 cosine
     joins); against the inline CTE each reference re-executes the parquet
-    scan and the 72 hyperplane sums — against the checkpointed view they
+    scan and the 72 hyperplane sums — against the materialized view they
     rescan in-memory rows. Same output, the linear index build runs once.
     """
+    from fast_pdf_parser_spark.util import materialize
+
     name = "emb_lsh_v"
-    v = spark.sql(_emb_v_sql(_EMB_ELEM_SPARK)).localCheckpoint(eager=True)
-    v.createOrReplaceTempView(name)
+    materialize(spark.sql(_emb_v_sql(_EMB_ELEM_SPARK))
+                ).createOrReplaceTempView(name)
     return name
 
 

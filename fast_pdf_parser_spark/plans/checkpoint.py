@@ -627,7 +627,7 @@ def probe_band_table(spark: SparkSession, out_dir: str,
 
     ``batch_bands`` is the batch's (doc_id, band, band_key) signature
     table (relational.band_signatures_spark_sql over the batch — derive
-    it once, localCheckpoint it, pass it here AND to the verdict SQL).
+    it once, ``util.materialize`` it, pass it here AND to the verdict SQL).
     Two serve shapes, both exact:
 
     - batch has <= max_pushdown_keys distinct keys (every daily-increment

@@ -219,22 +219,16 @@ def test_error_path_frees_all_blocks(spark):
 
 
 def test_checkpointed_handle_is_live_jrdd(spark):
-    """Pin the private-JVM-internals read in clusters._checkpointed: the
+    """Pin the private-JVM-internals read in util.checkpoint: the
     returned handle must be a LIVE JRDD whose id appears in the JVM's
     persistent-RDD map and whose unpersist actually drops the block — a
     Spark upgrade that changes the plan shape turns this red instead of
-    silently turning cleanup into a no-op (the fallback path). Asserts on
-    ID SETS, never counts (the async ContextCleaner makes counts flaky)."""
-    from fast_pdf_parser_spark.operators.clusters import (
-        _NoopRddHandle,
-        _checkpointed,
-    )
+    silently turning cleanup into a leak. Asserts on ID SETS, never
+    counts (the async ContextCleaner makes counts flaky)."""
+    from fast_pdf_parser_spark.util import checkpoint
 
     df = spark.range(64).selectExpr("id AS doc_id", "id AS label")
-    ckpt, handle = _checkpointed(df)
-    assert not isinstance(handle, _NoopRddHandle), (
-        "fallback engaged: the analyzed-plan RDD handle read broke on "
-        "this Spark version")
+    ckpt, handle = checkpoint(df)
     rid = int(handle.id())  # a live JRDD has an id
 
     def persistent_ids():
@@ -248,13 +242,11 @@ def test_checkpointed_handle_is_live_jrdd(spark):
 
 
 def test_checkpointed_transient_error_surfaces():
-    """The fallback in clusters._checkpointed is for API-removal shapes
-    (AttributeError / Py4JError) ONLY: a transient runtime failure while
-    reading the handle must propagate — the once-per-process warning
-    would otherwise swallow every recurrence after the first."""
+    """util.checkpoint has no fallback: a failure while reading the
+    handle must propagate, never be swallowed into a silent leak."""
     import pytest
 
-    from fast_pdf_parser_spark.operators.clusters import _checkpointed
+    from fast_pdf_parser_spark.util import checkpoint
 
     class _BoomJdf:
         def queryExecution(self):
@@ -268,4 +260,4 @@ def test_checkpointed_transient_error_surfaces():
             return _FakeCkpt()
 
     with pytest.raises(RuntimeError, match="transient JVM hiccup"):
-        _checkpointed(_FakeDf())
+        checkpoint(_FakeDf())

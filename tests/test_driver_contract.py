@@ -34,6 +34,28 @@ def test_prepare_registers_views_per_session(spark):
         spark.table("documents").count() > 0
 
 
+@pytest.mark.parametrize("name", ["text_encode_pack", "dedup_lsh_pairs"])
+def test_prepare_releases_prior_query_blocks(spark, name):
+    """Blocks a query materialized are freed at the next query boundary
+    even while its returned DataFrame is still held, and that DataFrame
+    recomputes to the same value afterwards (its lineage is kept)."""
+    def ids():
+        return {int(k) for k in
+                spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                .toArray()}
+
+    entrymod._prepare(spark, SF_DIR)
+    before = ids()
+    df = entrymod.queries()[name](spark, SF_DIR)
+    n = df.count()
+    assert n > 0
+    assert ids() - before, "the query materialized nothing"
+    entrymod._prepare(spark, SF_DIR)
+    # set-based: the ContextCleaner may drop older blocks concurrently
+    assert ids() - before == set(), "query blocks survived the boundary"
+    assert df.count() == n
+
+
 def test_queries_and_oracles_consistent():
     q = entrymod.queries()
     o = entrymod.oracle_sql()

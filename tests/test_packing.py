@@ -83,6 +83,27 @@ def test_pack_matches_reference_exactly(docs, seq_len):
         assert got[s]["n_tokens"] == seq_len
 
 
+@pytest.mark.parametrize("kwargs", [{}, {"seq_len": 16, "shard_width": 3}])
+def test_encode_once_pack_equals_two_pass(docs, kwargs):
+    """text_encode_pack's encode-once path: packing a materialized
+    real-tokenizer encoding via ``encoded=`` must give exactly the default
+    form's sequences (which re-runs the tokenizer's counting pass for the
+    shard totals)."""
+    from fast_pdf_parser_spark.util import materialize
+
+    def rows(df):
+        return sorted((r["seq_id"], r["n_docs"], r["n_tokens"], list(r["ids"]))
+                      for r in df.collect())
+
+    enc = materialize(encode_token_ids(docs).filter(F.col("n_ids") > 0))
+    try:
+        got = rows(pack_token_ids(docs, encoded=enc, **kwargs))
+    finally:
+        enc.unpersist()
+    assert got == rows(pack_token_ids(docs, **kwargs))
+    assert got  # the fixture packs real tokens
+
+
 def test_write_packed_sequences_roundtrip(docs, spark, tmp_path):
     """The durable training shards must read back byte-identical to the
     in-memory pack: same sequences, same ids, correct shard assignment,
