@@ -2,7 +2,7 @@
 
 ``entry(spark)`` — flagship extraction pipeline on /root/testdata/sf0.001:
 derives the interleaved text+media span table from documents.parquet (no
-UDF, built-ins only) and runs the zero-shuffle mapInPandas extraction
+UDF, built-ins only) and runs the zero-shuffle mapInArrow extraction
 (operators/pipeline.py) — the Spark re-expression of the reference's
 HierarchicalChunker::chunk_file (src/hierarchical_chunker.cpp:552-634).
 
@@ -11,7 +11,7 @@ SURVEY.md §2 plus the training-data operators (see COVERAGE.md for the
 full census; counts are asserted, not documented, in
 tests/test_driver_contract.py); SQL-expressible ones carry a DuckDB oracle
 (operators/relational.py pairs the dialects; HYBRID_ORACLES pair the real
-mapInPandas stages with pure-SQL re-derivations: pipeline meta counters
+Python stages with pure-SQL re-derivations: pipeline meta counters
 for the text and html axes, sha256-arithmetic twins for the three
 multimodal stages), the stateful 7-pass extraction ops are rows-only
 (their correctness gate is the span-sequence-equality pytest suite
@@ -22,8 +22,13 @@ materialized fast paths with byte-identical output to their SQL forms.
 
 from __future__ import annotations
 
+import atexit
+import fcntl
+import glob
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,131 +41,54 @@ _VIEW_TABLES = ["documents", "embeddings", "events", "region", "nation",
                 "customer", "supplier", "part", "orders", "lineitem"]
 
 
-def _proc_start_ticks(pid: int) -> int | None:
-    """Process start time in clock ticks (/proc/<pid>/stat field 22) —
-    the (pid, start) pair identifies a process instance across pid
-    recycling. None = process gone or /proc unreadable."""
-    try:
-        with open(f"/proc/{pid}/stat", "rb") as f:
-            stat = f.read().decode("ascii", "replace")
-        # comm (field 2) may contain spaces/parens: split after last ')'
-        return int(stat.rsplit(")", 1)[1].split()[19])
-    except (OSError, ValueError, IndexError):
-        return None
+_SCRATCH_PREFIX = "spark_graft_scratch_"
+_scratch_root: tuple[str, int] | None = None  # (root, fd holding its flock)
 
 
 def _scratch(kind: str, sf_name: str) -> str:
-    """PID-suffixed /tmp scratch path + an owner marker sidecar.
+    """``<root>/<kind>_<sf_name>`` under this process's scratch root, so
+    concurrent runs never delete each other's in-progress output.
 
-    The marker (``<path>.owner``, JSON {pid, start}) stamps the creating
-    process INSTANCE: the reaper deletes a scratch family only when the
-    recorded (pid, start-ticks) no longer names a live process — immune
-    both to pid recycling (an unrelated live process with the recycled
-    pid has a different start time, so the dead run's scratch is still
-    collected) and to trailing-digit false positives from older naming
-    schemes (no marker + no parseable pid = left alone; advice r8)."""
-    import json
-
-    path = f"/tmp/spark_graft_{kind}_{sf_name}_{os.getpid()}"
-    try:
-        with open(path + ".owner", "w") as f:
-            json.dump({"pid": os.getpid(),
-                       "start": _proc_start_ticks(os.getpid())}, f)
-    except OSError:
-        pass  # marker is an optimization; the legacy probe still applies
-    return path
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False  # definitely dead: collect
-    except OSError:
-        return True  # alive under another uid, or probe failed: keep
-
-
-def _marker_owner_alive(marker: str) -> bool:
-    """True when the process instance named by a ``.owner`` marker (or
-    this process) may still be using its scratch."""
-    import json
-
-    try:
-        with open(marker) as f:
-            owner = json.load(f)
-        pid, start = int(owner["pid"]), owner["start"]
-    except (OSError, ValueError, KeyError, TypeError):
-        return False  # unreadable marker: treat as dead
-    if pid == os.getpid():
-        return True
-    if pid <= 0:
-        # no identity to probe (os.kill(-1, 0) would signal-check EVERY
-        # process and never raise ProcessLookupError); treat as dead
-        return False
-    ticks = _proc_start_ticks(pid) if start is not None else None
-    if ticks is not None:
-        # exact instance match; a different start time means the pid was
-        # recycled and the owner is dead
-        return ticks == start
-    # instance-exact matching impossible (marker written — or /proc probed
-    # just now — while /proc was unreadable): fall back to the kill(0)
-    # liveness probe instead of treating a LIVE owner as dead and
-    # clobbering its in-progress scratch (advice r9)
-    return _pid_alive(pid)
+    The root is made on first use and held under ``flock`` on its
+    ``lock`` file for the life of the process: the kernel drops the lock
+    on any exit, SIGKILL included, so a root whose lock can be taken
+    belongs to a dead process (``_reap_stale_scratch``). It is locked
+    under a staging name and only then renamed to the reaped prefix, so
+    the reaper never sees an unlocked live root. A normal exit removes
+    it."""
+    global _scratch_root
+    if _scratch_root is None:
+        staging = tempfile.mkdtemp(prefix="spark_graft_staging_")
+        fd = os.open(os.path.join(staging, "lock"), os.O_CREAT | os.O_RDWR)
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        tmp, name = os.path.split(staging)
+        root = os.path.join(tmp, name.replace("staging_", "scratch_", 1))
+        os.rename(staging, root)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _scratch_root = (root, fd)
+    return os.path.join(_scratch_root[0], f"{kind}_{sf_name}")
 
 
 def _reap_stale_scratch() -> None:
-    """Delete /tmp scratch dirs and markers left by DEAD prior invocations.
-
-    Every scratch path here embeds os.getpid() so concurrent runs can't
-    clobber each other — but that means a dir from a finished/crashed
-    process never matches a later run's start-of-run delete, and the
-    small durable `_verdict` parquet dirs accumulate unboundedly across
-    rounds (advice finding, round 7). Ownership is decided by the
-    ``.owner`` marker written by _scratch (pid + process start ticks —
-    exact across pid recycling); dirs without a marker fall back to the
-    pid-parse + kill(0) probe. A live owner's dirs and marker are never
-    touched. Markers are visited after every dir, and a dead owner's
-    marker goes once none of its dirs remain — which is the normal end
-    state, since each scratch query deletes its own dirs when done."""
-    import glob
-    import re
-    import shutil
-
-    # ONLY the pid-suffixed scratch families — never e.g. the cached bench
-    # corpus (spark_graft_bench_corpus_sf0.1_4000 ends in ndocs, not a pid,
-    # and deleting it mid-bench would break the headline phase)
-    prefixes = ("spark_graft_incr_", "spark_graft_incrnear_",
-                "spark_graft_clean_", "spark_graft_warc_clean_",
-                "spark_graft_pack_", "spark_graft_ivf_",
-                "spark_graft_crawl_", "spark_graft_tapack_")
-    paths = [p for p in glob.glob("/tmp/spark_graft_*")
-             if os.path.basename(p).startswith(prefixes)]
-    for path in sorted(paths, key=lambda p: p.endswith(".owner")):
-        if path.endswith(".owner"):
-            base = path[:-len(".owner")]
-            # a member is the base itself or base_<suffix> (_verdict, ...)
-            if (os.path.exists(base) or glob.glob(base + "_*")
-                    or _marker_owner_alive(path)):
-                continue
-            try:
-                os.remove(path)
-            except OSError:
-                pass
+    """Delete every other process's scratch root whose lock can be taken
+    (its owner is dead). Entries without a ``lock`` file are not roots
+    and are left alone."""
+    own = _scratch_root[0] if _scratch_root else None
+    for root in glob.glob(os.path.join(tempfile.gettempdir(),
+                                       _SCRATCH_PREFIX + "*")):
+        if root == own:
             continue
-        # suffixed members (_verdict, _corpus, ...) share the base's marker
-        m = re.match(r"^(.*_\d+)(?:_[a-z]+)?$", path)
-        marker = (m.group(1) if m else path) + ".owner"
-        if os.path.exists(marker):
-            if not _marker_owner_alive(marker):
-                shutil.rmtree(path, ignore_errors=True)
+        try:
+            fd = os.open(os.path.join(root, "lock"), os.O_RDONLY)
+        except OSError:
             continue
-        if not m:
-            continue  # no marker, no parseable pid: never guess (advice r8)
-        pid = int(m.group(1).rsplit("_", 1)[1])
-        if pid != os.getpid() and not _pid_alive(pid):
-            shutil.rmtree(path, ignore_errors=True)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            shutil.rmtree(root, ignore_errors=True)
+        except BlockingIOError:
+            pass  # owner alive
+        finally:
+            os.close(fd)
 
 
 # (session id, sf_dir, per-table (exists, mtime) signature) -> [(table,
@@ -445,9 +373,6 @@ def _warc_clean_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = spark.sql(warc_gates_sql("warc_docs"))
 
     sf_name = os.path.basename(os.path.normpath(sf_dir))
-    # PID-suffixed scratch: concurrent bench/driver invocations must not
-    # delete each other's in-progress sink output (the dir is removed
-    # below once the counts are materialized)
     out = _scratch("warc_clean", sf_name)
     _fs_delete(spark, out)
     clean = write_docs_bucketed(spark, kept, out, run_id="driver",
@@ -477,9 +402,6 @@ def _pipeline_clean_write(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _prepare(spark, sf_dir)
     sf_name = os.path.basename(os.path.normpath(sf_dir))
-    # PID-suffixed scratch: concurrent bench/driver invocations must not
-    # delete each other's in-progress sink output; the dir is removed
-    # below once the counts are materialized
     out = _scratch("clean", sf_name)
     _fs_delete(spark, out)  # fresh, idempotent run per invocation
     clean = write_clean_corpus(spark, out, run_id="driver", num_buckets=4)

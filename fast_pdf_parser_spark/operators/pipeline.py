@@ -536,6 +536,12 @@ def extract_documents(
     512 MB/1 GB docs at 1 g heap). It is routed through the split path
     with ``pre_split=True`` and unioned in, making this the ONE entry
     point over a corpus stored as contiguous-bulk + pre-split-tail.
+
+    Session conf: sets ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    to ``parse_options.arrow_max_records_per_batch`` on the caller's
+    session and leaves it set. The conf is read when the plan executes,
+    so two lazy extracts built with different values both run with the
+    one set last.
     """
     chunk_options.validate()
     spark = df.sparkSession
@@ -654,6 +660,9 @@ def extract_documents_split(
     NOT the default path. At 100 TB, size-bucket the corpus (the A2 token
     estimate is the cheap proxy), store the giant-doc bucket pre-split,
     and route only it here; the bulk keeps the zero-shuffle plan.
+
+    Session conf: sets ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    as :func:`extract_documents` does, and leaves it set.
     """
     chunk_options.validate()
     spark = df.sparkSession

@@ -649,7 +649,12 @@ def probe_band_table(spark: SparkSession, out_dir: str,
     (band, band_key) groups: surviving groups keep their exact bsize for
     the mega-bucket cap and dropped groups could never have joined —
     verdicts are identical to the full-scan form by construction
-    (equality-tested in tests/test_checkpoint.py)."""
+    (equality-tested in tests/test_checkpoint.py).
+
+    Session conf: the pushdown shape sets
+    ``spark.sql.parquet.pushdown.inFilterThreshold`` to
+    ``max(max_pushdown_keys, 10)`` on the caller's session and leaves it
+    set; ``__spark_entry__._prepare`` resets it at each driver query."""
     bands = read_band_table(spark, out_dir)
     keys_df = batch_bands.select("band_key").distinct()
     # bounded collect: we only ever materialize max_pushdown_keys + 1

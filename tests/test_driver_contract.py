@@ -23,6 +23,20 @@ def test_entry_returns_rows(spark):
     assert {"doc_id", "offset", "kind", "text", "media_ref"} <= cols
 
 
+def test_entry_leaves_only_the_batch_size_conf(spark):
+    """Between two query boundaries the flagship query changes no session
+    conf except the Arrow batch size extract_documents sets; any new leak
+    between queries fails here."""
+    entrymod._prepare(spark, SF_DIR)
+    before = dict(spark.conf.getAll)
+    assert entrymod.entry(spark).count() > 0
+    entrymod._prepare(spark, SF_DIR)
+    after = dict(spark.conf.getAll)
+    changed = {k for k in before.keys() | after.keys()
+               if before.get(k) != after.get(k)}
+    assert changed <= {"spark.sql.execution.arrow.maxRecordsPerBatch"}
+
+
 def test_prepare_registers_views_per_session(spark):
     """Temp views are session-scoped: _prepare on a second session that
     shares the SparkContext must register its views in THAT session, not

@@ -1,10 +1,16 @@
 """Skew/partitioning tests: salted repartition balances the skewed corpus."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from fast_pdf_parser_spark.operators.pipeline import repartition_for_skew
-from fast_pdf_parser_spark.sources.synth import SPANS_DDL, iter_docs
+from fast_pdf_parser_spark.sources.synth import (
+    SPANS_DDL,
+    _doc_cost,
+    iter_docs,
+    make_doc,
+)
 
 
 def test_salted_repartition_balances_bytes(spark):
@@ -30,6 +36,21 @@ def test_salted_repartition_balances_bytes(spark):
     assert max(sizes) <= 3 * mean, sizes
     # every partition non-empty
     assert min(r.docs for r in parts) > 0
+
+
+@pytest.mark.parametrize("seed", [1, 42])
+@pytest.mark.parametrize("include_pdf,include_html",
+                         [(False, False), (True, False), (False, True),
+                          (True, True)])
+def test_doc_cost_matches_make_doc(seed, include_pdf, include_html):
+    """_doc_cost replays make_doc's rng draws without building text; a
+    drift in make_doc must show here: 1 + pdf 10 / html 3 / text 1 per
+    non-media span."""
+    weight = {"pdf": 10, "html": 3, "text": 1, "media": 0}
+    for i in range(40):
+        doc = make_doc(i, seed, include_pdf, include_html=include_html)
+        want = 1 + sum(weight[s["kind"]] for s in doc["spans"])
+        assert _doc_cost(i, seed, include_pdf, include_html) == want, i
 
 
 def test_bucket_estimate_uses_fast_token_estimate():
