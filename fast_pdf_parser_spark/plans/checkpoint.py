@@ -1,4 +1,4 @@
-"""Checkpointed, resumable extraction runs with per-partition lineage.
+"""Checkpointed, resumable bucketed sinks with per-partition lineage.
 
 The reference has no checkpoint/resume at all (SURVEY.md §4 "what the
 reference lacks") — at 10^12 documents a restartable run is mandatory. The
@@ -8,37 +8,52 @@ model (FIXTURES.md §4):
   a pure function of the data, independent of cluster size or input
   partitioning, so a resumed run on different hardware sees identical
   buckets;
-- each bucket is processed as one job that appends its output under
-  ``out/spans/bucket=K/`` and then appends ONE lineage row to the
-  checkpoint table: (run_id, partition_id, docs_parsed, bytes_decoded,
-  parse_failures, wall_ms, status='done'). The checkpoint row is written
-  AFTER the bucket's data — a crash between the two re-processes the bucket
-  (idempotent: the bucket dir is overwritten), never skips it;
+- both sinks (``run_with_checkpoint``'s extraction output and
+  ``write_docs_bucketed``'s cleaned corpus) commit through ONE loop,
+  ``_commit_waves``: the input is staged once partitioned by bucket, and
+  the pending buckets are committed in WAVES of ascending bucket ids. A
+  wave is one job that clears the wave's bucket dirs and appends its
+  output ``partitionBy("bucket")`` under the sink root, followed by ONE
+  lineage file holding a row per bucket: (run_id, partition_id,
+  docs_parsed, bytes_decoded, parse_failures, wall_ms, status='done').
+  Lineage is written AFTER the wave's data — a crash between the two
+  re-runs the wave over cleared dirs, never skips or duplicates it;
 - resume = anti-join of the bucket list against the checkpoint table's
   'done' rows for the run_id — the single (broadcast) join in the system
   (SURVEY.md §2 note).
 
+Lineage semantics: a bucket with no documents writes no data directory;
+its ``docs_parsed = 0`` lineage row is what records it as known-empty.
+``wall_ms`` is the wave's wall time split evenly across its buckets, so a
+run's lineage still sums to its committed wall time, but one row's value
+is a wave average, not that bucket's own time.
+
 Bucket granularity, not file granularity, keeps the checkpoint table tiny
 (hundreds of rows for a 100 TB run with a few hundred buckets) while
-bounding re-work after a failure to 1/n of the corpus.
+bounding re-work after a failure to one wave.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 import time
-from concurrent.futures import ThreadPoolExecutor, as_completed
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from fast_pdf_parser_spark.config import ChunkOptions, ParseOptions
-from fast_pdf_parser_spark.operators.pipeline import extract_documents
+from fast_pdf_parser_spark.operators.pipeline import (
+    OUTPUT_DDL,
+    extract_documents,
+)
 
 CHECKPOINT_SCHEMA = (
     "run_id string, partition_id int, docs_parsed long, bytes_decoded long, "
     "parse_failures long, wall_ms long, status string"
 )
+# one bucket dir of the cleaned-corpus sink (the bucket is its partition
+# dir, split its sub-partition)
+CLEAN_DDL = ("doc_id bigint, source string, clean_hash bigint, "
+             "clean_text string, split string")
 
 # Band-table probe layout (r8 verdict #1): the stored band table is laid
 # out for PRUNED point probes — ``bands/bucket=K/bkp=J/`` where
@@ -84,13 +99,18 @@ def _fs_delete(spark: SparkSession, path: str) -> None:
         fs.delete(hpath, True)
 
 
-def _list_staged_buckets(spark: SparkSession, staged: str) -> set[int]:
-    """Bucket ids that actually have a staged partition directory, listed
-    ONCE via the FileSystem API. A bucket absent from this set is
-    *genuinely empty* (partitionBy writes no dir for an empty group) —
-    distinguishable from 'directory not visible to the driver', which with
-    os.path.exists on a remote FS was indistinguishable."""
-    fs, hpath = _hadoop_fs(spark, staged)
+def _drop_dir(spark: SparkSession, path: str) -> None:
+    """Delete *path*, then its parent if that left the parent empty."""
+    _fs_delete(spark, path)
+    fs, hparent = _hadoop_fs(spark, os.path.dirname(path))
+    if fs.exists(hparent) and len(fs.listStatus(hparent)) == 0:
+        fs.delete(hparent, False)
+
+
+def _list_buckets(spark: SparkSession, root: str) -> set[int]:
+    """Bucket ids that have a ``bucket=K`` directory under *root*, listed
+    ONCE via the FileSystem API (scheme-correct on HDFS/S3)."""
+    fs, hpath = _hadoop_fs(spark, root)
     out: set[int] = set()
     for status in fs.listStatus(hpath):
         name = status.getPath().getName()
@@ -137,6 +157,71 @@ def _pending_buckets(spark: SparkSession, checkpoint_path: str,
     ]
 
 
+def _clear_buckets(spark: SparkSession, root: str, buckets: list[int]) -> None:
+    """A wave's clean slate under a sink root: its bucket dirs (a crashed
+    earlier attempt may have left data without lineage) and ``_temporary``
+    (task output an aborted job committed would otherwise be merged into
+    the next append's job commit)."""
+    for name in ["_temporary", *(f"bucket={b}" for b in buckets)]:
+        _fs_delete(spark, os.path.join(root, name))
+
+
+def _append_lineage(spark: SparkSession, out_dir: str, run_id: str,
+                    buckets: list[int], durable: DataFrame, stats: list,
+                    t0: float, status: str = "done") -> None:
+    """The one writer of sink lineage rows: ONE grouped aggregate of
+    ``stats`` (docs, bytes, failures) over the durable copy, filtered to
+    ``buckets``, then ONE lineage file with a row per bucket. Buckets
+    without rows get zeros; the wall time since ``t0`` is split evenly."""
+    got = {r[0]: r[1:] for r in durable.filter(F.col("bucket").isin(buckets))
+           .groupBy("bucket").agg(*stats).collect()}
+    wall, extra = divmod(int((time.time() - t0) * 1000), len(buckets))
+    rows = [(run_id, b, *(int(v or 0) for v in got.get(b, (0, 0, 0))),
+             wall + (i < extra), status) for i, b in enumerate(buckets)]
+    spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA).coalesce(1) \
+        .write.mode("append").parquet(os.path.join(out_dir, "checkpoint"))
+
+
+def _commit_waves(spark: SparkSession, docs: DataFrame, out_dir: str,
+                  stage: str, run_id: str, num_buckets: int, wave: int,
+                  fail_on_bucket: int | None, write_wave) -> None:
+    """The commit loop both bucketed sinks share.
+
+    1. Resume: pending = all buckets minus the run's 'done' rows.
+    2. Stage ``with_bucket(docs)`` ONCE under *stage*, partitioned by
+       bucket: the bucket id is a computed column (pmod(xxhash64)), so a
+       bucket filter cannot push down and every wave would otherwise
+       re-run the whole upstream plan. The stage is keyed by the caller
+       (run_id, num_buckets) and reused on resume once its _SUCCESS
+       marker is durable.
+    3. For each wave of ``wave`` pending buckets (ascending): its input is
+       the staged copy filtered to the wave — partition pruning skips the
+       other buckets, and an empty bucket has no dir and yields no rows.
+       ``write_wave(part, buckets)`` writes the durable output and returns
+       (durable reader with a ``bucket`` column, lineage stats columns);
+       then one lineage file records the wave.
+    4. Drop the stage (and its parent if empty), which would otherwise
+       double input-sized storage per run — also when nothing was
+       pending, since a crash between the last lineage append and this
+       cleanup leaves a resume with pending=[] and an orphaned stage.
+    """
+    pending = _pending_buckets(spark, os.path.join(out_dir, "checkpoint"),
+                               run_id, num_buckets)
+    bucketed = with_bucket(docs, num_buckets)
+    if pending and not _fs_exists(spark, os.path.join(stage, "_SUCCESS")):
+        bucketed.write.mode("overwrite").partitionBy("bucket").parquet(stage)
+    for i in range(0, len(pending), wave):
+        buckets = pending[i:i + wave]
+        if fail_on_bucket in buckets:
+            raise RuntimeError(f"simulated failure at bucket {fail_on_bucket}")
+        t0 = time.time()
+        part = spark.read.schema(bucketed.schema).parquet(stage) \
+            .filter(F.col("bucket").isin(buckets))
+        durable, stats = write_wave(part, buckets)
+        _append_lineage(spark, out_dir, run_id, buckets, durable, stats, t0)
+    _drop_dir(spark, stage)
+
+
 def run_with_checkpoint(
     spark: SparkSession,
     input_df: DataFrame,
@@ -147,116 +232,43 @@ def run_with_checkpoint(
     parse_options: ParseOptions = ParseOptions(),
     fail_on_bucket: int | None = None,  # test hook: simulate a crash
     max_concurrent_buckets: int = 4,
-    stage_input: bool = True,
 ) -> DataFrame:
-    """Process the corpus bucket-by-bucket, appending lineage rows; on
+    """Extract the corpus into ``out/spans/bucket=K/``, committing
+    ``max_concurrent_buckets`` buckets per commit job (``<= 0``: auto,
+    enough to keep every core busy) with one lineage file per job; on
     re-invocation with the same run_id, already-'done' buckets are skipped
-    (resume-from-partition). Returns the complete result DataFrame reader.
-
-    Buckets are independent jobs, so up to ``max_concurrent_buckets`` run
-    concurrently (Spark schedules parallel jobs; each bucket's data lands in
-    its own directory, so writes never collide). Only the tiny lineage
-    append is serialized. A bucket's lineage row is still written strictly
-    AFTER its data is durable, so a crash mid-run re-processes exactly the
-    buckets without a 'done' row — resumability is unchanged, while the
-    per-bucket job overhead no longer serializes the whole run."""
+    (resume-from-partition). A crash commits exactly the waves before it.
+    Returns the complete result DataFrame reader: OUTPUT_DDL plus the
+    ``bucket`` partition column, kept deliberately so downstream reads
+    filtering on it get partition pruning (e.g. re-processing one bucket).
+    """
     spans_dir = os.path.join(out_dir, "spans")
-    checkpoint_path = os.path.join(out_dir, "checkpoint")
     if max_concurrent_buckets <= 0:
-        # auto: overlap enough bucket jobs to keep every core busy — per-
-        # bucket fixed cost (job scheduling, lineage write, read-back) is
-        # what bounds CLI scaling when buckets serialize
+        # auto: a wave wide enough to keep every core busy
         max_concurrent_buckets = max(4, spark.sparkContext.defaultParallelism)
 
-    bucketed = with_bucket(input_df, num_buckets)
-    pending = _pending_buckets(spark, checkpoint_path, run_id, num_buckets)
+    def spans() -> DataFrame:
+        # explicit schema: a zero-document corpus writes no part files
+        return spark.read.schema(OUTPUT_DDL + ", bucket int").parquet(
+            spans_dir)
 
-    # Stage the bucketed input ONCE, partitioned by bucket: the bucket id
-    # is a computed column (pmod(xxhash64)), so per-bucket filters cannot
-    # push down and every bucket job would otherwise re-scan the ENTIRE
-    # input — B full scans. Staged, the total input work is one scan + one
-    # write + one partition-pruned read, at any bucket count. The staged
-    # directory is content-addressed by (run_id, num_buckets) and reused on
-    # resume when its _SUCCESS marker is durable.
-    staged = os.path.join(out_dir, "staged", f"{run_id}_b{num_buckets}")
-    staged_buckets: set[int] = set()
-    if stage_input and pending:
-        if not _fs_exists(spark, os.path.join(staged, "_SUCCESS")):
-            bucketed.write.mode("overwrite").partitionBy("bucket") \
-                .parquet(staged)
-        # list the staged partitions ONCE (FileSystem API — scheme-correct
-        # on HDFS/S3); per-bucket reads consult this set, so a bucket with
-        # no dir is KNOWN empty rather than assumed empty
-        staged_buckets = _list_staged_buckets(spark, staged)
-
-    lineage_lock = threading.Lock()
-
-    def process_bucket(bucket: int) -> None:
-        if fail_on_bucket is not None and bucket == fail_on_bucket:
-            raise RuntimeError(f"simulated failure at bucket {bucket}")
-        t0 = time.time()
-        if stage_input:
-            bdir = os.path.join(staged, f"bucket={bucket}")
-            # a genuinely empty bucket writes no partition directory
-            part = spark.read.parquet(bdir) if bucket in staged_buckets \
-                else bucketed.drop("bucket").limit(0)
-        else:
-            part = bucketed.filter(F.col("bucket") == bucket).drop("bucket")
+    def write_wave(part: DataFrame, buckets: list[int]):
+        _clear_buckets(spark, spans_dir, buckets)
         result = extract_documents(part, chunk_options, parse_options)
-        result.write.mode("overwrite").parquet(
-            os.path.join(spans_dir, f"bucket={bucket}")
-        )
-        # lineage/metrics row — read back what was just written (cheap
-        # column-pruned scan) so the metrics describe durable data
-        written = spark.read.parquet(os.path.join(spans_dir, f"bucket={bucket}"))
-        stats = written.agg(
-            F.countDistinct("doc_id").alias("docs"),
-            F.sum(F.when(F.col("offset") == 0, F.col("doc_bytes_decoded"))
-                  .otherwise(0)).alias("bytes"),
-            F.sum(F.when(F.col("offset") == 0, F.col("doc_parse_failures"))
-                  .otherwise(0)).alias("fails"),
-        ).collect()[0]
-        wall_ms = int((time.time() - t0) * 1000)
-        row = [(run_id, bucket, int(stats["docs"] or 0),
-                int(stats["bytes"] or 0), int(stats["fails"] or 0),
-                wall_ms, "done")]
-        with lineage_lock:  # concurrent appends to one dir can collide
-            spark.createDataFrame(row, schema=CHECKPOINT_SCHEMA).write.mode(
-                "append"
-            ).parquet(checkpoint_path)
+        # the bucket is a pure function of doc_id: recompute, not carry
+        with_bucket(result, num_buckets).write.mode("append") \
+            .partitionBy("bucket").parquet(spans_dir)
+        first = F.col("offset") == 0
+        return spans(), [
+            F.countDistinct("doc_id"),
+            F.sum(F.when(first, F.col("doc_bytes_decoded"))),
+            F.sum(F.when(first, F.col("doc_parse_failures")))]
 
-    workers = max(1, min(max_concurrent_buckets, len(pending) or 1))
-    if workers == 1:
-        for bucket in pending:
-            process_bucket(bucket)
-    else:
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            futures = {pool.submit(process_bucket, b): b for b in pending}
-            errors = []
-            for fut in as_completed(futures):
-                exc = fut.exception()
-                if exc is not None:
-                    errors.append(exc)
-            if errors:
-                raise errors[0]
-
-    # all pending buckets completed (errors raised above): the staged copy
-    # has served its purpose — drop it, or it permanently doubles
-    # input-sized storage under out_dir per run configuration. This runs
-    # even when pending was empty: a crash between the last bucket's
-    # lineage append and this cleanup leaves a resume run that computes
-    # pending=[] — it must still collect the orphaned staged directory.
-    if stage_input and _fs_exists(spark, staged):
-        _fs_delete(spark, staged)
-        parent = os.path.dirname(staged)
-        fs, hparent = _hadoop_fs(spark, parent)
-        if fs.exists(hparent) and len(fs.listStatus(hparent)) == 0:
-            fs.delete(hparent, False)
-
-    # partition discovery exposes the bucket= directory as a `bucket` column
-    # — kept deliberately: downstream reads filtering on it get partition
-    # pruning for free (e.g. re-processing one bucket's output)
-    return spark.read.parquet(spans_dir)
+    _commit_waves(spark, input_df, out_dir,
+                  os.path.join(out_dir, "staged", f"{run_id}_b{num_buckets}"),
+                  run_id, num_buckets, max_concurrent_buckets,
+                  fail_on_bucket, write_wave)
+    return spans()
 
 
 def lineage(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -292,6 +304,29 @@ def write_clean_corpus(
                                fail_on_bucket=fail_on_bucket)
 
 
+def _clean_stats() -> list:
+    return [F.count("*"), F.sum(F.octet_length("clean_text")), F.lit(0)]
+
+
+def _write_bands(bands: DataFrame, path: str, mode: str, *keys: str) -> None:
+    """The probe layout write recipe (see BAND_PROBE_PARTS /
+    probe_band_table): partition dirs by ``keys``, ONE key-sorted file per
+    dir (repartition by the partition values), fine-grained pages (512
+    rows) so the parquet column index can skip pages on pushed point
+    predicates, and a bloom filter on band_key for layouts where sorting
+    degrades (appended increments)."""
+    (bands.repartition(*keys)
+     .sortWithinPartitions(*keys, "band_key")
+     .write.mode(mode)
+     .option("parquet.bloom.filter.enabled#band_key", "true")
+     # pushed key-IN lists multiply bloom false-positive rates (a row
+     # group survives if ANY key false-positives), so the probe table
+     # wants a tighter fpp than the 1% default
+     .option("parquet.bloom.filter.fpp#band_key", "0.001")
+     .option("parquet.page.row.count.limit", "512")
+     .partitionBy(*keys).parquet(path))
+
+
 def write_docs_bucketed(
     spark: SparkSession,
     docs: DataFrame,
@@ -305,35 +340,35 @@ def write_docs_bucketed(
     schema (doc_id BIGINT, source STRING, split STRING, clean_hash BIGINT,
     clean_text STRING) — any cleaning DAG's kept rows (the global
     pipeline_clean_corpus gates, the WARC path's gates, a streaming
-    backfill) land through the same durable machinery. Two phases, each
-    resume-safe:
+    backfill) land through the same durable machinery, ``_commit_waves``:
 
     1. GATES: ``docs`` (which may embody corpus-global windows that cannot
        run per-bucket) is computed ONCE and staged under ``out/gates``
-       partitioned by bucket (content-addressed by run_id; reused on
-       resume when its _SUCCESS marker is durable) — bucket is a computed
-       column (pmod(xxhash64)), so unstaged per-bucket filters would
-       re-run the upstream DAG B times.
-    2. WRITE: each bucket writes ``out/clean/bucket=K/split=S/`` then
-       appends one lineage row. Resume anti-joins the bucket list against
-       'done' rows — identical idempotence story to the extraction
-       checkpoint: a crash between data and lineage re-writes the bucket
-       (overwrite), never skips or duplicates it.
+       partitioned by bucket (keyed by run_id; reused on resume when its
+       _SUCCESS marker is durable).
+    2. WRITE: one bucket per commit job: it clears ``clean/bucket=K`` and
+       ``bands/bucket=K``, appends ``out/clean/bucket=K/split=S/``, then
+       one lineage row. Resume anti-joins the bucket list against 'done'
+       rows — a crash between data and lineage re-writes the bucket over
+       a cleared dir, never skips or duplicates it. An empty bucket
+       writes no dir; its ``docs_parsed = 0`` row records it.
 
     ``write_bands=True`` additionally persists the MinHash band-signature
     table (doc_id, band, band_key — relational.band_signatures_spark_sql,
     the ONE band definition every dedup consumer shares) under
-    ``out/bands/bucket=K/``, derived per bucket from the DURABLE clean
-    copy just written. This is the batch twin of the streaming band claim
+    ``out/bands/bucket=K/bkp=J/``, derived from the DURABLE clean copy
+    just written. This is the batch twin of the streaming band claim
     store (streaming/ingest.py): a daily increment then costs O(batch)
     band compute at write time, and incremental near-dup
     (relational.near_incremental_stored_spark_sql) generates candidates
     by scanning ONLY the stored band columns — never re-minhashing the
     corpus (r7 verdict #1, the one operation that didn't survive 100 TB).
-    Band files ride the same crash story as the data: bands are written
-    after the bucket's clean data and before its lineage row, so any
-    crash in between re-processes the whole bucket (overwrite) — the band
-    table can never durably disagree with the clean table.
+    Bands are written after the bucket's clean data and before its
+    lineage row, so any crash in between re-processes the whole bucket —
+    the band table can never durably disagree with the clean table. A
+    bandless run clears the bucket's old bands too: the invariant is
+    bands-match-clean OR bands-absent, never signatures for documents
+    that no longer exist.
 
     Returns the reader over the written corpus (bucket and split appear
     as partition columns — downstream filters get pruning for free).
@@ -341,108 +376,38 @@ def write_docs_bucketed(
     """
     clean_dir = os.path.join(out_dir, "clean")
     bands_dir = os.path.join(out_dir, "bands")
-    checkpoint_path = os.path.join(out_dir, "checkpoint")
-    gates_dir = os.path.join(out_dir, "gates", f"{run_id}_b{num_buckets}")
 
-    pending = _pending_buckets(spark, checkpoint_path, run_id, num_buckets)
+    def clean() -> DataFrame:
+        # explicit schema: a corpus where NO doc reaches final_keep=1
+        # writes no part files, and schema inference over that raises
+        # after the run already durably succeeded
+        return spark.read.schema(CLEAN_DDL + ", bucket int").parquet(
+            clean_dir)
 
-    staged_buckets: set[int] = set()
-    if pending:
-        if not _fs_exists(spark, os.path.join(gates_dir, "_SUCCESS")):
-            kept = with_bucket(docs, num_buckets)
-            kept.write.mode("overwrite").partitionBy("bucket") \
-                .parquet(gates_dir)
-        staged_buckets = _list_staged_buckets(spark, gates_dir)
-
-    for bucket in pending:
-        if fail_on_bucket is not None and bucket == fail_on_bucket:
-            raise RuntimeError(f"simulated failure at bucket {bucket}")
-        t0 = time.time()
-        bdir = os.path.join(clean_dir, f"bucket={bucket}")
-        if bucket in staged_buckets:
-            part = spark.read.parquet(
-                os.path.join(gates_dir, f"bucket={bucket}"))
-        else:  # genuinely empty bucket: durable empty marker, real schema
-            part = spark.createDataFrame(
-                [], schema=("doc_id bigint, source string, split string, "
-                            "clean_hash bigint, clean_text string"))
-        part.write.mode("overwrite").partitionBy("split").parquet(bdir)
+    def write_wave(part: DataFrame, buckets: list[int]):
+        _clear_buckets(spark, clean_dir, buckets)
+        _clear_buckets(spark, bands_dir, buckets)
+        part.write.mode("append").partitionBy("bucket", "split") \
+            .parquet(clean_dir)
         if write_bands:
-            # band signatures derived from the DURABLE copy just written
-            # (never from the in-memory lineage — what's on disk is what
-            # downstream batches will dedup against), one bucket at a
-            # time: a daily increment's band compute is O(batch)
             from fast_pdf_parser_spark.operators.relational import (
                 band_signatures_spark_sql,
             )
 
-            bands_bdir = os.path.join(bands_dir, f"bucket={bucket}")
-            if bucket in staged_buckets:
-                spark.read.parquet(bdir).createOrReplaceTempView(
-                    "_band_sink_src")
-                bands = spark.sql(
-                    band_signatures_spark_sql("_band_sink_src"))
-            else:
-                bands = spark.createDataFrame(
-                    [], schema="doc_id bigint, band int, band_key bigint")
-            # probe layout: bkp partition dirs, ONE key-sorted file per
-            # dir (repartition by the partition value), fine-grained
-            # pages (512 rows) so the parquet column index can skip
-            # pages on pushed point predicates, and a bloom filter on
-            # band_key for layouts where sorting degrades (appended
-            # increments). See BAND_PROBE_PARTS / probe_band_table.
-            bands = bands.withColumn(
-                "bkp", F.pmod(F.col("band_key"),
-                              F.lit(BAND_PROBE_PARTS)).cast("int"))
-            (bands.repartition("bkp")
-             .sortWithinPartitions("bkp", "band_key")
-             .write.mode("overwrite")
-             .option("parquet.bloom.filter.enabled#band_key", "true")
-             # pushed key-IN lists multiply bloom false-positive rates
-             # (a row group survives if ANY key false-positives), so the
-             # probe table wants a tighter fpp than the 1% default
-             .option("parquet.bloom.filter.fpp#band_key", "0.001")
-             .option("parquet.page.row.count.limit", "512")
-             .partitionBy("bkp").parquet(bands_bdir))
-        else:
-            # a LATER run without bands over a sink that previously wrote
-            # them would otherwise rewrite clean/bucket=K while leaving
-            # the old bands/bucket=K — read_band_table would then serve
-            # signatures for documents that no longer exist (review r8).
-            # The invariant is bands-match-clean OR bands-absent: drop
-            # the stale bucket band dir alongside the data rewrite.
-            stale = os.path.join(bands_dir, f"bucket={bucket}")
-            if _fs_exists(spark, stale):
-                _fs_delete(spark, stale)
-        if bucket in staged_buckets:
-            # lineage metrics read back from the DURABLE copy
-            written = spark.read.parquet(bdir)
-            stats = written.agg(
-                F.count("*").alias("docs"),
-                F.sum(F.octet_length("clean_text")).alias("bytes"),
-            ).collect()[0]
-            docs_n, bytes_n = int(stats["docs"] or 0), int(stats["bytes"] or 0)
-        else:
-            docs_n = bytes_n = 0
-        row = [(run_id, bucket, docs_n, bytes_n, 0,
-                int((time.time() - t0) * 1000), "done")]
-        spark.createDataFrame(row, schema=CHECKPOINT_SCHEMA).write.mode(
-            "append"
-        ).parquet(checkpoint_path)
+            clean().filter(F.col("bucket").isin(buckets)) \
+                .createOrReplaceTempView("_band_sink_src")
+            bands = with_bucket(
+                spark.sql(band_signatures_spark_sql("_band_sink_src")),
+                num_buckets)
+            _write_bands(bands.withColumn("bkp", F.pmod(
+                F.col("band_key"), F.lit(BAND_PROBE_PARTS)).cast("int")),
+                bands_dir, "append", "bucket", "bkp")
+        return clean(), _clean_stats()
 
-    # all buckets durable: the gates staging has served its purpose (runs
-    # even when pending=[] — see the staged-dir note in run_with_checkpoint)
-    if _fs_exists(spark, gates_dir):
-        _fs_delete(spark, gates_dir)
-
-    # explicit schema: a corpus where NO doc reaches final_keep=1 writes
-    # only _SUCCESS markers, and schema inference over that raises after
-    # the run already durably succeeded — the empty corpus must read back
-    # as an empty DataFrame with the real shape (partition columns last)
-    return spark.read.schema(
-        "doc_id bigint, source string, clean_hash bigint, "
-        "clean_text string, split string, bucket int"
-    ).parquet(clean_dir)
+    _commit_waves(spark, docs, out_dir,
+                  os.path.join(out_dir, "gates", f"{run_id}_b{num_buckets}"),
+                  run_id, num_buckets, 1, fail_on_bucket, write_wave)
+    return clean()
 
 
 def _fs_rename(spark: SparkSession, src: str, dst: str) -> None:
@@ -522,38 +487,25 @@ def compact_bucket(spark: SparkSession, out_dir: str, bucket: int,
         trash = os.path.join(work, f"{name}_trash")
         # explicit schemas: a genuinely-empty bucket is a marker-only
         # dir (zero part files) and schema inference would raise on it
-        schema = ("doc_id bigint, source string, clean_hash bigint, "
-                  "clean_text string, split string") if name == "clean" \
+        schema = CLEAN_DDL if name == "clean" \
             else "doc_id bigint, band int, band_key bigint, bkp int"
         src = spark.read.schema(schema).parquet(live)
         n_src = src.count()  # one scan: reused by the rewrite check below
         if n_src == 0:
-            # a genuinely-empty bucket is a DESIGNED durable state (the
-            # marker-only dir write_docs_bucketed leaves; pinned by
-            # test_empty_bucket_is_known_empty_not_lost).  There is
-            # nothing to compact, and swapping would both replace the
-            # marker dir with a bare _SUCCESS dir and (formerly) crash:
-            # the rewrite of 0 rows produces a part-less tmp whose
-            # schema-INFERRED verification read raised AnalysisException
-            # before the swap, persistently re-crashing every
-            # compact_sink over a sink containing an empty bucket
-            # (advice r9).
+            # a marker-only bucket dir (the shape sinks before the wave
+            # commit left for an empty bucket) has nothing to compact.
+            # Swapping it used to crash: the rewrite of 0 rows produced a
+            # part-less tmp whose schema-INFERRED verification read raised
+            # AnalysisException before the swap, persistently re-crashing
+            # every compact_sink over such a sink (advice r9).
             continue
         if name == "clean":
             (src.repartition(target_files, "split")
              .sortWithinPartitions("split", "doc_id")
              .write.mode("overwrite").partitionBy("split").parquet(tmp))
         else:
-            # preserve the probe layout contract exactly (bkp dirs,
-            # key-sorted files, bloom + page options — the write recipe
-            # write_docs_bucketed uses)
-            (src.repartition("bkp")
-             .sortWithinPartitions("bkp", "band_key")
-             .write.mode("overwrite")
-             .option("parquet.bloom.filter.enabled#band_key", "true")
-             .option("parquet.bloom.filter.fpp#band_key", "0.001")
-             .option("parquet.page.row.count.limit", "512")
-             .partitionBy("bkp").parquet(tmp))
+            # preserve the probe layout contract exactly
+            _write_bands(src, tmp, "overwrite", "bkp")
         # explicit schema on the verification read too: belt-and-braces
         # against a zero-part tmp (schema inference raises on it)
         if spark.read.schema(schema).parquet(tmp).count() != n_src:
@@ -567,28 +519,15 @@ def compact_bucket(spark: SparkSession, out_dir: str, bucket: int,
         if fail_at == f"{name}_promoted":
             raise RuntimeError(f"simulated crash at {name}_promoted")
         _fs_delete(spark, trash)
-    _fs_delete(spark, work)
-    parent = os.path.dirname(work)
-    fs, hparent = _hadoop_fs(spark, parent)
-    if fs.exists(hparent) and len(fs.listStatus(hparent)) == 0:
-        fs.delete(hparent, False)
+    _drop_dir(spark, work)
 
     if fail_at == "pre_lineage":
         raise RuntimeError("simulated crash at pre_lineage")
-    if _fs_exists(spark, clean_live):
-        written = spark.read.schema(
-            "doc_id bigint, source string, clean_hash bigint, "
-            "clean_text string, split string").parquet(clean_live)
-        stats = written.agg(
-            F.count("*").alias("docs"),
-            F.sum(F.octet_length("clean_text")).alias("bytes")).collect()[0]
-        docs_n, bytes_n = int(stats["docs"] or 0), int(stats["bytes"] or 0)
-    else:
-        docs_n = bytes_n = 0
-    row = [(run_id, bucket, docs_n, bytes_n, 0,
-            int((time.time() - t0) * 1000), "compacted")]
-    spark.createDataFrame(row, schema=CHECKPOINT_SCHEMA).write.mode(
-        "append").parquet(os.path.join(out_dir, "checkpoint"))
+    _append_lineage(
+        spark, out_dir, run_id, [bucket],
+        spark.read.schema(CLEAN_DDL + ", bucket int").parquet(
+            os.path.join(out_dir, "clean")),
+        _clean_stats(), t0, status="compacted")
 
 
 def compact_sink(spark: SparkSession, out_dir: str,
@@ -598,7 +537,7 @@ def compact_sink(spark: SparkSession, out_dir: str,
     buckets uncompacted and the crashed one recoverable — rerun to
     converge."""
     clean_root = os.path.join(out_dir, "clean")
-    for b in sorted(_list_staged_buckets(spark, clean_root)):
+    for b in sorted(_list_buckets(spark, clean_root)):
         compact_bucket(spark, out_dir, b, run_id=run_id,
                        target_files=target_files)
 

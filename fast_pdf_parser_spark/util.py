@@ -96,10 +96,9 @@ def checkpoint(df):
 
     DataFrame.unpersist() is a silent no-op for localCheckpoint blocks
     (they are RDD-level persisted, not cache-manager plans), and diffing
-    persistent-RDD map snapshots is racy under concurrent Spark jobs
-    on the same session (plans/checkpoint.py runs a thread pool): another
-    thread's persist landing between two snapshots would be misattributed
-    and wrongly freed. The checkpointed Dataset's analyzed plan IS a
+    persistent-RDD map snapshots is racy whenever another thread of the
+    session runs Spark jobs: its persist landing between two snapshots
+    would be misattributed and wrongly freed. The checkpointed Dataset's analyzed plan IS a
     LogicalRDD wrapping the persisted RDD, so the handle is read straight
     off it; callers release the blocks with ``handle.unpersist(False)``.
 

@@ -1,6 +1,8 @@
 """Checkpoint/resume tests: per-partition lineage rows, crash simulation,
 resume-from-partition via anti-join, idempotent re-runs."""
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -95,6 +97,97 @@ def test_concurrent_crash_and_resume(spark, corpus, tmp_path):
     # exactly one lineage row per bucket despite concurrency
     lin = lineage(spark, out).filter("run_id = 'cc'")
     assert sorted(r.partition_id for r in lin.collect()) == [0, 1, 2, 3]
+
+
+def test_wave_crash_commits_only_earlier_waves(spark, corpus, tmp_path):
+    """Buckets commit in waves of max_concurrent_buckets: a failure in the
+    second wave leaves exactly the first wave durable (no later bucket
+    slips in), and resume completes the rest with every doc once."""
+    from fast_pdf_parser_spark.operators.pipeline import extract_documents
+
+    out = str(tmp_path / "run_wave")
+    with pytest.raises(RuntimeError, match="simulated failure"):
+        run_with_checkpoint(spark, corpus, out, run_id="rw", num_buckets=4,
+                            fail_on_bucket=2, max_concurrent_buckets=2)
+    assert completed_buckets(spark, out + "/checkpoint", "rw") == {0, 1}
+
+    result = run_with_checkpoint(spark, corpus, out, run_id="rw",
+                                 num_buckets=4, max_concurrent_buckets=2)
+    assert completed_buckets(spark, out + "/checkpoint", "rw") == {0, 1, 2, 3}
+    lin = lineage(spark, out).collect()
+    assert sorted(r.partition_id for r in lin) == [0, 1, 2, 3]
+    key = ["doc_id", "offset", "kind", "text", "media_ref"]
+    got = sorted(tuple(r) for r in result.select(*key).collect())
+    want = sorted(tuple(r) for r in
+                  extract_documents(corpus).select(*key).collect())
+    assert got == want
+
+
+def _crash_before_lineage(out, root, bucket):
+    """The state a crash after a wave's data write and before its lineage
+    append leaves, here on a rerun whose job also died between task commit
+    and job commit: the lineage part file(s) holding *bucket*'s row are
+    gone, and a committed task's copy of the bucket's files waits under
+    ``<root>/_temporary`` for a job commit to merge it."""
+    import glob as globmod
+    import shutil
+
+    dropped = 0
+    for f in globmod.glob(out + "/checkpoint/*.parquet"):
+        if bucket in set(pd.read_parquet(f)["partition_id"]):
+            os.remove(f)
+            dropped += 1
+    assert dropped >= 1
+    base = os.path.join(out, root)
+    task = os.path.join(base, "_temporary", "0",
+                        "task_202601010000_0001_m_000000")
+    files = globmod.glob(f"{base}/bucket={bucket}/**/*.parquet",
+                         recursive=True)
+    assert files
+    for f in files:
+        dst = os.path.join(task, os.path.relpath(f, base))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        shutil.copy(f, dst)
+
+
+@pytest.mark.parametrize("sink", ["extract", "clean"])
+def test_lost_lineage_reruns_wave_without_duplicates(spark, corpus, tmp_path,
+                                                     sink):
+    """Data durable, lineage lost: the rerun of the same run_id recommits
+    the wave over cleared dirs (stale uncommitted job output included) —
+    output equal to the first run (no duplicated rows, bands included) and
+    one 'done' row per bucket."""
+    from fast_pdf_parser_spark.plans.checkpoint import (
+        read_band_table,
+        write_docs_bucketed,
+    )
+
+    out = str(tmp_path / f"lost_{sink}")
+    if sink == "extract":
+        n = 4
+
+        def run():
+            res = run_with_checkpoint(spark, corpus, out, run_id="ll",
+                                      num_buckets=n, max_concurrent_buckets=2)
+            return sorted(tuple(r) for r in res.drop("bucket").collect())
+    else:
+        n = 3
+        docs = _clean_docs(spark)
+
+        def run():
+            res = write_docs_bucketed(spark, docs, out, run_id="ll",
+                                      num_buckets=n, write_bands=True)
+            return (sorted(tuple(r) for r in res.collect()),
+                    sorted(tuple(r) for r in
+                           read_band_table(spark, out).collect()))
+
+    first = run()
+    _crash_before_lineage(out, "spans" if sink == "extract" else "clean",
+                          n - 1)
+    assert completed_buckets(spark, out + "/checkpoint", "ll") != set(range(n))
+    assert run() == first
+    done = lineage(spark, out).filter("status = 'done'").collect()
+    assert sorted(r.partition_id for r in done) == list(range(n))
 
 
 def test_staged_copy_cleaned_up_after_completion(spark, corpus, tmp_path):
@@ -217,7 +310,7 @@ def test_fs_probes_are_scheme_aware(spark, tmp_path):
     from fast_pdf_parser_spark.plans.checkpoint import (
         _fs_delete,
         _fs_exists,
-        _list_staged_buckets,
+        _list_buckets,
     )
 
     d = tmp_path / "probe"
@@ -228,7 +321,7 @@ def test_fs_probes_are_scheme_aware(spark, tmp_path):
     # explicit scheme-qualified path exercises the scheme resolution path
     uri = "file://" + str(d)
     assert _fs_exists(spark, uri)
-    assert _list_staged_buckets(spark, uri) == {0, 3}
+    assert _list_buckets(spark, uri) == {0, 3}
     _fs_delete(spark, uri)
     assert not d.exists()
     assert not _fs_exists(spark, uri)
@@ -253,6 +346,17 @@ def test_empty_bucket_is_known_empty_not_lost(spark, tmp_path):
     assert sum(r.docs_parsed for r in lin) == 3
     assert sum(1 for r in lin if r.docs_parsed == 0) == 13
 
+    # a 0-document corpus: every bucket is known-empty by its lineage row,
+    # and the read-back keeps the full output column set
+    none = spark.createDataFrame([], schema=SPANS_DDL)
+    out0 = str(tmp_path / "run_zero")
+    result0 = run_with_checkpoint(spark, none, out0, run_id="rz",
+                                  num_buckets=16)
+    assert result0.count() == 0
+    assert result0.columns == result.columns
+    lin0 = lineage(spark, out0).collect()
+    assert len(lin0) == 16 and all(r.docs_parsed == 0 for r in lin0)
+
 
 def _mini_documents(spark, n=24):
     """Tiny documents view with enough distinct words for band tests."""
@@ -266,6 +370,18 @@ def _mini_documents(spark, n=24):
     df = spark.createDataFrame(pd.DataFrame(rows))
     df.createOrReplaceTempView("documents")
     return df
+
+
+def _clean_docs(spark, n=24):
+    """write_docs_bucketed input over every ``_mini_documents`` row."""
+    from fast_pdf_parser_spark.operators.relational import _HASH60_SPARK
+
+    _mini_documents(spark, n)
+    h = _HASH60_SPARK.format(x="text")
+    return spark.sql(f"""
+        SELECT doc_id, source, 'train' AS split,
+               {h} AS clean_hash, text AS clean_text
+        FROM documents""")
 
 
 def test_band_sink_stored_equals_derived(spark, tmp_path):
@@ -496,41 +612,51 @@ def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
 
 
 def test_compaction_handles_empty_bucket(spark, tmp_path):
-    """compact_sink over a sink containing genuinely-empty buckets (the
-    designed marker-only durable state write_docs_bucketed leaves,
-    pinned by test_empty_bucket_is_known_empty_not_lost) must COMPLETE:
-    the r9 code rewrote 0 rows into a part-less tmp dir whose
+    """compact_sink over a sink holding a marker-only bucket dir — the
+    shape sinks before the wave commit left on disk for an empty bucket:
+    clean/bucket=K/ and bands/bucket=K/ with nothing but _SUCCESS — must
+    COMPLETE: the r9 code rewrote 0 rows into a part-less tmp dir whose
     schema-inferred verification read raised AnalysisException before
     the swap, and recovery + rerun re-crashed at the same point forever
     (advice r9). Empty buckets are skipped (nothing to compact, marker
-    dir preserved); populated buckets compact normally and all content
-    survives byte-identically."""
-    from fast_pdf_parser_spark.operators.relational import _HASH60_SPARK
+    dir preserved as it is); populated buckets compact normally and all
+    content survives byte-identically."""
     from fast_pdf_parser_spark.plans.checkpoint import (
+        _list_buckets,
         compact_sink,
         lineage,
         write_docs_bucketed,
     )
 
-    _mini_documents(spark, n=3)  # 3 docs over 16 buckets: most empty
-    h = _HASH60_SPARK.format(x="text")
-    docs = spark.sql(f"""
-        SELECT doc_id, source, 'train' AS split,
-               {h} AS clean_hash, text AS clean_text
-        FROM documents""")
+    docs = _clean_docs(spark, n=3)  # 3 docs over 16 buckets: most empty
     out = str(tmp_path / "compact_empty")
     write_docs_bucketed(spark, docs, out, run_id="c0", num_buckets=16,
                         write_bands=True)
+    populated = _list_buckets(spark, out + "/clean")
+    empty = min(set(range(16)) - populated)
+    markers = [os.path.join(out, comp, f"bucket={empty}")
+               for comp in ("clean", "bands")]
+    for d in markers:
+        os.makedirs(d)
+        open(os.path.join(d, "_SUCCESS"), "w").close()
+    inodes = [os.stat(d).st_ino for d in markers]
     before = _sink_state(spark, out)
     assert len(before[0]) == 3
 
     compact_sink(spark, out, run_id="opt_e")  # crashed pre-fix
 
     assert _sink_state(spark, out) == before
-    # every populated bucket gained a 'compacted' lineage row; rerun of
-    # the fleet stays convergent (idempotent over the empty tail)
-    assert lineage(spark, out).filter(
-        "status = 'compacted' AND run_id = 'opt_e'").count() >= 1
+    # the marker dirs were skipped, not swapped for a rewritten copy
+    assert [os.stat(d).st_ino for d in markers] == inodes
+    assert all(os.listdir(d) == ["_SUCCESS"] for d in markers)
+    # every listed bucket gained a 'compacted' lineage row (the marker-only
+    # one with zeros); rerun of the fleet stays convergent
+    compacted = lineage(spark, out).filter(
+        "status = 'compacted' AND run_id = 'opt_e'").collect()
+    assert sorted(r.partition_id for r in compacted) == sorted(
+        populated | {empty})
+    assert [r.docs_parsed for r in compacted if r.partition_id == empty] \
+        == [0]
     compact_sink(spark, out, run_id="opt_e2")
     assert _sink_state(spark, out) == before
 

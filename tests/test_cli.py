@@ -22,7 +22,8 @@ def test_cli_end_to_end(spark, tmp_path):
     res = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "run_pipeline.py"),
          "--input", in_dir, "--output", out_dir,
-         "--num-buckets", "2", "--quiet", "--format", "json"],
+         "--num-buckets", "2", "--run-id", "o'brien-1",
+         "--quiet", "--format", "json"],
         capture_output=True, text=True, timeout=300,
         env=dict(os.environ, PYSPARK_PYTHON=sys.executable),
     )

@@ -9,9 +9,9 @@ re-expressed for a cluster run (S7).
         --max-tokens 512 --min-tokens 150 --overlap-tokens 0 \
         [--page-limit N] [--format parquet|json] [--quiet]
 
-Checkpointed bucket-by-bucket execution with resume (plans/checkpoint.py);
+Checkpointed execution in bucket waves with resume (plans/checkpoint.py);
 re-running the same command after a failure continues from the last durable
-bucket. ``--quiet`` prints the reference's parseable one-liner
+wave. ``--quiet`` prints the reference's parseable one-liner
 (``SUCCESS|<input>|<pages>|<chunks>|<ms>`` — src/chunk_pdf_cli.cpp:342-345).
 """
 
@@ -39,14 +39,14 @@ def parse_args(argv=None):
     p.add_argument("--format", choices=["parquet", "json"], default="parquet")
     p.add_argument("--arrow-batch", type=int, default=64)
     p.add_argument("--concurrent-buckets", type=int, default=0,
-                   help="bucket jobs to overlap; 0 = auto (cluster cores)")
+                   help="buckets per commit job; 0 = auto")
     p.add_argument("--quiet", action="store_true")
     return p.parse_args(argv)
 
 
 def main(argv=None) -> int:
     args = parse_args(argv)
-    from pyspark.sql import SparkSession
+    from pyspark.sql import SparkSession, functions as F
 
     from fast_pdf_parser_spark.config import ChunkOptions, ParseOptions
     from fast_pdf_parser_spark.operators.sinks import write_results
@@ -84,12 +84,11 @@ def main(argv=None) -> int:
         write_results(result, os.path.join(args.output, "docling_json"),
                       fmt="json")
 
-    lin = lineage(spark, args.output).filter(f"run_id = '{args.run_id}'")
-    rows = lin.collect()
+    rows = lineage(spark, args.output).filter(
+        F.col("run_id") == args.run_id).collect()
     docs = sum(r.docs_parsed for r in rows)
     fails = sum(r.parse_failures for r in rows)
     ms = int((time.time() - t0) * 1000)
-    from pyspark.sql import functions as F
     chunks = result.filter(F.col("kind") == "chunk").count()
 
     if args.quiet:
