@@ -721,21 +721,20 @@ def _crawl_increment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # (8) nightly OPTIMIZE: compact the increment sink (r8 verdict #4 —
     # after N daily runs a bucket is N small files), then recount from
-    # FRESH readers over the swapped files: compaction must preserve
-    # every survivor row and every stored band signature exactly (the
-    # DuckDB twin re-derives both counts knowing nothing about the
+    # FRESH readers over the newly committed attempts: compaction must
+    # preserve every survivor row and every stored band signature exactly
+    # (the DuckDB twin re-derives both counts knowing nothing about the
     # rewrite). Runs after every consumer of the pre-compaction readers
-    # has executed — the swap invalidates their cached file listings.
+    # has executed — compaction's GC deletes the superseded attempts
+    # their file listings name.
     from fast_pdf_parser_spark.plans.checkpoint import (
         compact_sink,
         read_band_table,
+        read_clean,
     )
 
     compact_sink(spark, base + "_incr", run_id="opt")
-    n_surv_compact = spark.read.schema(
-        "doc_id bigint, source string, clean_hash bigint, "
-        "clean_text string, split string, bucket int"
-    ).parquet(base + "_incr/clean").count()
+    n_surv_compact = read_clean(spark, base + "_incr").count()
     n_bands_compact = read_band_table(spark, base + "_incr").count()
 
     rows = [("batch_docs", n_batch), ("batch_clean", n_clean),

@@ -8,29 +8,44 @@ model (FIXTURES.md §4):
   a pure function of the data, independent of cluster size or input
   partitioning, so a resumed run on different hardware sees identical
   buckets;
-- both sinks (``run_with_checkpoint``'s extraction output and
-  ``write_docs_bucketed``'s cleaned corpus) commit through ONE loop,
-  ``_commit_waves``: the input is staged once partitioned by bucket, and
-  the pending buckets are committed in WAVES of ascending bucket ids. A
-  wave is one job that clears the wave's bucket dirs and appends its
-  output ``partitionBy("bucket")`` under the sink root, followed by ONE
-  lineage file holding a row per bucket: (run_id, partition_id,
-  docs_parsed, bytes_decoded, parse_failures, wall_ms, status='done').
-  Lineage is written AFTER the wave's data — a crash between the two
-  re-runs the wave over cleared dirs, never skips or duplicates it;
-- resume = anti-join of the bucket list against the checkpoint table's
-  'done' rows for the run_id — the single (broadcast) join in the system
-  (SURVEY.md §2 note).
+- the lineage table (``out/checkpoint``) is the COMMIT LOG, after *Delta
+  Lake* (VLDB 2020): data files are immutable, and a write is visible only
+  once a lineage row names it. Every data write goes to a fresh, private
+  ``<root>/attempt=N/bucket=K/[split=S/|bkp=J/]`` dir (root: spans, clean
+  or bands); ONE lineage file then commits it, a row per bucket:
+  (run_id, partition_id, docs_parsed, bytes_decoded, parse_failures,
+  wall_ms, status, attempt=N). N = 1 + max(attempt) of the log, so a
+  crashed attempt's number (it has no row) is reused and overwritten;
+- bucket K's COMMITTED attempt is the highest ``attempt`` of its
+  'done'/'compacted' rows across run_ids (the latest writer wins), and
+  the readers (``run_with_checkpoint``'s result, ``read_clean``,
+  ``read_band_table``) read only committed (attempt, bucket) dirs. Nothing
+  is deleted or renamed before a commit: a crash anywhere leaves the
+  previous content readable, with no recovery step;
+- GC: after its last lineage file, every committing call deletes each
+  uncommitted ``attempt=N/bucket=K``, then each ``attempt=N`` left without
+  buckets, so after a normal return the raw root holds exactly the
+  committed data;
+- both sinks commit through ONE loop, ``_commit_waves``: the input is
+  staged once by bucket, and pending buckets commit in WAVES of ascending
+  ids, one job and one attempt per wave; compaction writes a new attempt
+  and commits it the same way;
+- resume = anti-join of the bucket list against the log's 'done' rows for
+  the run_id — the single (broadcast) join in the system (SURVEY.md §2
+  note).
 
 Lineage semantics: a bucket with no documents writes no data directory;
-its ``docs_parsed = 0`` lineage row is what records it as known-empty.
-``wall_ms`` is the wave's wall time split evenly across its buckets, so a
-run's lineage still sums to its committed wall time, but one row's value
-is a wave average, not that bucket's own time.
+its ``docs_parsed = 0`` row records it as known-empty. ``wall_ms`` is the
+wave's wall time split evenly across its buckets (a wave average, not that
+bucket's own time). ``attempt`` is null on ``streaming.ingest``'s
+per-epoch rows. The log is per out_dir, so one out_dir holds one sink.
 
-Bucket granularity, not file granularity, keeps the checkpoint table tiny
-(hundreds of rows for a 100 TB run with a few hundred buckets) while
-bounding re-work after a failure to one wave.
+No migration: sinks written as ``<root>/bucket=K/`` by older checkouts are
+not read — every sink here is a per-query scratch or test dir, and a
+migration would be a second code path.
+
+Bucket granularity keeps the checkpoint table tiny (hundreds of rows for a
+100 TB run) while bounding re-work after a failure to one wave.
 """
 
 from __future__ import annotations
@@ -48,15 +63,16 @@ from fast_pdf_parser_spark.operators.pipeline import (
 
 CHECKPOINT_SCHEMA = (
     "run_id string, partition_id int, docs_parsed long, bytes_decoded long, "
-    "parse_failures long, wall_ms long, status string"
+    "parse_failures long, wall_ms long, status string, attempt long"
 )
-# one bucket dir of the cleaned-corpus sink (the bucket is its partition
-# dir, split its sub-partition)
+# the data columns of the cleaned-corpus and band sinks (split and bkp are
+# sub-partitions of a bucket dir)
 CLEAN_DDL = ("doc_id bigint, source string, clean_hash bigint, "
              "clean_text string, split string")
+BAND_DDL = "doc_id bigint, band int, band_key bigint, bkp int"
 
 # Band-table probe layout (r8 verdict #1): the stored band table is laid
-# out for PRUNED point probes — ``bands/bucket=K/bkp=J/`` where
+# out for PRUNED point probes — ``bands/attempt=N/bucket=K/bkp=J/`` where
 # bkp = pmod(band_key, BAND_PROBE_PARTS) — so a daily increment's
 # candidate scan reads only the partitions its own band keys hash into,
 # never the whole corpus-scale table. The modulus is a shared module
@@ -107,16 +123,45 @@ def _drop_dir(spark: SparkSession, path: str) -> None:
         fs.delete(hparent, False)
 
 
-def _list_buckets(spark: SparkSession, root: str) -> set[int]:
-    """Bucket ids that have a ``bucket=K`` directory under *root*, listed
-    ONCE via the FileSystem API (scheme-correct on HDFS/S3)."""
-    fs, hpath = _hadoop_fs(spark, root)
-    out: set[int] = set()
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if name.startswith("bucket="):
-            out.add(int(name.split("=", 1)[1]))
-    return out
+def _list_attempts(spark: SparkSession, root: str) -> dict[int, set[int]]:
+    """{N: {K, ...}} for the ``attempt=N/bucket=K`` dirs under *root*,
+    listed via the FileSystem API (scheme-correct on HDFS/S3); an attempt
+    dir without bucket dirs maps to an empty set."""
+    fs, hroot = _hadoop_fs(spark, root)
+    if not fs.exists(hroot):
+        return {}
+
+    def keyed(path, key: str) -> dict:
+        return {int(name.split("=", 1)[1]): s.getPath()
+                for s in fs.listStatus(path)
+                if (name := s.getPath().getName()).startswith(key + "=")}
+
+    return {n: set(keyed(path, "bucket"))
+            for n, path in keyed(hroot, "attempt").items()}
+
+
+def _fresh_attempt(spark: SparkSession, out_dir: str, roots: tuple[str, ...],
+                   n: int) -> list[str]:
+    """Attempt N's private dir under each sink root, emptied first: a
+    crashed attempt wrote no lineage row, so its number is reused."""
+    dirs = [os.path.join(out_dir, root, f"attempt={n}") for root in roots]
+    for d in dirs:
+        _fs_delete(spark, d)
+    return dirs
+
+
+def _gc(spark: SparkSession, out_dir: str, roots: tuple[str, ...],
+        committed: dict[int, int]) -> None:
+    """Delete every ``attempt=N/bucket=K`` under the sink *roots* that is
+    not committed, then every attempt dir left without buckets."""
+    for root in roots:
+        path = os.path.join(out_dir, root)
+        for n, buckets in _list_attempts(spark, path).items():
+            dead = {b for b in buckets if committed.get(b) != n}
+            at = os.path.join(path, f"attempt={n}")
+            for sub in ([at] if dead == buckets else
+                        [os.path.join(at, f"bucket={b}") for b in dead]):
+                _fs_delete(spark, sub)
 
 
 def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
@@ -126,87 +171,113 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
+def _read_log(spark: SparkSession, checkpoint_path: str) -> DataFrame:
+    """The commit log; empty before the first commit."""
+    if not _fs_exists(spark, checkpoint_path):
+        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_path)
+
+
+def lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    return _read_log(spark, os.path.join(out_dir, "checkpoint"))
+
+
+def _done(log: DataFrame, run_id: str) -> DataFrame:
+    """The run's 'done' buckets, as a ``bucket`` column."""
+    return log.filter((F.col("run_id") == run_id)
+                      & (F.col("status") == "done")) \
+        .select(F.col("partition_id").alias("bucket"))
+
+
 def completed_buckets(spark: SparkSession, checkpoint_path: str,
                       run_id: str) -> set[int]:
-    if not _fs_exists(spark, checkpoint_path):
-        return set()
-    cp = spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_path)
-    rows = (
-        cp.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("partition_id").distinct().collect()
-    )
-    return {r.partition_id for r in rows}
+    return {r.bucket for r in
+            _done(_read_log(spark, checkpoint_path), run_id).collect()}
 
 
-def _pending_buckets(spark: SparkSession, checkpoint_path: str,
-                     run_id: str, num_buckets: int) -> list[int]:
+def _committed(log: DataFrame) -> dict[int, int]:
+    """{bucket: committed attempt}: the highest attempt among the bucket's
+    'done'/'compacted' rows across run_ids — the latest writer wins."""
+    return dict(log.filter(F.col("status").isin("done", "compacted")
+                           & F.col("attempt").isNotNull())
+                .groupBy("partition_id").agg(F.max("attempt")).collect())
+
+
+def _read_committed(spark: SparkSession, out_dir: str, root: str, ddl: str,
+                    committed: dict[int, int]) -> DataFrame:
+    """*ddl* plus ``bucket`` (and the root's sub-partition column) over the
+    committed ``attempt=N/bucket=K`` dirs of sink *root* only: the pair
+    filter is a PartitionFilter, so superseded and uncommitted attempts are
+    never read. Explicit schema: an all-empty sink has no part files to
+    infer one from."""
+    pairs = [f"{n}/{b}" for b, n in committed.items()]
+    return (spark.read.schema(ddl + ", attempt long, bucket int")
+            .parquet(os.path.join(out_dir, root))
+            .filter(F.concat_ws("/", F.col("attempt").cast("string"),
+                                F.col("bucket").cast("string")).isin(pairs))
+            .drop("attempt"))
+
+
+def _pending_buckets(spark: SparkSession, log: DataFrame, run_id: str,
+                     num_buckets: int) -> list[int]:
     """Resume anti-join shared by both sinks: all buckets minus the run's
-    'done' lineage rows. The bucket list is tiny → broadcast; expressed as
-    a DataFrame anti-join to stay a real plan at any bucket count."""
-    done = completed_buckets(spark, checkpoint_path, run_id)
-    all_buckets = spark.range(num_buckets).select(
-        F.col("id").cast("int").alias("bucket")
-    )
-    done_df = spark.createDataFrame(
-        [(int(b),) for b in sorted(done)], schema="bucket int"
-    )
-    return [
-        r.bucket
-        for r in all_buckets.join(F.broadcast(done_df), "bucket", "left_anti")
-        .orderBy("bucket").collect()
-    ]
-
-
-def _clear_buckets(spark: SparkSession, root: str, buckets: list[int]) -> None:
-    """A wave's clean slate under a sink root: its bucket dirs (a crashed
-    earlier attempt may have left data without lineage) and ``_temporary``
-    (task output an aborted job committed would otherwise be merged into
-    the next append's job commit)."""
-    for name in ["_temporary", *(f"bucket={b}" for b in buckets)]:
-        _fs_delete(spark, os.path.join(root, name))
+    'done' rows. The log is tiny → broadcast; expressed as a DataFrame
+    anti-join to stay a real plan at any bucket count."""
+    every = spark.range(num_buckets).select(F.col("id").cast("int")
+                                            .alias("bucket"))
+    return [r.bucket for r in every.join(F.broadcast(_done(log, run_id)),
+                                         "bucket", "left_anti")
+            .orderBy("bucket").collect()]
 
 
 def _append_lineage(spark: SparkSession, out_dir: str, run_id: str,
                     buckets: list[int], durable: DataFrame, stats: list,
-                    t0: float, status: str = "done") -> None:
-    """The one writer of sink lineage rows: ONE grouped aggregate of
-    ``stats`` (docs, bytes, failures) over the durable copy, filtered to
-    ``buckets``, then ONE lineage file with a row per bucket. Buckets
-    without rows get zeros; the wall time since ``t0`` is split evenly."""
-    got = {r[0]: r[1:] for r in durable.filter(F.col("bucket").isin(buckets))
-           .groupBy("bucket").agg(*stats).collect()}
+                    t0: float, attempt: int | None,
+                    status: str = "done") -> None:
+    """The one writer of lineage rows, i.e. the commit: ONE grouped
+    aggregate of ``stats`` (docs, bytes, failures) over ``durable`` (the
+    attempt's own dir, with a ``bucket`` column), then ONE lineage file
+    with a row per bucket naming ``attempt``. Buckets without rows get
+    zeros; the wall time since ``t0`` is split evenly."""
+    got = {r[0]: r[1:] for r in durable.groupBy("bucket").agg(*stats)
+           .collect()}
     wall, extra = divmod(int((time.time() - t0) * 1000), len(buckets))
     rows = [(run_id, b, *(int(v or 0) for v in got.get(b, (0, 0, 0))),
-             wall + (i < extra), status) for i, b in enumerate(buckets)]
+             wall + (i < extra), status, attempt)
+            for i, b in enumerate(buckets)]
     spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA).coalesce(1) \
         .write.mode("append").parquet(os.path.join(out_dir, "checkpoint"))
 
 
 def _commit_waves(spark: SparkSession, docs: DataFrame, out_dir: str,
                   stage: str, run_id: str, num_buckets: int, wave: int,
-                  fail_on_bucket: int | None, write_wave) -> None:
-    """The commit loop both bucketed sinks share.
+                  fail_on_bucket: int | None, roots: tuple[str, ...],
+                  write_wave) -> dict[int, int]:
+    """The commit loop both bucketed sinks share; returns the committed
+    attempts after it.
 
-    1. Resume: pending = all buckets minus the run's 'done' rows.
+    1. Read the log once: the run's pending buckets, the committed
+       attempts and the next attempt number.
     2. Stage ``with_bucket(docs)`` ONCE under *stage*, partitioned by
        bucket: the bucket id is a computed column (pmod(xxhash64)), so a
        bucket filter cannot push down and every wave would otherwise
        re-run the whole upstream plan. The stage is keyed by the caller
-       (run_id, num_buckets) and reused on resume once its _SUCCESS
-       marker is durable.
+       (run_id, num_buckets) and reused once its _SUCCESS is durable.
     3. For each wave of ``wave`` pending buckets (ascending): its input is
-       the staged copy filtered to the wave — partition pruning skips the
-       other buckets, and an empty bucket has no dir and yields no rows.
-       ``write_wave(part, buckets)`` writes the durable output and returns
-       (durable reader with a ``bucket`` column, lineage stats columns);
-       then one lineage file records the wave.
-    4. Drop the stage (and its parent if empty), which would otherwise
-       double input-sized storage per run — also when nothing was
-       pending, since a crash between the last lineage append and this
-       cleanup leaves a resume with pending=[] and an orphaned stage.
+       the staged copy filtered to the wave (partition pruning; an empty
+       bucket has no dir and yields no rows). ``write_wave(part, dirs)``
+       writes it into the fresh ``attempt=N`` dir of each root and
+       returns (reader over the first, with a ``bucket`` column, and the
+       lineage stats columns); then one lineage file commits the wave.
+    4. Drop the stage (and its parent if empty) — also when nothing was
+       pending: a crash between the last lineage append and this cleanup
+       leaves a resume with pending=[] and an orphaned stage. Then GC the
+       sink *roots*.
     """
-    pending = _pending_buckets(spark, os.path.join(out_dir, "checkpoint"),
-                               run_id, num_buckets)
+    log = lineage(spark, out_dir)
+    pending = _pending_buckets(spark, log, run_id, num_buckets)
+    committed = _committed(log)
+    attempt = 1 + max(committed.values(), default=0)
     bucketed = with_bucket(docs, num_buckets)
     if pending and not _fs_exists(spark, os.path.join(stage, "_SUCCESS")):
         bucketed.write.mode("overwrite").partitionBy("bucket").parquet(stage)
@@ -217,9 +288,15 @@ def _commit_waves(spark: SparkSession, docs: DataFrame, out_dir: str,
         t0 = time.time()
         part = spark.read.schema(bucketed.schema).parquet(stage) \
             .filter(F.col("bucket").isin(buckets))
-        durable, stats = write_wave(part, buckets)
-        _append_lineage(spark, out_dir, run_id, buckets, durable, stats, t0)
+        durable, stats = write_wave(
+            part, _fresh_attempt(spark, out_dir, roots, attempt))
+        _append_lineage(spark, out_dir, run_id, buckets, durable, stats, t0,
+                        attempt)
+        committed.update(dict.fromkeys(buckets, attempt))
+        attempt += 1
     _drop_dir(spark, stage)
+    _gc(spark, out_dir, roots, committed)
+    return committed
 
 
 def run_with_checkpoint(
@@ -233,7 +310,7 @@ def run_with_checkpoint(
     fail_on_bucket: int | None = None,  # test hook: simulate a crash
     max_concurrent_buckets: int = 4,
 ) -> DataFrame:
-    """Extract the corpus into ``out/spans/bucket=K/``, committing
+    """Extract the corpus into ``out/spans/attempt=N/bucket=K/``, committing
     ``max_concurrent_buckets`` buckets per commit job (``<= 0``: auto,
     enough to keep every core busy) with one lineage file per job; on
     re-invocation with the same run_id, already-'done' buckets are skipped
@@ -242,39 +319,28 @@ def run_with_checkpoint(
     ``bucket`` partition column, kept deliberately so downstream reads
     filtering on it get partition pruning (e.g. re-processing one bucket).
     """
-    spans_dir = os.path.join(out_dir, "spans")
     if max_concurrent_buckets <= 0:
         # auto: a wave wide enough to keep every core busy
         max_concurrent_buckets = max(4, spark.sparkContext.defaultParallelism)
 
-    def spans() -> DataFrame:
-        # explicit schema: a zero-document corpus writes no part files
-        return spark.read.schema(OUTPUT_DDL + ", bucket int").parquet(
-            spans_dir)
-
-    def write_wave(part: DataFrame, buckets: list[int]):
-        _clear_buckets(spark, spans_dir, buckets)
+    def write_wave(part: DataFrame, dirs: list[str]):
+        (at,) = dirs
         result = extract_documents(part, chunk_options, parse_options)
         # the bucket is a pure function of doc_id: recompute, not carry
-        with_bucket(result, num_buckets).write.mode("append") \
-            .partitionBy("bucket").parquet(spans_dir)
+        with_bucket(result, num_buckets).write.mode("overwrite") \
+            .partitionBy("bucket").parquet(at)
         first = F.col("offset") == 0
-        return spans(), [
+        return spark.read.schema(OUTPUT_DDL + ", bucket int").parquet(at), [
             F.countDistinct("doc_id"),
             F.sum(F.when(first, F.col("doc_bytes_decoded"))),
             F.sum(F.when(first, F.col("doc_parse_failures")))]
 
-    _commit_waves(spark, input_df, out_dir,
-                  os.path.join(out_dir, "staged", f"{run_id}_b{num_buckets}"),
-                  run_id, num_buckets, max_concurrent_buckets,
-                  fail_on_bucket, write_wave)
-    return spans()
-
-
-def lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(
-        os.path.join(out_dir, "checkpoint")
-    )
+    committed = _commit_waves(
+        spark, input_df, out_dir,
+        os.path.join(out_dir, "staged", f"{run_id}_b{num_buckets}"),
+        run_id, num_buckets, max_concurrent_buckets, fail_on_bucket,
+        ("spans",), write_wave)
+    return _read_committed(spark, out_dir, "spans", OUTPUT_DDL, committed)
 
 
 def write_clean_corpus(
@@ -308,7 +374,7 @@ def _clean_stats() -> list:
     return [F.count("*"), F.sum(F.octet_length("clean_text")), F.lit(0)]
 
 
-def _write_bands(bands: DataFrame, path: str, mode: str, *keys: str) -> None:
+def _write_bands(bands: DataFrame, path: str, *keys: str) -> None:
     """The probe layout write recipe (see BAND_PROBE_PARTS /
     probe_band_table): partition dirs by ``keys``, ONE key-sorted file per
     dir (repartition by the partition values), fine-grained pages (512
@@ -317,7 +383,7 @@ def _write_bands(bands: DataFrame, path: str, mode: str, *keys: str) -> None:
     degrades (appended increments)."""
     (bands.repartition(*keys)
      .sortWithinPartitions(*keys, "band_key")
-     .write.mode(mode)
+     .write.mode("overwrite")
      .option("parquet.bloom.filter.enabled#band_key", "true")
      # pushed key-IN lists multiply bloom false-positive rates (a row
      # group survives if ANY key false-positives), so the probe table
@@ -346,107 +412,63 @@ def write_docs_bucketed(
        run per-bucket) is computed ONCE and staged under ``out/gates``
        partitioned by bucket (keyed by run_id; reused on resume when its
        _SUCCESS marker is durable).
-    2. WRITE: one bucket per commit job: it clears ``clean/bucket=K`` and
-       ``bands/bucket=K``, appends ``out/clean/bucket=K/split=S/``, then
-       one lineage row. Resume anti-joins the bucket list against 'done'
-       rows — a crash between data and lineage re-writes the bucket over
-       a cleared dir, never skips or duplicates it. An empty bucket
-       writes no dir; its ``docs_parsed = 0`` row records it.
+    2. WRITE: one bucket per commit job, into its own attempt N
+       (``out/clean/attempt=N/bucket=K/split=S/``), then one lineage row
+       naming N commits it. A crash before the row leaves the previous
+       attempt committed; the rerun writes the bucket again, never
+       skipping or duplicating it. An empty bucket writes no dir; its
+       ``docs_parsed = 0`` row records it.
 
     ``write_bands=True`` additionally persists the MinHash band-signature
     table (doc_id, band, band_key — relational.band_signatures_spark_sql,
     the ONE band definition every dedup consumer shares) under
-    ``out/bands/bucket=K/bkp=J/``, derived from the DURABLE clean copy
-    just written. This is the batch twin of the streaming band claim
-    store (streaming/ingest.py): a daily increment then costs O(batch)
-    band compute at write time, and incremental near-dup
-    (relational.near_incremental_stored_spark_sql) generates candidates
-    by scanning ONLY the stored band columns — never re-minhashing the
-    corpus (r7 verdict #1, the one operation that didn't survive 100 TB).
-    Bands are written after the bucket's clean data and before its
-    lineage row, so any crash in between re-processes the whole bucket —
-    the band table can never durably disagree with the clean table. A
-    bandless run clears the bucket's old bands too: the invariant is
-    bands-match-clean OR bands-absent, never signatures for documents
-    that no longer exist.
+    ``out/bands/attempt=N/bucket=K/bkp=J/``, derived from the DURABLE
+    clean copy of the same attempt N. This is the batch twin of the
+    streaming band claim store (streaming/ingest.py): incremental near-dup
+    (relational.near_incremental_stored_spark_sql) generates candidates by
+    scanning ONLY the stored band columns — never re-minhashing the corpus
+    (r7 verdict #1). Clean and bands commit with the same lineage row, so
+    they can never disagree, not even in a crash window; a bandless run
+    commits no bands: bands-match-clean OR bands-absent.
 
-    Returns the reader over the written corpus (bucket and split appear
-    as partition columns — downstream filters get pruning for free).
+    Returns the committed corpus reader (``read_clean``: bucket and split
+    are partition columns, so downstream filters get pruning for free).
     Read the band table back with ``read_band_table``.
     """
-    clean_dir = os.path.join(out_dir, "clean")
-    bands_dir = os.path.join(out_dir, "bands")
 
-    def clean() -> DataFrame:
-        # explicit schema: a corpus where NO doc reaches final_keep=1
-        # writes no part files, and schema inference over that raises
-        # after the run already durably succeeded
-        return spark.read.schema(CLEAN_DDL + ", bucket int").parquet(
-            clean_dir)
-
-    def write_wave(part: DataFrame, buckets: list[int]):
-        _clear_buckets(spark, clean_dir, buckets)
-        _clear_buckets(spark, bands_dir, buckets)
-        part.write.mode("append").partitionBy("bucket", "split") \
-            .parquet(clean_dir)
+    def write_wave(part: DataFrame, dirs: list[str]):
+        clean_at, bands_at = dirs
+        part.write.mode("overwrite").partitionBy("bucket", "split") \
+            .parquet(clean_at)
+        durable = spark.read.schema(CLEAN_DDL + ", bucket int").parquet(
+            clean_at)
         if write_bands:
             from fast_pdf_parser_spark.operators.relational import (
                 band_signatures_spark_sql,
             )
 
-            clean().filter(F.col("bucket").isin(buckets)) \
-                .createOrReplaceTempView("_band_sink_src")
+            durable.createOrReplaceTempView("_band_sink_src")
             bands = with_bucket(
                 spark.sql(band_signatures_spark_sql("_band_sink_src")),
                 num_buckets)
             _write_bands(bands.withColumn("bkp", F.pmod(
                 F.col("band_key"), F.lit(BAND_PROBE_PARTS)).cast("int")),
-                bands_dir, "append", "bucket", "bkp")
-        return clean(), _clean_stats()
+                bands_at, "bucket", "bkp")
+        return durable, _clean_stats()
 
-    _commit_waves(spark, docs, out_dir,
-                  os.path.join(out_dir, "gates", f"{run_id}_b{num_buckets}"),
-                  run_id, num_buckets, 1, fail_on_bucket, write_wave)
-    return clean()
-
-
-def _fs_rename(spark: SparkSession, src: str, dst: str) -> None:
-    """Atomic-where-the-FS-gives-it directory rename (HDFS dir rename is
-    atomic; local posix rename is; S3A is a copy — the swap protocol
-    below still converges there because every state is recoverable)."""
-    fs, hsrc = _hadoop_fs(spark, src)
-    hdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
-    fs.mkdirs(hdst.getParent())
-    if not fs.rename(hsrc, hdst):
-        raise IOError(f"rename failed: {src} -> {dst}")
+    committed = _commit_waves(
+        spark, docs, out_dir,
+        os.path.join(out_dir, "gates", f"{run_id}_b{num_buckets}"),
+        run_id, num_buckets, 1, fail_on_bucket, ("clean", "bands"),
+        write_wave)
+    return _read_committed(spark, out_dir, "clean", CLEAN_DDL, committed)
 
 
-def _recover_component(spark: SparkSession, live: str, tmp: str,
-                       trash: str) -> None:
-    """Roll an interrupted compaction of ONE component (clean or bands
-    of one bucket) to a consistent state. States the swap protocol can
-    crash in, and their resolutions:
-
-    - tmp without _SUCCESS           → incomplete rewrite: drop tmp.
-    - trash present, live missing    → crashed mid-swap: roll FORWARD
-      (promote tmp) if the rewrite completed, else roll BACK (restore
-      trash) — either way exactly one full copy survives.
-    - trash present, live present    → crashed after promote: the swap
-      finished; trash is the obsolete original — drop it.
-    - tmp complete, live present     → crashed before the swap: drop
-      tmp (recompacting later is idempotent; never promote a tmp whose
-      source may since have been rewritten by a resumed sink run).
-    """
-    tmp_done = _fs_exists(spark, os.path.join(tmp, "_SUCCESS"))
-    if _fs_exists(spark, trash):
-        if not _fs_exists(spark, live):
-            if tmp_done:
-                _fs_rename(spark, tmp, live)      # roll forward
-            else:
-                _fs_rename(spark, trash, live)    # roll back
-        _fs_delete(spark, trash)
-    if _fs_exists(spark, tmp):
-        _fs_delete(spark, tmp)
+def read_clean(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Reader over the committed cleaned corpus of ``write_docs_bucketed``:
+    CLEAN_DDL's columns plus the ``bucket`` partition column."""
+    return _read_committed(spark, out_dir, "clean", CLEAN_DDL,
+                           _committed(lineage(spark, out_dir)))
 
 
 def compact_bucket(spark: SparkSession, out_dir: str, bucket: int,
@@ -458,100 +480,74 @@ def compact_bucket(spark: SparkSession, out_dir: str, bucket: int,
     shuffle-partitions small part files per bucket, and after N runs a
     scan pays N x file-open cost (r8 verdict #4).
 
-    Exactly-once story (pytest crash matrix drives ``fail_at``):
-    rewrite to a tmp dir (verified: row count equal before any
-    destructive step) → move the live dir aside to trash → promote tmp
-    → drop trash → append ONE lineage row (status='compacted', counts
-    read back from the promoted copy). A crash ANYWHERE re-converges
-    via _recover_component on the next call: content is never lost
-    (every state keeps >= one full copy) and never duplicated (resume
-    filters status='done', so 'compacted' rows can't re-admit a
-    bucket). Bands ride the same swap per bucket; a crash between the
-    clean swap and the band swap is benign because compaction preserves
-    ROWS exactly — stored==derived band equality holds across any
-    interleaving (pinned in tests/test_checkpoint.py)."""
-    clean_live = os.path.join(out_dir, "clean", f"bucket={bucket}")
-    bands_live = os.path.join(out_dir, "bands", f"bucket={bucket}")
-    work = os.path.join(out_dir, "compact_work", f"bucket={bucket}")
-    comps = [("clean", clean_live), ("bands", bands_live)]
-
-    for name, live in comps:
-        _recover_component(spark, live, os.path.join(work, f"{name}_tmp"),
-                           os.path.join(work, f"{name}_trash"))
-
+    Compaction writes a new attempt M and commits it: the bucket's
+    committed clean rows go to ``clean/attempt=M/`` and, if its committed
+    attempt has bands, its bands to ``bands/attempt=M/`` (``_write_bands``'
+    probe layout); both row counts are checked against the source, then
+    ONE lineage row (status='compacted', which resume never reads as
+    'done') commits M, and GC drops the superseded attempt. A crash at any
+    step before the row (``fail_at``: clean_staged, bands_staged,
+    pre_lineage) leaves the old attempt committed and readable, with no
+    recovery step; rerunning converges. An empty bucket reads no rows and
+    writes no data dir."""
+    committed = _committed(lineage(spark, out_dir))
+    attempt = 1 + max(committed.values(), default=0)
     t0 = time.time()
-    for name, live in comps:
-        if not _fs_exists(spark, live):
-            continue  # bandless sink or genuinely empty bucket
-        tmp = os.path.join(work, f"{name}_tmp")
-        trash = os.path.join(work, f"{name}_trash")
-        # explicit schemas: a genuinely-empty bucket is a marker-only
-        # dir (zero part files) and schema inference would raise on it
-        schema = CLEAN_DDL if name == "clean" \
-            else "doc_id bigint, band int, band_key bigint, bkp int"
-        src = spark.read.schema(schema).parquet(live)
-        n_src = src.count()  # one scan: reused by the rewrite check below
-        if n_src == 0:
-            # a marker-only bucket dir (the shape sinks before the wave
-            # commit left for an empty bucket) has nothing to compact.
-            # Swapping it used to crash: the rewrite of 0 rows produced a
-            # part-less tmp whose schema-INFERRED verification read raised
-            # AnalysisException before the swap, persistently re-crashing
-            # every compact_sink over such a sink (advice r9).
-            continue
-        if name == "clean":
-            (src.repartition(target_files, "split")
-             .sortWithinPartitions("split", "doc_id")
-             .write.mode("overwrite").partitionBy("split").parquet(tmp))
-        else:
-            # preserve the probe layout contract exactly
-            _write_bands(src, tmp, "overwrite", "bkp")
-        # explicit schema on the verification read too: belt-and-braces
-        # against a zero-part tmp (schema inference raises on it)
-        if spark.read.schema(schema).parquet(tmp).count() != n_src:
-            raise IOError(f"compaction rewrite row mismatch: {live}")
-        if fail_at == f"{name}_staged":
-            raise RuntimeError(f"simulated crash at {name}_staged")
-        _fs_rename(spark, live, trash)
-        if fail_at == f"{name}_aside":
-            raise RuntimeError(f"simulated crash at {name}_aside")
-        _fs_rename(spark, tmp, live)
-        if fail_at == f"{name}_promoted":
-            raise RuntimeError(f"simulated crash at {name}_promoted")
-        _fs_delete(spark, trash)
-    _drop_dir(spark, work)
+    clean_at, bands_at = _fresh_attempt(spark, out_dir, ("clean", "bands"),
+                                        attempt)
 
+    def source(root: str, ddl: str) -> DataFrame:
+        return _read_committed(spark, out_dir, root, ddl, committed) \
+            .filter(F.col("bucket") == bucket)
+
+    src = source("clean", CLEAN_DDL)
+    written = {clean_at: (CLEAN_DDL, src.count())}
+    (src.repartition(target_files, "split")
+     .sortWithinPartitions("split", "doc_id")
+     .write.mode("overwrite").partitionBy("bucket", "split")
+     .parquet(clean_at))
+    if fail_at == "clean_staged":
+        raise RuntimeError("simulated crash at clean_staged")
+    if _fs_exists(spark, f"{out_dir}/bands/attempt={committed.get(bucket)}"
+                         f"/bucket={bucket}"):
+        bands = source("bands", BAND_DDL)
+        written[bands_at] = (BAND_DDL, bands.count())
+        _write_bands(bands, bands_at, "bucket", "bkp")
+    if fail_at == "bands_staged":
+        raise RuntimeError("simulated crash at bands_staged")
+    for path, (ddl, n) in written.items():
+        if spark.read.schema(ddl + ", bucket int").parquet(path).count() != n:
+            raise IOError(f"compaction rewrite row mismatch: {path}")
     if fail_at == "pre_lineage":
         raise RuntimeError("simulated crash at pre_lineage")
     _append_lineage(
         spark, out_dir, run_id, [bucket],
-        spark.read.schema(CLEAN_DDL + ", bucket int").parquet(
-            os.path.join(out_dir, "clean")),
-        _clean_stats(), t0, status="compacted")
+        spark.read.schema(CLEAN_DDL + ", bucket int").parquet(clean_at),
+        _clean_stats(), t0, attempt, status="compacted")
+    committed[bucket] = attempt
+    _gc(spark, out_dir, ("clean", "bands"), committed)
 
 
 def compact_sink(spark: SparkSession, out_dir: str,
                  run_id: str = "compact", target_files: int = 1) -> None:
-    """Compact every bucket present in the sink (the nightly OPTIMIZE).
-    Buckets are independent swaps; a crash mid-fleet leaves later
-    buckets uncompacted and the crashed one recoverable — rerun to
+    """Compact every committed bucket of the sink (the nightly OPTIMIZE),
+    one attempt per bucket. A crash mid-fleet leaves later buckets
+    uncompacted and every bucket's content committed — rerun to
     converge."""
-    clean_root = os.path.join(out_dir, "clean")
-    for b in sorted(_list_buckets(spark, clean_root)):
+    for b in sorted(_committed(lineage(spark, out_dir))):
         compact_bucket(spark, out_dir, b, run_id=run_id,
                        target_files=target_files)
 
 
 def read_band_table(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Reader over the persisted MinHash band table written by
+    """Reader over the committed MinHash band table written by
     ``write_docs_bucketed(write_bands=True)`` — (doc_id, band, band_key)
-    plus the (bkp, bucket) partition columns. Explicit schema for the
-    same reason as the corpus reader: an all-empty corpus must read back
-    as an empty DataFrame with the real shape, not a schema-inference
-    error."""
-    return spark.read.schema(
-        "doc_id bigint, band int, band_key bigint, bkp int, bucket int"
-    ).parquet(os.path.join(out_dir, "bands"))
+    plus the (bucket, bkp) partition columns, read from the committed
+    ``attempt=N/bucket=K`` dirs only (``probe_band_table``'s bkp pruning
+    stacks on that filter). An all-empty corpus reads back as an empty
+    DataFrame with the real shape, not a schema-inference error."""
+    return _read_committed(spark, out_dir, "bands", BAND_DDL,
+                           _committed(lineage(spark, out_dir)))
 
 
 def probe_band_table(spark: SparkSession, out_dir: str,

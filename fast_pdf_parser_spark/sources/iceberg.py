@@ -10,10 +10,12 @@ checkpoint/resume story; otherwise the same API falls back to plain parquet
 directories (identical schema, identical pipeline semantics — the pipeline
 never depends on the table format).
 
-The checkpoint design (plans/checkpoint.py) maps directly: on Iceberg the
-per-bucket result write becomes an append to a bucket-partitioned table and
-the lineage row an append to the checkpoint table, with the same
-write-data-then-commit-lineage ordering.
+The checkpoint design (plans/checkpoint.py) maps directly: it already
+commits the way a table format does — immutable data files in a fresh
+``attempt=N`` dir, made visible by an append to the checkpoint (log)
+table. On Iceberg the wave write is literally an append to a
+bucket-partitioned table, whose snapshot commit plays the lineage row's
+part, with the same write-data-then-commit ordering.
 """
 
 from __future__ import annotations

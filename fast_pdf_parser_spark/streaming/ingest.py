@@ -486,13 +486,13 @@ def stream_clean_write(
       split=S/`` with mode=overwrite into the epoch's own directory —
       idempotent under Spark's replay of a failed epoch (a restarted query
       re-offers the batch with the SAME epoch id);
-    - one lineage row (plans/checkpoint.CHECKPOINT_SCHEMA, partition_id =
-      epoch id, doc/byte totals read back from the DURABLE copy) appends
-      to ``out/checkpoint`` AFTER the data write and only if that epoch
-      has no 'done' row yet — the same data-then-lineage ordering and
-      idempotence story as the batch sink (write_docs_bucketed): a crash
-      between the two replays the epoch over its own partial output,
-      never skips or duplicates it;
+    - one lineage row (plans/checkpoint._append_lineage, partition_id =
+      epoch id, attempt null, doc/byte totals read back from the DURABLE
+      epoch dir) appends to ``out/checkpoint`` AFTER the data write and
+      only if that epoch has no 'done' row yet — the same
+      data-then-lineage ordering and idempotence story as the batch sink
+      (write_docs_bucketed): a crash between the two replays the epoch
+      over its own partial output, never skips or duplicates it;
     - Spark's own ``checkpointLocation`` (``out/_stream_checkpoint``)
       carries source offsets + dedup/cap state across restarts.
 
@@ -503,14 +503,13 @@ def stream_clean_write(
     import time as _time
 
     from fast_pdf_parser_spark.plans.checkpoint import (
-        CHECKPOINT_SCHEMA,
-        _fs_exists,
+        CLEAN_DDL,
+        _append_lineage,
+        _clean_stats,
+        lineage,
     )
 
     clean_dir = os.path.join(out_dir, "clean")
-    checkpoint_dir = os.path.join(out_dir, "checkpoint")
-    read_back_schema = ("doc_id bigint, source string, clean_hash bigint, "
-                       "clean_text string, split string")
     capped = _clean_capped_stream(
         spark, docs_dir, domain_cap, watermark_minutes,
         max_files_per_trigger, schema, carry_text=True)
@@ -523,24 +522,15 @@ def stream_clean_write(
             # crash AFTER the data write but BEFORE the lineage append —
             # the worst-case window the replay must absorb
             raise RuntimeError(f"simulated crash at epoch {epoch_id}")
-        if _fs_exists(spark, checkpoint_dir):
-            done = (spark.read.schema(CHECKPOINT_SCHEMA)
-                    .parquet(checkpoint_dir)
-                    .filter((F.col("partition_id") == int(epoch_id))
-                            & (F.col("status") == "done")).count())
-            if done:  # replay after a crash between lineage and commit
-                return
+        if lineage(spark, out_dir).filter(
+                (F.col("partition_id") == int(epoch_id))
+                & (F.col("status") == "done")).count():
+            return  # replay after a crash between lineage and commit
         # explicit schema: an all-filtered epoch writes no data files
-        written = spark.read.schema(read_back_schema).parquet(edir)
-        stats = written.agg(
-            F.count("*").alias("docs"),
-            F.sum(F.octet_length("clean_text")).alias("bytes"),
-        ).collect()[0]
-        row = [("stream", int(epoch_id), int(stats["docs"] or 0),
-                int(stats["bytes"] or 0), 0,
-                int((_time.time() - t0) * 1000), "done")]
-        spark.createDataFrame(row, schema=CHECKPOINT_SCHEMA) \
-            .write.mode("append").parquet(checkpoint_dir)
+        durable = spark.read.schema(CLEAN_DDL).parquet(edir) \
+            .withColumn("bucket", F.lit(int(epoch_id)))
+        _append_lineage(spark, out_dir, "stream", [int(epoch_id)], durable,
+                        _clean_stats(), t0, None)
 
     return (
         capped.writeStream.foreachBatch(sink)

@@ -123,12 +123,27 @@ def test_wave_crash_commits_only_earlier_waves(spark, corpus, tmp_path):
     assert got == want
 
 
+def _assert_only_committed(spark, out, *roots):
+    """Every ``attempt=N/bucket=K`` dir on disk under *roots* is the
+    committed pair for K: N is the highest attempt K's lineage rows name."""
+    import glob as globmod
+
+    committed = {}
+    for r in lineage(spark, out).filter("attempt IS NOT NULL").collect():
+        committed[r.partition_id] = max(r.attempt,
+                                        committed.get(r.partition_id, 0))
+    for root in roots:
+        for d in globmod.glob(f"{out}/{root}/attempt=*/bucket=*"):
+            n, k = (int(p.split("=")[1]) for p in d.split("/")[-2:])
+            assert committed[k] == n, d
+
+
 def _crash_before_lineage(out, root, bucket):
     """The state a crash after a wave's data write and before its lineage
     append leaves, here on a rerun whose job also died between task commit
     and job commit: the lineage part file(s) holding *bucket*'s row are
     gone, and a committed task's copy of the bucket's files waits under
-    ``<root>/_temporary`` for a job commit to merge it."""
+    ``<root>/_temporary`` — which must never surface."""
     import glob as globmod
     import shutil
 
@@ -141,7 +156,7 @@ def _crash_before_lineage(out, root, bucket):
     base = os.path.join(out, root)
     task = os.path.join(base, "_temporary", "0",
                         "task_202601010000_0001_m_000000")
-    files = globmod.glob(f"{base}/bucket={bucket}/**/*.parquet",
+    files = globmod.glob(f"{base}/attempt=*/bucket={bucket}/**/*.parquet",
                          recursive=True)
     assert files
     for f in files:
@@ -154,9 +169,10 @@ def _crash_before_lineage(out, root, bucket):
 def test_lost_lineage_reruns_wave_without_duplicates(spark, corpus, tmp_path,
                                                      sink):
     """Data durable, lineage lost: the rerun of the same run_id recommits
-    the wave over cleared dirs (stale uncommitted job output included) —
-    output equal to the first run (no duplicated rows, bands included) and
-    one 'done' row per bucket."""
+    the wave in a fresh attempt (stale uncommitted job output never
+    surfaces) — output equal to the first run (no duplicated rows, bands
+    included), one 'done' row per bucket, and only committed attempts left
+    on disk."""
     from fast_pdf_parser_spark.plans.checkpoint import (
         read_band_table,
         write_docs_bucketed,
@@ -188,6 +204,7 @@ def test_lost_lineage_reruns_wave_without_duplicates(spark, corpus, tmp_path,
     assert run() == first
     done = lineage(spark, out).filter("status = 'done'").collect()
     assert sorted(r.partition_id for r in done) == list(range(n))
+    _assert_only_committed(spark, out, "spans", "clean", "bands")
 
 
 def test_staged_copy_cleaned_up_after_completion(spark, corpus, tmp_path):
@@ -310,18 +327,19 @@ def test_fs_probes_are_scheme_aware(spark, tmp_path):
     from fast_pdf_parser_spark.plans.checkpoint import (
         _fs_delete,
         _fs_exists,
-        _list_buckets,
+        _list_attempts,
     )
 
     d = tmp_path / "probe"
-    d.mkdir()
-    (d / "bucket=0").mkdir()
-    (d / "bucket=3").mkdir()
-    (d / "notabucket").mkdir()
+    (d / "attempt=1" / "bucket=0").mkdir(parents=True)
+    (d / "attempt=1" / "bucket=3").mkdir()
+    (d / "attempt=1" / "notabucket").mkdir()
+    (d / "attempt=2").mkdir()
+    (d / "notanattempt").mkdir()
     # explicit scheme-qualified path exercises the scheme resolution path
     uri = "file://" + str(d)
     assert _fs_exists(spark, uri)
-    assert _list_buckets(spark, uri) == {0, 3}
+    assert _list_attempts(spark, uri) == {1: {0, 3}, 2: set()}
     _fs_delete(spark, uri)
     assert not d.exists()
     assert not _fs_exists(spark, uri)
@@ -500,6 +518,8 @@ def test_bandless_rewrite_drops_stale_band_buckets(spark, tmp_path):
     bands must not leave day-old signatures next to the new clean data —
     the invariant is bands-match-clean OR bands-absent, never
     bands-for-documents-that-no-longer-exist."""
+    import glob as globmod
+
     from fast_pdf_parser_spark.operators.relational import _HASH60_SPARK
     from fast_pdf_parser_spark.plans.checkpoint import (
         read_band_table,
@@ -521,6 +541,14 @@ def test_bandless_rewrite_drops_stale_band_buckets(spark, tmp_path):
         SELECT doc_id, source, 'train' AS split,
                {h} AS clean_hash, text AS clean_text
         FROM documents WHERE doc_id % 2 = 1""")
+    # day1 first crashes banded after every wave's data (its lineage files
+    # are lost), then reruns bandless: the rerun reuses those attempt
+    # numbers and must not commit the crashed attempts' bands
+    write_docs_bucketed(spark, day1, out, run_id="day1",
+                        num_buckets=3, write_bands=True)
+    for f in globmod.glob(out + "/checkpoint/*.parquet"):
+        if set(pd.read_parquet(f)["run_id"]) == {"day1"}:
+            os.remove(f)
     corpus = write_docs_bucketed(spark, day1, out, run_id="day1",
                                  num_buckets=3, write_bands=False)
     assert corpus.count() > 0
@@ -555,14 +583,13 @@ def _compact_fixture(spark, tmp_path, name):
 
 def _sink_state(spark, out):
     """(sorted clean rows, sorted band rows) — the content identity."""
-    from fast_pdf_parser_spark.plans.checkpoint import read_band_table
+    from fast_pdf_parser_spark.plans.checkpoint import (
+        read_band_table,
+        read_clean,
+    )
 
-    clean = spark.read.schema(
-        "doc_id bigint, source string, clean_hash bigint, "
-        "clean_text string, split string, bucket int"
-    ).parquet(out + "/clean")
     rows = sorted((r.doc_id, r.split, r.clean_hash, r.clean_text)
-                  for r in clean.collect())
+                  for r in read_clean(spark, out).collect())
     bands = sorted((r.doc_id, r.band, r.band_key)
                    for r in read_band_table(spark, out).collect())
     return rows, bands
@@ -586,16 +613,18 @@ def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
 
     out = _compact_fixture(spark, tmp_path, "compact_ok")
     before_rows, before_bands = _sink_state(spark, out)
-    files_before = len(globmod.glob(out + "/clean/bucket=*/split=*/*.parquet"))
+    files = out + "/clean/attempt=*/bucket=*/split=*/*.parquet"
+    files_before = len(globmod.glob(files))
 
     compact_sink(spark, out, run_id="opt1")
 
     after_rows, after_bands = _sink_state(spark, out)
     assert after_rows == before_rows and len(after_rows) > 0
     assert after_bands == before_bands and len(after_bands) > 0
-    files_after = len(globmod.glob(out + "/clean/bucket=*/split=*/*.parquet"))
+    files_after = len(globmod.glob(files))
     assert files_after < files_before
     assert files_after <= 3  # target_files(1) per (bucket, lone split)
+    _assert_only_committed(spark, out, "clean", "bands")
 
     # stored == derived still holds over the compacted copy
     spark.read.parquet(out + "/clean").createOrReplaceTempView("cmp_corpus")
@@ -612,62 +641,56 @@ def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
 
 
 def test_compaction_handles_empty_bucket(spark, tmp_path):
-    """compact_sink over a sink holding a marker-only bucket dir — the
-    shape sinks before the wave commit left on disk for an empty bucket:
-    clean/bucket=K/ and bands/bucket=K/ with nothing but _SUCCESS — must
-    COMPLETE: the r9 code rewrote 0 rows into a part-less tmp dir whose
-    schema-inferred verification read raised AnalysisException before
-    the swap, and recovery + rerun re-crashed at the same point forever
-    (advice r9). Empty buckets are skipped (nothing to compact, marker
-    dir preserved as it is); populated buckets compact normally and all
-    content survives byte-identically."""
+    """compact_sink over a sink with lineage-known empty buckets (a
+    docs_parsed = 0 row and no data dir) must COMPLETE — the r9 code
+    re-crashed on an empty bucket forever (advice r9) — with content
+    unchanged, no data dir created for an empty bucket, a 'compacted' row
+    (zeros for the empty ones) for every committed bucket, and a
+    convergent rerun."""
+    import glob as globmod
+
     from fast_pdf_parser_spark.plans.checkpoint import (
-        _list_buckets,
         compact_sink,
-        lineage,
         write_docs_bucketed,
     )
 
-    docs = _clean_docs(spark, n=3)  # 3 docs over 16 buckets: most empty
+    docs = _clean_docs(spark, n=3)  # 3 docs over 4 buckets: one+ empty
     out = str(tmp_path / "compact_empty")
-    write_docs_bucketed(spark, docs, out, run_id="c0", num_buckets=16,
+    write_docs_bucketed(spark, docs, out, run_id="c0", num_buckets=4,
                         write_bands=True)
-    populated = _list_buckets(spark, out + "/clean")
-    empty = min(set(range(16)) - populated)
-    markers = [os.path.join(out, comp, f"bucket={empty}")
-               for comp in ("clean", "bands")]
-    for d in markers:
-        os.makedirs(d)
-        open(os.path.join(d, "_SUCCESS"), "w").close()
-    inodes = [os.stat(d).st_ino for d in markers]
+    empty = {r.partition_id for r in lineage(spark, out).collect()
+             if r.docs_parsed == 0}
+    assert empty
     before = _sink_state(spark, out)
     assert len(before[0]) == 3
 
-    compact_sink(spark, out, run_id="opt_e")  # crashed pre-fix
+    def data_dirs():
+        return {int(d.rsplit("=", 1)[1]) for root in ("clean", "bands")
+                for d in globmod.glob(f"{out}/{root}/attempt=*/bucket=*")}
+
+    assert not data_dirs() & empty
+    compact_sink(spark, out, run_id="opt_e")
 
     assert _sink_state(spark, out) == before
-    # the marker dirs were skipped, not swapped for a rewritten copy
-    assert [os.stat(d).st_ino for d in markers] == inodes
-    assert all(os.listdir(d) == ["_SUCCESS"] for d in markers)
-    # every listed bucket gained a 'compacted' lineage row (the marker-only
-    # one with zeros); rerun of the fleet stays convergent
+    assert not data_dirs() & empty
     compacted = lineage(spark, out).filter(
         "status = 'compacted' AND run_id = 'opt_e'").collect()
-    assert sorted(r.partition_id for r in compacted) == sorted(
-        populated | {empty})
-    assert [r.docs_parsed for r in compacted if r.partition_id == empty] \
-        == [0]
+    assert sorted(r.partition_id for r in compacted) == [0, 1, 2, 3]
+    assert all(r.docs_parsed == 0 for r in compacted
+               if r.partition_id in empty)
     compact_sink(spark, out, run_id="opt_e2")
     assert _sink_state(spark, out) == before
+    assert not data_dirs() & empty
+    _assert_only_committed(spark, out, "clean", "bands")
 
 
 @pytest.mark.parametrize("fail_at", [
-    "clean_staged", "clean_aside", "clean_promoted",
-    "bands_staged", "bands_aside", "bands_promoted", "pre_lineage"])
+    "clean_staged", "bands_staged", "pre_lineage"])
 def test_compaction_crash_matrix(spark, tmp_path, fail_at):
-    """A crash at EVERY step of the swap protocol must lose nothing: the
-    recovery prologue converges the bucket, and a rerun completes the
-    compaction with content identical to the pre-crash sink."""
+    """A crash at EVERY step between compaction's data write and its
+    lineage commit leaves the committed content exactly as before, with
+    no recovery call; a rerun commits the compaction with content
+    identical to the pre-crash sink and only committed attempts on disk."""
     from fast_pdf_parser_spark.plans.checkpoint import compact_bucket
 
     out = _compact_fixture(spark, tmp_path, f"compact_{fail_at}")
@@ -675,10 +698,10 @@ def test_compaction_crash_matrix(spark, tmp_path, fail_at):
 
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_bucket(spark, out, 1, run_id="opt", fail_at=fail_at)
-    # whatever state the crash left, the CONTENT must still be readable
-    # after recovery; rerun converges
+    assert _sink_state(spark, out) == before
     compact_bucket(spark, out, 1, run_id="opt")
     assert _sink_state(spark, out) == before
+    _assert_only_committed(spark, out, "clean", "bands")
 
 
 def test_train_bpe_releases_prior_checkpoints(spark):

@@ -424,7 +424,7 @@ def test_stored_band_candidate_scan_reads_bands_not_text(spark, tmp_path):
 
 def test_band_probe_scan_prunes_to_batch_keys(spark, tmp_path):
     """r8 verdict #1's IO gate: the stored band table is laid out
-    bands/bucket=K/bkp=J/ (bkp = band_key % BAND_PROBE_PARTS) and
+    bands/attempt=N/bucket=K/bkp=J/ (bkp = band_key % BAND_PROBE_PARTS) and
     probe_band_table serves an increment by (a) PartitionFilters on bkp
     — directories outside the batch's key partitions are never listed —
     and (b) the literal band_key IN (...) pushed into the parquet reader
