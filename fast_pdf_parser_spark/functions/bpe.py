@@ -35,16 +35,12 @@ from fast_pdf_parser_spark.util import checkpoint
 
 
 def train_bpe(spark: SparkSession, docs: DataFrame,
-              steps: int, on_step=None) -> list[tuple[str, int]]:
+              steps: int) -> list[tuple[str, int]]:
     """Learn ``steps`` BPE merges from ``docs`` (needs a ``text`` column).
 
     Returns [(merged_symbol, pair_count), ...] in merge order. Stops
-    early if no pair remains (fully merged corpus). ``on_step(k,
-    wall_sec)`` — optional instrumentation hook invoked after each
-    completed merge (tools/bpe_depth_probe.py records per-step walls and
-    executor storage with it; None costs nothing).
+    early if no pair remains (fully merged corpus).
     """
-    import time
     wfreq = (docs.select(F.explode(F.split("text", " ")).alias("w"))
              .filter("w <> ''")
              .groupBy("w").agg(F.count("*").alias("freq"))
@@ -59,8 +55,7 @@ def train_bpe(spark: SparkSession, docs: DataFrame,
     merges: list[tuple[str, int]] = []
     handle = None  # the live symbol-table snapshot
     try:
-        for _k in range(steps):
-            _t0 = time.time()
+        for _ in range(steps):
             # eager, vocab-sized lineage cut; the previous snapshot is
             # released at once (else storage would grow with steps until
             # driver GC + ContextCleaner reclaim it)
@@ -86,9 +81,10 @@ def train_bpe(spark: SparkSession, docs: DataFrame,
             # the origin statistics, so the estimate compounds ~squared per
             # step and by merge ~15 the driver spends minutes per step
             # inside BigInteger.multiplyToomCook3 during planning (found by
-            # the depth probe, r9). Window/filter/project nodes only scale
-            # stats by bounded factors, so this form holds O(1) planning at
-            # any merge count — and drops two shuffle joins per step.
+            # the r9 depth probe, BENCH/BPE_DEPTH_r9.json). Window/filter/
+            # project nodes only scale stats by bounded factors, so this
+            # form holds O(1) planning at any merge count — and drops two
+            # shuffle joins per step.
             #
             # Semantics (pinned vs the imperative greedy reference at depth
             # 8 and vs the relational twin's oracle at depths 3 and 8):
@@ -128,8 +124,6 @@ def train_bpe(spark: SparkSession, docs: DataFrame,
                     .withColumn("i", F.row_number().over(
                         Window.partitionBy("word").orderBy("old_i")))
                     .drop("old_i"))
-            if on_step is not None:
-                on_step(_k, time.time() - _t0)
     finally:
         # merges is a plain list: nothing reads the last snapshot
         if handle is not None:

@@ -29,8 +29,9 @@ ALGORITHM (shards, prefix sums, seq assignment) over a whitespace token
 count both SQL engines can compute — its offsets are a proxy geometry,
 NOT this module's (real-tokenizer counts differ from word counts on
 essentially every document); the real geometry is pinned here by the
-reference-pack equality test and the seqs == ceil(tokens/seq_len)
-assertion in tools/pack_scale_probe.py.
+reference-pack equality test
+(tests/test_packing.py::test_pack_matches_reference_exactly), whose exact
+equality also implies seqs == ceil(tokens/seq_len).
 """
 
 from __future__ import annotations

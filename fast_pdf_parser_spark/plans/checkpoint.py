@@ -28,8 +28,9 @@ model (FIXTURES.md §4):
   committed data;
 - both sinks commit through ONE loop, ``_commit_waves``: the input is
   staged once by bucket, and pending buckets commit in WAVES of ascending
-  ids, one job and one attempt per wave; compaction writes a new attempt
-  and commits it the same way;
+  ids, one job and one attempt per wave;
+- compaction (``compact_sink``) rewrites every non-empty bucket into ONE
+  new attempt committed by ONE lineage file: all buckets or none;
 - resume = anti-join of the bucket list against the log's 'done' rows for
   the run_id — the single (broadcast) join in the system (SURVEY.md §2
   note).
@@ -153,7 +154,10 @@ def _fresh_attempt(spark: SparkSession, out_dir: str, roots: tuple[str, ...],
 def _gc(spark: SparkSession, out_dir: str, roots: tuple[str, ...],
         committed: dict[int, int]) -> None:
     """Delete every ``attempt=N/bucket=K`` under the sink *roots* that is
-    not committed, then every attempt dir left without buckets."""
+    not committed, then every attempt dir left without buckets. No
+    ``<root>/_temporary`` can come from this module's writers: every job
+    writes under ``<root>/attempt=N``, so its committer's ``_temporary``
+    lives and dies inside that attempt dir."""
     for root in roots:
         path = os.path.join(out_dir, root)
         for n, buckets in _list_attempts(spark, path).items():
@@ -471,46 +475,46 @@ def read_clean(spark: SparkSession, out_dir: str) -> DataFrame:
                            _committed(lineage(spark, out_dir)))
 
 
-def compact_bucket(spark: SparkSession, out_dir: str, bucket: int,
-                   run_id: str = "compact", target_files: int = 1,
-                   fail_at: str | None = None) -> None:
-    """Rewrite ONE bucket's clean (and band) files to ``target_files``
-    per partition dir — the OPTIMIZE/maintenance pass any long-lived
-    bucketed sink needs: every resumed/incremental write lands up to
-    shuffle-partitions small part files per bucket, and after N runs a
-    scan pays N x file-open cost (r8 verdict #4).
+def compact_sink(spark: SparkSession, out_dir: str,
+                 run_id: str = "compact", fail_at: str | None = None) -> None:
+    """Compact the whole clean sink (and its band table) into ONE new
+    attempt M — the nightly OPTIMIZE any long-lived bucketed sink needs:
+    every resumed/incremental write lands up to shuffle-partitions small
+    part files per bucket, and after N runs a scan pays N x file-open cost
+    (r8 verdict #4). After *Delta Lake*, one log entry names every
+    rewritten file.
 
-    Compaction writes a new attempt M and commits it: the bucket's
-    committed clean rows go to ``clean/attempt=M/`` and, if its committed
-    attempt has bands, its bands to ``bands/attempt=M/`` (``_write_bands``'
-    probe layout); both row counts are checked against the source, then
-    ONE lineage row (status='compacted', which resume never reads as
-    'done') commits M, and GC drops the superseded attempt. A crash at any
-    step before the row (``fail_at``: clean_staged, bands_staged,
-    pre_lineage) leaves the old attempt committed and readable, with no
-    recovery step; rerunning converges. An empty bucket reads no rows and
-    writes no data dir."""
+    The committed clean rows go to ``clean/attempt=M/`` with ONE file per
+    (bucket, split) dir, the committed band rows (if any) to
+    ``bands/attempt=M/`` in ``_write_bands``' probe layout; both row counts
+    are checked against the source, then ONE lineage file (status=
+    'compacted', which resume never reads as 'done') commits M for every
+    bucket that now has data, and GC drops the superseded attempts.
+    All-or-nothing: a crash at any step before that file (``fail_at``:
+    clean_staged, bands_staged, pre_lineage) leaves every bucket's old
+    attempt committed and readable, with no recovery step; rerunning
+    converges. An empty bucket has no rows to rewrite, so it gets no
+    'compacted' row and keeps its ``docs_parsed = 0`` commit; a sink
+    without rows commits nothing and keeps no attempt dir."""
     committed = _committed(lineage(spark, out_dir))
     attempt = 1 + max(committed.values(), default=0)
     t0 = time.time()
     clean_at, bands_at = _fresh_attempt(spark, out_dir, ("clean", "bands"),
                                         attempt)
-
-    def source(root: str, ddl: str) -> DataFrame:
-        return _read_committed(spark, out_dir, root, ddl, committed) \
-            .filter(F.col("bucket") == bucket)
-
-    src = source("clean", CLEAN_DDL)
-    written = {clean_at: (CLEAN_DDL, src.count())}
-    (src.repartition(target_files, "split")
-     .sortWithinPartitions("split", "doc_id")
+    src = _read_committed(spark, out_dir, "clean", CLEAN_DDL, committed)
+    rows = src.count()
+    if not rows:
+        return
+    written = {clean_at: (CLEAN_DDL, rows)}
+    (src.repartition("bucket", "split")
+     .sortWithinPartitions("bucket", "split", "doc_id")
      .write.mode("overwrite").partitionBy("bucket", "split")
      .parquet(clean_at))
     if fail_at == "clean_staged":
         raise RuntimeError("simulated crash at clean_staged")
-    if _fs_exists(spark, f"{out_dir}/bands/attempt={committed.get(bucket)}"
-                         f"/bucket={bucket}"):
-        bands = source("bands", BAND_DDL)
+    listed = _list_attempts(spark, os.path.join(out_dir, "bands"))
+    if any(b in listed.get(n, ()) for b, n in committed.items()):
+        bands = _read_committed(spark, out_dir, "bands", BAND_DDL, committed)
         written[bands_at] = (BAND_DDL, bands.count())
         _write_bands(bands, bands_at, "bucket", "bkp")
     if fail_at == "bands_staged":
@@ -520,23 +524,14 @@ def compact_bucket(spark: SparkSession, out_dir: str, bucket: int,
             raise IOError(f"compaction rewrite row mismatch: {path}")
     if fail_at == "pre_lineage":
         raise RuntimeError("simulated crash at pre_lineage")
+    buckets = sorted(_list_attempts(
+        spark, os.path.join(out_dir, "clean"))[attempt])
     _append_lineage(
-        spark, out_dir, run_id, [bucket],
+        spark, out_dir, run_id, buckets,
         spark.read.schema(CLEAN_DDL + ", bucket int").parquet(clean_at),
         _clean_stats(), t0, attempt, status="compacted")
-    committed[bucket] = attempt
+    committed.update(dict.fromkeys(buckets, attempt))
     _gc(spark, out_dir, ("clean", "bands"), committed)
-
-
-def compact_sink(spark: SparkSession, out_dir: str,
-                 run_id: str = "compact", target_files: int = 1) -> None:
-    """Compact every committed bucket of the sink (the nightly OPTIMIZE),
-    one attempt per bucket. A crash mid-fleet leaves later buckets
-    uncompacted and every bucket's content committed — rerun to
-    converge."""
-    for b in sorted(_committed(lineage(spark, out_dir))):
-        compact_bucket(spark, out_dir, b, run_id=run_id,
-                       target_files=target_files)
 
 
 def read_band_table(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -598,8 +598,9 @@ def _sink_state(spark, out):
 def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
     """compact_sink: every row (clean AND bands) survives byte-identically,
     stored==derived band equality holds post-compaction, file counts
-    drop to ~target, and the lineage table gains 'compacted' rows that
-    do NOT disturb resume (status filter is 'done')."""
+    drop to one per partition dir, and ONE lineage file gains 'compacted'
+    rows naming one attempt that do NOT disturb resume (status filter is
+    'done')."""
     import glob as globmod
 
     from fast_pdf_parser_spark.operators.relational import (
@@ -615,6 +616,7 @@ def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
     before_rows, before_bands = _sink_state(spark, out)
     files = out + "/clean/attempt=*/bucket=*/split=*/*.parquet"
     files_before = len(globmod.glob(files))
+    logs_before = set(globmod.glob(out + "/checkpoint/*.parquet"))
 
     compact_sink(spark, out, run_id="opt1")
 
@@ -623,7 +625,7 @@ def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
     assert after_bands == before_bands and len(after_bands) > 0
     files_after = len(globmod.glob(files))
     assert files_after < files_before
-    assert files_after <= 3  # target_files(1) per (bucket, lone split)
+    assert files_after <= 3  # one file per (bucket, lone split) dir
     _assert_only_committed(spark, out, "clean", "bands")
 
     # stored == derived still holds over the compacted copy
@@ -636,6 +638,10 @@ def test_compaction_preserves_content_and_shrinks_files(spark, tmp_path):
 
     lin = lineage(spark, out)
     assert lin.filter("status = 'compacted' AND run_id = 'opt1'").count() == 3
+    assert len(set(globmod.glob(out + "/checkpoint/*.parquet"))
+               - logs_before) == 1
+    assert lin.filter("status = 'compacted'").select("attempt") \
+        .distinct().count() == 1
     # resume still sees exactly the original 'done' rows
     assert completed_buckets(spark, out + "/checkpoint", "c0") == {0, 1, 2}
 
@@ -644,9 +650,10 @@ def test_compaction_handles_empty_bucket(spark, tmp_path):
     """compact_sink over a sink with lineage-known empty buckets (a
     docs_parsed = 0 row and no data dir) must COMPLETE — the r9 code
     re-crashed on an empty bucket forever (advice r9) — with content
-    unchanged, no data dir created for an empty bucket, a 'compacted' row
-    (zeros for the empty ones) for every committed bucket, and a
-    convergent rerun."""
+    unchanged, no data dir created for an empty bucket, one 'compacted'
+    row per non-empty bucket and none for an empty one, and a convergent
+    rerun. A sink with zero docs compacts to nothing: no lineage file,
+    no attempt dir."""
     import glob as globmod
 
     from fast_pdf_parser_spark.plans.checkpoint import (
@@ -675,13 +682,49 @@ def test_compaction_handles_empty_bucket(spark, tmp_path):
     assert not data_dirs() & empty
     compacted = lineage(spark, out).filter(
         "status = 'compacted' AND run_id = 'opt_e'").collect()
-    assert sorted(r.partition_id for r in compacted) == [0, 1, 2, 3]
-    assert all(r.docs_parsed == 0 for r in compacted
-               if r.partition_id in empty)
+    assert sorted(r.partition_id for r in compacted) == \
+        sorted({0, 1, 2, 3} - empty)
+    assert not {r.partition_id for r in compacted} & empty
     compact_sink(spark, out, run_id="opt_e2")
     assert _sink_state(spark, out) == before
     assert not data_dirs() & empty
     _assert_only_committed(spark, out, "clean", "bands")
+
+    nothing = str(tmp_path / "compact_nothing")
+    write_docs_bucketed(spark, docs.limit(0), nothing, run_id="c0",
+                        num_buckets=4, write_bands=True)
+    logs = set(globmod.glob(nothing + "/checkpoint/*.parquet"))
+    compact_sink(spark, nothing, run_id="opt_n")
+    assert set(globmod.glob(nothing + "/checkpoint/*.parquet")) == logs
+    assert not globmod.glob(nothing + "/*/attempt=*")
+    assert _sink_state(spark, nothing) == ([], [])
+
+
+def test_compaction_of_bandless_sink(spark, tmp_path):
+    """A sink written without bands has no ``bands/`` root at all:
+    compaction rewrites its clean rows, commits them and writes no band
+    dir."""
+    import glob as globmod
+
+    from fast_pdf_parser_spark.plans.checkpoint import (
+        compact_sink,
+        read_clean,
+        write_docs_bucketed,
+    )
+
+    out = str(tmp_path / "compact_bandless")
+    write_docs_bucketed(spark, _clean_docs(spark, n=6), out, run_id="c0",
+                        num_buckets=3)
+
+    def rows():
+        return sorted(tuple(r) for r in read_clean(spark, out).collect())
+
+    before = rows()
+    compact_sink(spark, out, run_id="opt_b")
+    assert rows() == before and len(before) == 6
+    assert lineage(spark, out).filter("status = 'compacted'").count() > 0
+    assert not globmod.glob(out + "/bands")
+    _assert_only_committed(spark, out, "clean")
 
 
 @pytest.mark.parametrize("fail_at", [
@@ -691,15 +734,15 @@ def test_compaction_crash_matrix(spark, tmp_path, fail_at):
     lineage commit leaves the committed content exactly as before, with
     no recovery call; a rerun commits the compaction with content
     identical to the pre-crash sink and only committed attempts on disk."""
-    from fast_pdf_parser_spark.plans.checkpoint import compact_bucket
+    from fast_pdf_parser_spark.plans.checkpoint import compact_sink
 
     out = _compact_fixture(spark, tmp_path, f"compact_{fail_at}")
     before = _sink_state(spark, out)
 
     with pytest.raises(RuntimeError, match="simulated crash"):
-        compact_bucket(spark, out, 1, run_id="opt", fail_at=fail_at)
+        compact_sink(spark, out, run_id="opt", fail_at=fail_at)
     assert _sink_state(spark, out) == before
-    compact_bucket(spark, out, 1, run_id="opt")
+    compact_sink(spark, out, run_id="opt")
     assert _sink_state(spark, out) == before
     _assert_only_committed(spark, out, "clean", "bands")
 

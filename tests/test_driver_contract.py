@@ -81,6 +81,20 @@ def test_queries_and_oracles_consistent():
     # (this module is skipped without testdata; those need none)
 
 
+def test_text_encode_pack_value_pinned(spark):
+    """text_encode_pack is rows-only (greedy-vocab ids have no SQL oracle),
+    so its value is pinned here: sha256 of its sorted, normalized rows."""
+    import hashlib
+
+    from tools.check_oracles import norm_rows
+
+    df = entrymod.queries()["text_encode_pack"](spark, SF_DIR)
+    rows = norm_rows([tuple(r) for r in df.collect()], df.columns)
+    assert len(rows) == 508
+    assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+        "a8568f557a9cbda565dc3dc36d53dce0e5cc34ea32ba1d65bd8d012952446396")
+
+
 @pytest.mark.parametrize(
     "name",
     ["p6_line_classify", "f4_semantic_units", "a5_distribution",
