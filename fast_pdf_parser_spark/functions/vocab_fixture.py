@@ -111,9 +111,3 @@ def vocab_file_text() -> str:
     for token_id, tok in enumerate(build_vocab_entries()):
         lines.append(f"{base64.b64encode(tok).decode('ascii')} {token_id}")
     return "\n".join(lines) + "\n"
-
-
-def write_vocab_file(path: str) -> str:
-    with open(path, "w", encoding="ascii") as f:
-        f.write(vocab_file_text())
-    return path

@@ -31,9 +31,9 @@ model (FIXTURES.md §4):
   ids, one job and one attempt per wave;
 - compaction (``compact_sink``) rewrites every non-empty bucket into ONE
   new attempt committed by ONE lineage file: all buckets or none;
-- resume = anti-join of the bucket list against the log's 'done' rows for
-  the run_id — the single (broadcast) join in the system (SURVEY.md §2
-  note).
+- every consumer replays the log on the driver, after *Delta Lake*:
+  ``_log_state`` collects it ONCE per call into the run's 'done' buckets
+  (resume = every bucket not in that set) and the committed attempts.
 
 Lineage semantics: a bucket with no documents writes no data directory;
 its ``docs_parsed = 0`` row records it as known-empty. ``wall_ms`` is the
@@ -175,36 +175,37 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
-def _read_log(spark: SparkSession, checkpoint_path: str) -> DataFrame:
-    """The commit log; empty before the first commit."""
-    if not _fs_exists(spark, checkpoint_path):
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
-    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_path)
-
-
 def lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return _read_log(spark, os.path.join(out_dir, "checkpoint"))
+    """The commit log; empty before the first commit."""
+    path = os.path.join(out_dir, "checkpoint")
+    if not _fs_exists(spark, path):
+        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
 
 
-def _done(log: DataFrame, run_id: str) -> DataFrame:
-    """The run's 'done' buckets, as a ``bucket`` column."""
-    return log.filter((F.col("run_id") == run_id)
-                      & (F.col("status") == "done")) \
-        .select(F.col("partition_id").alias("bucket"))
+def _log_state(spark: SparkSession, checkpoint_path: str,
+               run_id: str | None = None) -> tuple[set[int], dict[int, int]]:
+    """The log replayed on the driver with ONE collect: (the run's 'done'
+    buckets, {bucket: committed attempt}). The committed attempt is the
+    highest attempt among the bucket's 'done'/'compacted' rows across
+    run_ids — the latest writer wins. A missing log is the empty state,
+    without a Spark job."""
+    done, committed = set(), {}
+    if not _fs_exists(spark, checkpoint_path):
+        return done, committed
+    log = spark.read.schema(CHECKPOINT_SCHEMA).parquet(checkpoint_path)
+    for r in log.collect():
+        if r.status == "done" and r.run_id == run_id:
+            done.add(r.partition_id)
+        if r.status in ("done", "compacted") and r.attempt is not None:
+            committed[r.partition_id] = max(
+                r.attempt, committed.get(r.partition_id, 0))
+    return done, committed
 
 
 def completed_buckets(spark: SparkSession, checkpoint_path: str,
                       run_id: str) -> set[int]:
-    return {r.bucket for r in
-            _done(_read_log(spark, checkpoint_path), run_id).collect()}
-
-
-def _committed(log: DataFrame) -> dict[int, int]:
-    """{bucket: committed attempt}: the highest attempt among the bucket's
-    'done'/'compacted' rows across run_ids — the latest writer wins."""
-    return dict(log.filter(F.col("status").isin("done", "compacted")
-                           & F.col("attempt").isNotNull())
-                .groupBy("partition_id").agg(F.max("attempt")).collect())
+    return _log_state(spark, checkpoint_path, run_id)[0]
 
 
 def _read_committed(spark: SparkSession, out_dir: str, root: str, ddl: str,
@@ -213,25 +214,16 @@ def _read_committed(spark: SparkSession, out_dir: str, root: str, ddl: str,
     committed ``attempt=N/bucket=K`` dirs of sink *root* only: the pair
     filter is a PartitionFilter, so superseded and uncommitted attempts are
     never read. Explicit schema: an all-empty sink has no part files to
-    infer one from."""
+    infer one from, and a root never written (a bandless sink's bands/)
+    reads as the same columns with no rows."""
     pairs = [f"{n}/{b}" for b, n in committed.items()]
-    return (spark.read.schema(ddl + ", attempt long, bucket int")
-            .parquet(os.path.join(out_dir, root))
-            .filter(F.concat_ws("/", F.col("attempt").cast("string"),
-                                F.col("bucket").cast("string")).isin(pairs))
+    path = os.path.join(out_dir, root)
+    schema = ddl + ", attempt long, bucket int"
+    rel = (spark.read.schema(schema).parquet(path)
+           if _fs_exists(spark, path) else spark.createDataFrame([], schema))
+    return (rel.filter(F.concat_ws("/", F.col("attempt").cast("string"),
+                                   F.col("bucket").cast("string")).isin(pairs))
             .drop("attempt"))
-
-
-def _pending_buckets(spark: SparkSession, log: DataFrame, run_id: str,
-                     num_buckets: int) -> list[int]:
-    """Resume anti-join shared by both sinks: all buckets minus the run's
-    'done' rows. The log is tiny → broadcast; expressed as a DataFrame
-    anti-join to stay a real plan at any bucket count."""
-    every = spark.range(num_buckets).select(F.col("id").cast("int")
-                                            .alias("bucket"))
-    return [r.bucket for r in every.join(F.broadcast(_done(log, run_id)),
-                                         "bucket", "left_anti")
-            .orderBy("bucket").collect()]
 
 
 def _append_lineage(spark: SparkSession, out_dir: str, run_id: str,
@@ -260,8 +252,8 @@ def _commit_waves(spark: SparkSession, docs: DataFrame, out_dir: str,
     """The commit loop both bucketed sinks share; returns the committed
     attempts after it.
 
-    1. Read the log once: the run's pending buckets, the committed
-       attempts and the next attempt number.
+    1. Read the log once (``_log_state``): the run's pending buckets, the
+       committed attempts and the next attempt number.
     2. Stage ``with_bucket(docs)`` ONCE under *stage*, partitioned by
        bucket: the bucket id is a computed column (pmod(xxhash64)), so a
        bucket filter cannot push down and every wave would otherwise
@@ -278,9 +270,9 @@ def _commit_waves(spark: SparkSession, docs: DataFrame, out_dir: str,
        leaves a resume with pending=[] and an orphaned stage. Then GC the
        sink *roots*.
     """
-    log = lineage(spark, out_dir)
-    pending = _pending_buckets(spark, log, run_id, num_buckets)
-    committed = _committed(log)
+    done, committed = _log_state(
+        spark, os.path.join(out_dir, "checkpoint"), run_id)
+    pending = [b for b in range(num_buckets) if b not in done]
     attempt = 1 + max(committed.values(), default=0)
     bucketed = with_bucket(docs, num_buckets)
     if pending and not _fs_exists(spark, os.path.join(stage, "_SUCCESS")):
@@ -471,8 +463,8 @@ def write_docs_bucketed(
 def read_clean(spark: SparkSession, out_dir: str) -> DataFrame:
     """Reader over the committed cleaned corpus of ``write_docs_bucketed``:
     CLEAN_DDL's columns plus the ``bucket`` partition column."""
-    return _read_committed(spark, out_dir, "clean", CLEAN_DDL,
-                           _committed(lineage(spark, out_dir)))
+    return _read_committed(spark, out_dir, "clean", CLEAN_DDL, _log_state(
+        spark, os.path.join(out_dir, "checkpoint"))[1])
 
 
 def compact_sink(spark: SparkSession, out_dir: str,
@@ -496,7 +488,7 @@ def compact_sink(spark: SparkSession, out_dir: str,
     converges. An empty bucket has no rows to rewrite, so it gets no
     'compacted' row and keeps its ``docs_parsed = 0`` commit; a sink
     without rows commits nothing and keeps no attempt dir."""
-    committed = _committed(lineage(spark, out_dir))
+    committed = _log_state(spark, os.path.join(out_dir, "checkpoint"))[1]
     attempt = 1 + max(committed.values(), default=0)
     t0 = time.time()
     clean_at, bands_at = _fresh_attempt(spark, out_dir, ("clean", "bands"),
@@ -512,10 +504,9 @@ def compact_sink(spark: SparkSession, out_dir: str,
      .parquet(clean_at))
     if fail_at == "clean_staged":
         raise RuntimeError("simulated crash at clean_staged")
-    listed = _list_attempts(spark, os.path.join(out_dir, "bands"))
-    if any(b in listed.get(n, ()) for b, n in committed.items()):
-        bands = _read_committed(spark, out_dir, "bands", BAND_DDL, committed)
-        written[bands_at] = (BAND_DDL, bands.count())
+    bands = _read_committed(spark, out_dir, "bands", BAND_DDL, committed)
+    if n_bands := bands.count():
+        written[bands_at] = (BAND_DDL, n_bands)
         _write_bands(bands, bands_at, "bucket", "bkp")
     if fail_at == "bands_staged":
         raise RuntimeError("simulated crash at bands_staged")
@@ -539,10 +530,11 @@ def read_band_table(spark: SparkSession, out_dir: str) -> DataFrame:
     ``write_docs_bucketed(write_bands=True)`` — (doc_id, band, band_key)
     plus the (bucket, bkp) partition columns, read from the committed
     ``attempt=N/bucket=K`` dirs only (``probe_band_table``'s bkp pruning
-    stacks on that filter). An all-empty corpus reads back as an empty
-    DataFrame with the real shape, not a schema-inference error."""
-    return _read_committed(spark, out_dir, "bands", BAND_DDL,
-                           _committed(lineage(spark, out_dir)))
+    stacks on that filter). An all-empty corpus, or a sink written
+    without bands, reads back as an empty DataFrame with the same columns,
+    not a read error."""
+    return _read_committed(spark, out_dir, "bands", BAND_DDL, _log_state(
+        spark, os.path.join(out_dir, "checkpoint"))[1])
 
 
 def probe_band_table(spark: SparkSession, out_dir: str,

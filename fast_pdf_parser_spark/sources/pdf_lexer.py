@@ -490,7 +490,7 @@ def _decode_string(raw: bytes, table: dict[int, str] | None) -> str:
 
 # One-pass scanner for content streams (hot path: ~100k tokens/page batch).
 # Literal strings use a non-nesting fast pattern; nested parens (legal PDF,
-# absent from the fixture subset) fall back to the exact _Lexer parser.
+# absent from the fixture subset) match ``badstr`` and raise PdfError.
 _CS_TOKEN = re.compile(
     rb"(?P<str>\((?:\\.|[^\\()])*\))"
     rb"|(?P<hex><[0-9A-Fa-f\s]*>)"

@@ -22,6 +22,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from fast_pdf_parser_spark.config import ChunkOptions, ParseOptions
 from fast_pdf_parser_spark.operators.pipeline import extract_documents
+from fast_pdf_parser_spark.operators.relational import _HASH60_SPARK
 from fast_pdf_parser_spark.sources.synth import SPANS_DDL
 
 
@@ -357,7 +358,6 @@ def _clean_capped_stream(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from fast_pdf_parser_spark.operators.relational import (
-        _HASH60_SPARK,
         _PII_EMAIL_SPARK,
         _PII_IP_SPARK,
         _PII_SCRUB,
@@ -506,7 +506,7 @@ def stream_clean_write(
         CLEAN_DDL,
         _append_lineage,
         _clean_stats,
-        lineage,
+        completed_buckets,
     )
 
     clean_dir = os.path.join(out_dir, "clean")
@@ -522,9 +522,8 @@ def stream_clean_write(
             # crash AFTER the data write but BEFORE the lineage append —
             # the worst-case window the replay must absorb
             raise RuntimeError(f"simulated crash at epoch {epoch_id}")
-        if lineage(spark, out_dir).filter(
-                (F.col("partition_id") == int(epoch_id))
-                & (F.col("status") == "done")).count():
+        if int(epoch_id) in completed_buckets(
+                spark, os.path.join(out_dir, "checkpoint"), "stream"):
             return  # replay after a crash between lineage and commit
         # explicit schema: an all-filtered epoch writes no data files
         durable = spark.read.schema(CLEAN_DDL).parquet(edir) \
@@ -549,12 +548,11 @@ def stream_clean_write(
 # groupBy: a streaming DataFrame in append mode cannot pre-aggregate per
 # doc, and at any scale this shape also skips the batch path's
 # explode(words x 16)->groupBy shuffle entirely.
-_HASH60 = "CAST(conv(substr(md5({x}), 1, 15), 16, 10) AS BIGINT)"
-_WORD_HASH = _HASH60.format(x="concat(CAST(s AS STRING), ':', w)")
+_WORD_HASH = _HASH60_SPARK.format(x="concat(CAST(s AS STRING), ':', w)")
 _MINHASH = ("array_min(transform(array_distinct(split(text, ' ')), "
             f"w -> {_WORD_HASH}))")
 _SEED_KEY = f"concat(CAST(s AS STRING), '=', CAST({_MINHASH} AS STRING))"
-_BAND_KEY = _HASH60.format(
+_BAND_KEY = _HASH60_SPARK.format(
     x="array_join(array_sort(transform(sequence(b * 4, b * 4 + 3), "
       f"s -> {_SEED_KEY})), ',')")
 _BANDS_EXPR = ("transform(sequence(0, 3), b -> named_struct("

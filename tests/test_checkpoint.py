@@ -1,5 +1,6 @@
 """Checkpoint/resume tests: per-partition lineage rows, crash simulation,
-resume-from-partition via anti-join, idempotent re-runs."""
+resume-from-partition against the log's 'done' buckets, idempotent
+re-runs."""
 
 import os
 
@@ -65,6 +66,45 @@ def test_rerun_is_noop(spark, corpus, tmp_path):
     lin1 = lineage(spark, out).count()
     run_with_checkpoint(spark, corpus, out, run_id="r2", num_buckets=2)
     assert lineage(spark, out).count() == lin1  # nothing re-processed
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs *fn* runs, counted under its own job group."""
+    sc = spark.sparkContext
+    group = f"job_count_{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_reads_log_once(spark, corpus, tmp_path):
+    """Every log consumer goes through ONE driver-side read of the log:
+    resuming a completed sink runs exactly one Spark job (the log
+    collect), and a log that does not exist yet runs none."""
+    from fast_pdf_parser_spark.plans.checkpoint import (
+        _log_state,
+        write_docs_bucketed,
+    )
+
+    out = str(tmp_path / "run_once")
+    assert _job_count(spark, lambda: _log_state(
+        spark, out + "/checkpoint", "r")) == 0
+    run_with_checkpoint(spark, corpus, out, run_id="r", num_buckets=8,
+                        max_concurrent_buckets=4)
+    assert _job_count(spark, lambda: run_with_checkpoint(
+        spark, corpus, out, run_id="r", num_buckets=8,
+        max_concurrent_buckets=4)) == 1
+
+    clean = str(tmp_path / "clean_once")
+    docs = _clean_docs(spark, n=6)
+    write_docs_bucketed(spark, docs, clean, run_id="c", num_buckets=3,
+                        write_bands=True)
+    assert _job_count(spark, lambda: write_docs_bucketed(
+        spark, docs, clean, run_id="c", num_buckets=3,
+        write_bands=True)) == 1
 
 
 def test_matches_direct_pipeline(spark, corpus, tmp_path):
@@ -725,6 +765,24 @@ def test_compaction_of_bandless_sink(spark, tmp_path):
     assert lineage(spark, out).filter("status = 'compacted'").count() > 0
     assert not globmod.glob(out + "/bands")
     _assert_only_committed(spark, out, "clean")
+
+
+def test_bandless_sink_reads_empty_band_table(spark, tmp_path):
+    """A sink written without bands has no ``bands/`` root: its band
+    table reads back empty with BAND_DDL's columns, not PATH_NOT_FOUND."""
+    from fast_pdf_parser_spark.plans.checkpoint import (
+        BAND_DDL,
+        read_band_table,
+        write_docs_bucketed,
+    )
+
+    out = str(tmp_path / "bandless_read")
+    write_docs_bucketed(spark, _clean_docs(spark, n=6), out, run_id="c0",
+                        num_buckets=3)
+    bands = read_band_table(spark, out)
+    assert bands.count() == 0
+    assert set(bands.columns) == {
+        c.split()[0] for c in BAND_DDL.split(", ")} | {"bucket"}
 
 
 @pytest.mark.parametrize("fail_at", [
