@@ -12,10 +12,11 @@ model (FIXTURES.md §4):
   Lake* (VLDB 2020): data files are immutable, and a write is visible only
   once a lineage row names it. Every data write goes to a fresh, private
   ``<root>/attempt=N/bucket=K/[split=S/|bkp=J/]`` dir (root: spans, clean
-  or bands); ONE lineage file then commits it, a row per bucket:
-  (run_id, partition_id, docs_parsed, bytes_decoded, parse_failures,
-  wall_ms, status, attempt=N). N = 1 + max(attempt) of the log, so a
-  crashed attempt's number (it has no row) is reused and overwritten;
+  or bands), its per-bucket stats observed during the write; the driver
+  then commits it with ONE lineage file ``attempt-NNNNN.parquet``, a row
+  per bucket: (run_id, partition_id, docs_parsed, bytes_decoded,
+  parse_failures, wall_ms, status, attempt=N). N = 1 + max(attempt) of
+  the log, so a crashed attempt's number (it has no row) is reused;
 - bucket K's COMMITTED attempt is the highest ``attempt`` of its
   'done'/'compacted' rows across run_ids (the latest writer wins), and
   the readers (``run_with_checkpoint``'s result, ``read_clean``,
@@ -28,7 +29,7 @@ model (FIXTURES.md §4):
   committed data;
 - both sinks commit through ONE loop, ``_commit_waves``: the input is
   staged once by bucket, and pending buckets commit in WAVES of ascending
-  ids, one job and one attempt per wave;
+  ids, one write job and one attempt per wave;
 - compaction (``compact_sink``) rewrites every non-empty bucket into ONE
   new attempt committed by ONE lineage file: all buckets or none;
 - every consumer replays the log on the driver, after *Delta Lake*:
@@ -39,7 +40,8 @@ Lineage semantics: a bucket with no documents writes no data directory;
 its ``docs_parsed = 0`` row records it as known-empty. ``wall_ms`` is the
 wave's wall time split evenly across its buckets (a wave average, not that
 bucket's own time). ``attempt`` is null on ``streaming.ingest``'s
-per-epoch rows. The log is per out_dir, so one out_dir holds one sink.
+per-epoch rows, whose files are named ``epoch-NNNNN.parquet``. The log
+is per out_dir, so one out_dir holds one sink.
 
 No migration: sinks written as ``<root>/bucket=K/`` by older checkouts are
 not read — every sink here is a per-query scratch or test dir, and a
@@ -54,7 +56,11 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from fast_pdf_parser_spark.config import ChunkOptions, ParseOptions
 from fast_pdf_parser_spark.operators.pipeline import (
@@ -112,8 +118,7 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
 
 def _fs_delete(spark: SparkSession, path: str) -> None:
     fs, hpath = _hadoop_fs(spark, path)
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
+    fs.delete(hpath, True)  # False, not an error, for a missing path
 
 
 def _drop_dir(spark: SparkSession, path: str) -> None:
@@ -175,12 +180,18 @@ def with_bucket(df: DataFrame, num_buckets: int) -> DataFrame:
     )
 
 
+def _read_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
+    """*path* read as *ddl*; a missing path is an empty relation the
+    optimizer folds away (``limit(0)``), so collecting it runs no job."""
+    if _fs_exists(spark, path):
+        return spark.read.schema(ddl).parquet(path)
+    return spark.createDataFrame([], ddl).limit(0)
+
+
 def lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     """The commit log; empty before the first commit."""
-    path = os.path.join(out_dir, "checkpoint")
-    if not _fs_exists(spark, path):
-        return spark.createDataFrame([], CHECKPOINT_SCHEMA)
-    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(path)
+    return _read_or_empty(spark, os.path.join(out_dir, "checkpoint"),
+                          CHECKPOINT_SCHEMA)
 
 
 def _log_state(spark: SparkSession, checkpoint_path: str,
@@ -217,32 +228,76 @@ def _read_committed(spark: SparkSession, out_dir: str, root: str, ddl: str,
     infer one from, and a root never written (a bandless sink's bands/)
     reads as the same columns with no rows."""
     pairs = [f"{n}/{b}" for b, n in committed.items()]
-    path = os.path.join(out_dir, root)
-    schema = ddl + ", attempt long, bucket int"
-    rel = (spark.read.schema(schema).parquet(path)
-           if _fs_exists(spark, path) else spark.createDataFrame([], schema))
+    rel = _read_or_empty(spark, os.path.join(out_dir, root),
+                         ddl + ", attempt long, bucket int")
     return (rel.filter(F.concat_ws("/", F.col("attempt").cast("string"),
                                    F.col("bucket").cast("string")).isin(pairs))
             .drop("attempt"))
 
 
+def _observe_stats(df: DataFrame, buckets: list[int], key=None):
+    """(*df* observed, a callable giving {bucket: (docs, bytes, failures)}
+    after an action over it): one ``sum(when(key = k, ...))`` per bucket k
+    and stat, zeros for a bucket without rows. A clean row is one doc; a
+    span doc is its one ``offset = 0`` row (observe rejects DISTINCT)."""
+    key = F.col("bucket") if key is None else key
+    if "clean_text" in df.columns:
+        stats = (F.lit(1), F.octet_length("clean_text"), F.lit(0))
+    else:
+        first = F.col("offset") == 0
+        stats = tuple(F.when(first, v) for v in (
+            F.lit(1), F.col("doc_bytes_decoded"), F.col("doc_parse_failures")))
+    obs = Observation()
+    observed = df.observe(obs, *(
+        F.sum(F.when(key == b, v)).alias(f"s{i}_{b}")
+        for b in buckets for i, v in enumerate(stats)))
+
+    def get():
+        got = obs.get
+        return {b: tuple(int(got[f"s{i}_{b}"] or 0) for i in range(3))
+                for b in buckets}
+    return observed, get
+
+
 def _append_lineage(spark: SparkSession, out_dir: str, run_id: str,
-                    buckets: list[int], durable: DataFrame, stats: list,
-                    t0: float, attempt: int | None,
-                    status: str = "done") -> None:
-    """The one writer of lineage rows, i.e. the commit: ONE grouped
-    aggregate of ``stats`` (docs, bytes, failures) over ``durable`` (the
-    attempt's own dir, with a ``bucket`` column), then ONE lineage file
-    with a row per bucket naming ``attempt``. Buckets without rows get
-    zeros; the wall time since ``t0`` is split evenly."""
-    got = {r[0]: r[1:] for r in durable.groupBy("bucket").agg(*stats)
-           .collect()}
+                    stats: dict[int, tuple[int, int, int]], t0: float,
+                    attempt: int | None, status: str = "done",
+                    fail_at: str | None = None) -> None:
+    """The commit: ONE lineage file with a row per bucket of *stats* naming
+    ``attempt`` (the wall time since ``t0`` split evenly), built on the
+    driver with no Spark job. It is written hidden (log readers skip ``_``
+    files, so a crash mid-write commits nothing), then renamed without
+    overwrite to ``attempt-NNNNN.parquet`` (a stream epoch's:
+    ``epoch-NNNNN.parquet``): a second commit of one name raises."""
+    buckets = sorted(stats)
     wall, extra = divmod(int((time.time() - t0) * 1000), len(buckets))
-    rows = [(run_id, b, *(int(v or 0) for v in got.get(b, (0, 0, 0))),
-             wall + (i < extra), status, attempt)
+    schema = to_arrow_schema(StructType.fromDDL(CHECKPOINT_SCHEMA))
+    rows = [dict(zip(schema.names, (run_id, b, *stats[b], wall + (i < extra),
+                                    status, attempt)))
             for i, b in enumerate(buckets)]
-    spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA).coalesce(1) \
-        .write.mode("append").parquet(os.path.join(out_dir, "checkpoint"))
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema), buf)
+    name = (f"attempt-{attempt:05d}" if attempt is not None
+            else f"epoch-{buckets[0]:05d}") + ".parquet"
+    log = os.path.join(out_dir, "checkpoint")
+    fs, hidden = _hadoop_fs(spark, os.path.join(log, f"_{name}.tmp"))
+    out = fs.create(hidden, True)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if fail_at == "lineage_hidden":
+        raise RuntimeError("simulated crash at lineage_hidden")
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    final = hadoop.Path(os.path.join(log, name))
+    if not fs.exists(final):
+        # a commit lost without its .crc sidecar leaves the sidecar, which
+        # fails the rename after the data moved, then every log read
+        fs.delete(hadoop.Path(os.path.join(log, f".{name}.crc")), False)
+    rename = spark.sparkContext._gateway.new_array(hadoop.Options.Rename, 1)
+    rename[0] = hadoop.Options.Rename.NONE
+    hadoop.FileContext.getFileContext(hidden.toUri(), fs.getConf()).rename(
+        hidden, final, rename)
 
 
 def _commit_waves(spark: SparkSession, docs: DataFrame, out_dir: str,
@@ -259,12 +314,11 @@ def _commit_waves(spark: SparkSession, docs: DataFrame, out_dir: str,
        bucket filter cannot push down and every wave would otherwise
        re-run the whole upstream plan. The stage is keyed by the caller
        (run_id, num_buckets) and reused once its _SUCCESS is durable.
-    3. For each wave of ``wave`` pending buckets (ascending): its input is
-       the staged copy filtered to the wave (partition pruning; an empty
-       bucket has no dir and yields no rows). ``write_wave(part, dirs)``
-       writes it into the fresh ``attempt=N`` dir of each root and
-       returns (reader over the first, with a ``bucket`` column, and the
-       lineage stats columns); then one lineage file commits the wave.
+    3. For each wave of ``wave`` pending buckets (ascending), the staged
+       copy filtered to the wave (partition pruning; an empty bucket has no
+       dir) goes to ``write_wave(part, buckets, dirs)``: it writes the
+       fresh ``attempt=N`` dir of each root and returns the stats it
+       observed; then one lineage file commits the wave.
     4. Drop the stage (and its parent if empty) — also when nothing was
        pending: a crash between the last lineage append and this cleanup
        leaves a resume with pending=[] and an orphaned stage. Then GC the
@@ -284,10 +338,9 @@ def _commit_waves(spark: SparkSession, docs: DataFrame, out_dir: str,
         t0 = time.time()
         part = spark.read.schema(bucketed.schema).parquet(stage) \
             .filter(F.col("bucket").isin(buckets))
-        durable, stats = write_wave(
-            part, _fresh_attempt(spark, out_dir, roots, attempt))
-        _append_lineage(spark, out_dir, run_id, buckets, durable, stats, t0,
-                        attempt)
+        stats = write_wave(
+            part, buckets, _fresh_attempt(spark, out_dir, roots, attempt))
+        _append_lineage(spark, out_dir, run_id, stats, t0, attempt)
         committed.update(dict.fromkeys(buckets, attempt))
         attempt += 1
     _drop_dir(spark, stage)
@@ -319,17 +372,14 @@ def run_with_checkpoint(
         # auto: a wave wide enough to keep every core busy
         max_concurrent_buckets = max(4, spark.sparkContext.defaultParallelism)
 
-    def write_wave(part: DataFrame, dirs: list[str]):
+    def write_wave(part: DataFrame, buckets: list[int], dirs: list[str]):
         (at,) = dirs
         result = extract_documents(part, chunk_options, parse_options)
         # the bucket is a pure function of doc_id: recompute, not carry
-        with_bucket(result, num_buckets).write.mode("overwrite") \
-            .partitionBy("bucket").parquet(at)
-        first = F.col("offset") == 0
-        return spark.read.schema(OUTPUT_DDL + ", bucket int").parquet(at), [
-            F.countDistinct("doc_id"),
-            F.sum(F.when(first, F.col("doc_bytes_decoded"))),
-            F.sum(F.when(first, F.col("doc_parse_failures")))]
+        result, stats = _observe_stats(with_bucket(result, num_buckets),
+                                       buckets)
+        result.write.mode("overwrite").partitionBy("bucket").parquet(at)
+        return stats()
 
     committed = _commit_waves(
         spark, input_df, out_dir,
@@ -364,10 +414,6 @@ def write_clean_corpus(
     return write_docs_bucketed(spark, kept, out_dir, run_id,
                                num_buckets=num_buckets,
                                fail_on_bucket=fail_on_bucket)
-
-
-def _clean_stats() -> list:
-    return [F.count("*"), F.sum(F.octet_length("clean_text")), F.lit(0)]
 
 
 def _write_bands(bands: DataFrame, path: str, *keys: str) -> None:
@@ -432,25 +478,25 @@ def write_docs_bucketed(
     Read the band table back with ``read_band_table``.
     """
 
-    def write_wave(part: DataFrame, dirs: list[str]):
+    def write_wave(part: DataFrame, buckets: list[int], dirs: list[str]):
         clean_at, bands_at = dirs
+        part, stats = _observe_stats(part, buckets)
         part.write.mode("overwrite").partitionBy("bucket", "split") \
             .parquet(clean_at)
-        durable = spark.read.schema(CLEAN_DDL + ", bucket int").parquet(
-            clean_at)
         if write_bands:
             from fast_pdf_parser_spark.operators.relational import (
                 band_signatures_spark_sql,
             )
 
-            durable.createOrReplaceTempView("_band_sink_src")
+            spark.read.schema(CLEAN_DDL + ", bucket int").parquet(clean_at) \
+                .createOrReplaceTempView("_band_sink_src")
             bands = with_bucket(
                 spark.sql(band_signatures_spark_sql("_band_sink_src")),
                 num_buckets)
             _write_bands(bands.withColumn("bkp", F.pmod(
                 F.col("band_key"), F.lit(BAND_PROBE_PARTS)).cast("int")),
                 bands_at, "bucket", "bkp")
-        return durable, _clean_stats()
+        return stats()
 
     committed = _commit_waves(
         spark, docs, out_dir,
@@ -482,11 +528,12 @@ def compact_sink(spark: SparkSession, out_dir: str,
     are checked against the source, then ONE lineage file (status=
     'compacted', which resume never reads as 'done') commits M for every
     bucket that now has data, and GC drops the superseded attempts.
-    All-or-nothing: a crash at any step before that file (``fail_at``:
-    clean_staged, bands_staged, pre_lineage) leaves every bucket's old
-    attempt committed and readable, with no recovery step; rerunning
-    converges. An empty bucket has no rows to rewrite, so it gets no
-    'compacted' row and keeps its ``docs_parsed = 0`` commit; a sink
+    All-or-nothing: a crash at any step before that file is in place
+    (``fail_at``: clean_staged, bands_staged, pre_lineage, and
+    lineage_hidden between its hidden write and its rename) leaves every
+    bucket's old attempt committed and readable, with no recovery step;
+    rerunning converges. An empty bucket has no rows to rewrite, so it gets
+    no 'compacted' row and keeps its ``docs_parsed = 0`` commit; a sink
     without rows commits nothing and keeps no attempt dir."""
     committed = _log_state(spark, os.path.join(out_dir, "checkpoint"))[1]
     attempt = 1 + max(committed.values(), default=0)
@@ -498,6 +545,7 @@ def compact_sink(spark: SparkSession, out_dir: str,
     if not rows:
         return
     written = {clean_at: (CLEAN_DDL, rows)}
+    src, stats = _observe_stats(src, sorted(committed))
     (src.repartition("bucket", "split")
      .sortWithinPartitions("bucket", "split", "doc_id")
      .write.mode("overwrite").partitionBy("bucket", "split")
@@ -515,13 +563,11 @@ def compact_sink(spark: SparkSession, out_dir: str,
             raise IOError(f"compaction rewrite row mismatch: {path}")
     if fail_at == "pre_lineage":
         raise RuntimeError("simulated crash at pre_lineage")
-    buckets = sorted(_list_attempts(
-        spark, os.path.join(out_dir, "clean"))[attempt])
-    _append_lineage(
-        spark, out_dir, run_id, buckets,
-        spark.read.schema(CLEAN_DDL + ", bucket int").parquet(clean_at),
-        _clean_stats(), t0, attempt, status="compacted")
-    committed.update(dict.fromkeys(buckets, attempt))
+    # the buckets with docs are exactly the dirs attempt M wrote
+    stats = {b: s for b, s in stats().items() if s[0]}
+    _append_lineage(spark, out_dir, run_id, stats, t0, attempt,
+                    status="compacted", fail_at=fail_at)
+    committed.update(dict.fromkeys(stats, attempt))
     _gc(spark, out_dir, ("clean", "bands"), committed)
 
 

@@ -17,13 +17,32 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from fast_pdf_parser_spark.config import ChunkOptions, ParseOptions
 from fast_pdf_parser_spark.operators.pipeline import extract_documents
 from fast_pdf_parser_spark.operators.relational import _HASH60_SPARK
 from fast_pdf_parser_spark.sources.synth import SPANS_DDL
+
+
+def _watch(spark: SparkSession, path: str, max_files_per_trigger: int,
+           schema=None) -> DataFrame:
+    """A file-watcher stream over the parquet files under *path*. Pass
+    *schema* when the dir may start EMPTY (a watcher's normal first
+    state); omitted, it is inferred from the files already present."""
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", str(max_files_per_trigger))
+            .parquet(path))
+
+
+def _to_memory(df: DataFrame, name: str) -> tuple[StreamingQuery, str]:
+    """(query, name): *df* appended to the in-memory sink *name* over
+    every file available at start."""
+    return (df.writeStream.outputMode("append").format("memory")
+            .queryName(name).trigger(availableNow=True).start(), name)
 
 
 def stream_extract(
@@ -50,11 +69,7 @@ def stream_extract(
     spans_out = os.path.join(output_dir, "spans")
     ckpt = os.path.join(output_dir, "_stream_checkpoint")
 
-    stream = (
-        spark.readStream.schema(SPANS_DDL)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(input_dir)
-    )
+    stream = _watch(spark, input_dir, max_files_per_trigger, SPANS_DDL)
 
     def process_batch(batch_df, epoch_id: int) -> None:
         result = extract_documents(batch_df, chunk_options, parse_options)
@@ -126,14 +141,7 @@ def stream_sessionize_events(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    schema = (
-        spark.read.parquet(events_path).schema
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(events_path)
-    )
+    stream = _watch(spark, events_path, max_files_per_trigger)
 
     output_ddl = "user_id bigint, session_id int, n_events bigint"
     state_ddl = "last_epoch double, session_id int, n_events bigint"
@@ -155,12 +163,7 @@ def stream_sessionize_events(
             GroupStateTimeout.NoTimeout,
         )
     )
-    name = "stream_sessions"
-    query = (
-        out.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    return query, name
+    return _to_memory(out, "stream_sessions")
 
 
 def tws_available() -> bool:
@@ -232,12 +235,7 @@ def stream_sessionize_tws(
         def close(self) -> None:
             pass
 
-    schema = spark.read.parquet(events_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(events_path)
-    )
+    stream = _watch(spark, events_path, max_files_per_trigger)
     out = (
         stream.groupBy("user_id")
         .transformWithStateInPandas(
@@ -247,12 +245,7 @@ def stream_sessionize_tws(
             timeMode="none",
         )
     )
-    name = "stream_sessions_tws"
-    query = (
-        out.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    return query, name
+    return _to_memory(out, "stream_sessions_tws")
 
 
 def stream_windowed_counts(
@@ -266,12 +259,7 @@ def stream_windowed_counts(
     late-data-tolerant counterpart of a batch group-by: events later than
     the watermark are dropped, finalized windows are emitted in append mode.
     Returns (query, sink name)."""
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(events_dir)
-    )
+    stream = _watch(spark, events_dir, max_files_per_trigger)
     agg = (
         # event-time watermarks require TIMESTAMP (not NTZ); session TZ is
         # pinned to UTC so the cast is value-preserving
@@ -282,12 +270,7 @@ def stream_windowed_counts(
         .select(F.col("window.start").alias("window_start"), "event_type",
                 "n", F.round("total_value", 4).alias("total_value"))
     )
-    name = "stream_windowed_counts"
-    query = (
-        agg.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    return query, name
+    return _to_memory(agg, "stream_windowed_counts")
 
 
 def stream_dedup_docs(
@@ -314,13 +297,7 @@ def stream_dedup_docs(
     file-watcher stream; batch inference over an empty dir throws. When
     omitted, the schema is inferred from files already present.
     """
-    if schema is None:
-        schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
+    stream = _watch(spark, docs_dir, max_files_per_trigger, schema)
     hashed = (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
         .withColumn(
@@ -330,13 +307,8 @@ def stream_dedup_docs(
         .withWatermark("ts", f"{watermark_minutes} minutes")
     )
     deduped = hashed.dropDuplicatesWithinWatermark(["content_hash"])
-    name = "stream_dedup_docs"
-    query = (
-        deduped.select("doc_id", "content_hash", "ts")
-        .writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    return query, name
+    return _to_memory(deduped.select("doc_id", "content_hash", "ts"),
+                      "stream_dedup_docs")
 
 
 def _clean_capped_stream(
@@ -368,13 +340,7 @@ def _clean_capped_stream(
     # stay in sync or the claimed batch/stream contract parity breaks
     hash60 = F.expr(_HASH60_SPARK.format(x="text"))  # already BIGINT
 
-    if schema is None:
-        schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
+    stream = _watch(spark, docs_dir, max_files_per_trigger, schema)
     hashed = (
         stream.withColumn("ts", F.col("ts").cast("timestamp"))
         .withColumn("content_hash", hash60)
@@ -460,12 +426,7 @@ def stream_clean_docs(
     capped = _clean_capped_stream(
         spark, docs_dir, domain_cap, watermark_minutes,
         max_files_per_trigger, schema, carry_text=False)
-    name = "stream_clean_docs"
-    query = (
-        capped.writeStream.outputMode("append").format("memory")
-        .queryName(name).trigger(availableNow=True).start()
-    )
-    return query, name
+    return _to_memory(capped, "stream_clean_docs")
 
 
 def stream_clean_write(
@@ -487,12 +448,13 @@ def stream_clean_write(
       idempotent under Spark's replay of a failed epoch (a restarted query
       re-offers the batch with the SAME epoch id);
     - one lineage row (plans/checkpoint._append_lineage, partition_id =
-      epoch id, attempt null, doc/byte totals read back from the DURABLE
-      epoch dir) appends to ``out/checkpoint`` AFTER the data write and
-      only if that epoch has no 'done' row yet — the same
-      data-then-lineage ordering and idempotence story as the batch sink
-      (write_docs_bucketed): a crash between the two replays the epoch
-      over its own partial output, never skips or duplicates it;
+      epoch id, attempt null, doc/byte totals observed during the data
+      write) is committed by the driver as ``out/checkpoint/
+      epoch-NNNNN.parquet`` AFTER the data write and only if that epoch
+      has no 'done' row yet — the same data-then-lineage ordering and
+      idempotence story as the batch sink (write_docs_bucketed): a crash
+      between the two replays the epoch over its own partial output,
+      never skips or duplicates it;
     - Spark's own ``checkpointLocation`` (``out/_stream_checkpoint``)
       carries source offsets + dedup/cap state across restarts.
 
@@ -503,9 +465,8 @@ def stream_clean_write(
     import time as _time
 
     from fast_pdf_parser_spark.plans.checkpoint import (
-        CLEAN_DDL,
         _append_lineage,
-        _clean_stats,
+        _observe_stats,
         completed_buckets,
     )
 
@@ -517,6 +478,8 @@ def stream_clean_write(
     def sink(batch_df, epoch_id: int) -> None:
         t0 = _time.time()
         edir = os.path.join(clean_dir, f"epoch={epoch_id}")
+        batch_df, stats = _observe_stats(batch_df, [int(epoch_id)],
+                                         F.lit(int(epoch_id)))
         batch_df.write.mode("overwrite").partitionBy("split").parquet(edir)
         if fail_at_epoch is not None and epoch_id >= fail_at_epoch:
             # crash AFTER the data write but BEFORE the lineage append —
@@ -525,11 +488,7 @@ def stream_clean_write(
         if int(epoch_id) in completed_buckets(
                 spark, os.path.join(out_dir, "checkpoint"), "stream"):
             return  # replay after a crash between lineage and commit
-        # explicit schema: an all-filtered epoch writes no data files
-        durable = spark.read.schema(CLEAN_DDL).parquet(edir) \
-            .withColumn("bucket", F.lit(int(epoch_id)))
-        _append_lineage(spark, out_dir, "stream", [int(epoch_id)], durable,
-                        _clean_stats(), t0, None)
+        _append_lineage(spark, out_dir, "stream", stats(), t0, None)
 
     return (
         capped.writeStream.foreachBatch(sink)
@@ -592,13 +551,7 @@ def stream_dedup_near_docs(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if schema is None:
-        schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(docs_dir)
-    )
+    stream = _watch(spark, docs_dir, max_files_per_trigger, schema)
     exploded = (
         stream.select("doc_id", F.explode(F.expr(_BANDS_EXPR)).alias("bk"))
         .select("doc_id", F.col("bk.band").alias("band"),

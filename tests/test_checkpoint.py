@@ -69,9 +69,13 @@ def test_rerun_is_noop(spark, corpus, tmp_path):
 
 
 def _job_count(spark, fn) -> int:
-    """Spark jobs *fn* runs, counted under its own job group."""
+    """Spark jobs *fn* runs, counted under its own job group (a fresh
+    name: an ``id()`` can be reused and would count an older group's
+    jobs too)."""
+    import uuid
+
     sc = spark.sparkContext
-    group = f"job_count_{id(fn)}"
+    group = f"job_count_{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         fn()
@@ -92,6 +96,8 @@ def test_resume_reads_log_once(spark, corpus, tmp_path):
     out = str(tmp_path / "run_once")
     assert _job_count(spark, lambda: _log_state(
         spark, out + "/checkpoint", "r")) == 0
+    assert _job_count(spark, lambda: lineage(spark, out).filter(
+        "status = 'done'").collect()) == 0
     run_with_checkpoint(spark, corpus, out, run_id="r", num_buckets=8,
                         max_concurrent_buckets=4)
     assert _job_count(spark, lambda: run_with_checkpoint(
@@ -105,6 +111,72 @@ def test_resume_reads_log_once(spark, corpus, tmp_path):
     assert _job_count(spark, lambda: write_docs_bucketed(
         spark, docs, clean, run_id="c", num_buckets=3,
         write_bands=True)) == 1
+
+
+@pytest.mark.parametrize("wave,jobs", [(4, 3), (1, 9)])
+def test_wave_is_one_job(spark, corpus, tmp_path, wave, jobs):
+    """A fresh 8-bucket run is the staging write plus ONE write job per
+    wave: stats are observed during the write and the driver commits the
+    lineage file without a job."""
+    out = str(tmp_path / f"one_job_{wave}")
+    assert _job_count(spark, lambda: run_with_checkpoint(
+        spark, corpus, out, run_id="r", num_buckets=8,
+        max_concurrent_buckets=wave)) == jobs
+    assert completed_buckets(spark, out + "/checkpoint", "r") == set(range(8))
+
+
+def _stats_corpus(spark):
+    """Five docs over 8 buckets (so some bucket is empty); doc 0's first
+    pdf span is truncated, i.e. a parse failure."""
+    from fast_pdf_parser_spark.sources.synth import make_doc
+
+    docs = [make_doc(i, 3, include_pdf=True, corrupt_doc_idx=0)
+            for i in range(5)]
+    return spark.createDataFrame(pd.DataFrame(docs), schema=SPANS_DDL)
+
+
+@pytest.mark.parametrize("sink", ["extract", "clean", "compact"])
+def test_lineage_stats_equal_written_rows(spark, tmp_path, sink):
+    """Each writer's lineage stats, observed during its write, equal the
+    per-bucket (docs, bytes, failures) recomputed from what it wrote; a
+    bucket without docs has a zero row (a 'compacted' commit names only
+    buckets with docs)."""
+    from fast_pdf_parser_spark.plans.checkpoint import (
+        compact_sink,
+        read_clean,
+        write_docs_bucketed,
+    )
+
+    out = str(tmp_path / f"stats_{sink}")
+    n = 8 if sink == "extract" else 4
+    status = "compacted" if sink == "compact" else "done"
+    want = dict.fromkeys(range(n), (0, 0, 0))
+    if sink == "extract":
+        result = run_with_checkpoint(spark, _stats_corpus(spark), out,
+                                     run_id="s", num_buckets=n,
+                                     max_concurrent_buckets=3)
+        per_doc = {(r.bucket, r.doc_id): (r.doc_bytes_decoded,
+                                          r.doc_parse_failures)
+                   for r in result.collect()}
+        for (b, _), (nbytes, fails) in per_doc.items():
+            d, y, f = want[b]
+            want[b] = (d + 1, y + nbytes, f + fails)
+        assert any(f for _, _, f in want.values())
+    else:
+        write_docs_bucketed(spark, _clean_docs(spark, n=3), out, run_id="s",
+                            num_buckets=n, write_bands=True)
+        if sink == "compact":
+            compact_sink(spark, out, run_id="opt")
+        for r in read_clean(spark, out).collect():
+            d, y, _ = want[r.bucket]
+            want[r.bucket] = (d + 1, y + len(r.clean_text.encode()), 0)
+        if sink == "compact":
+            want = {b: w for b, w in want.items() if w[0]}
+    assert len(want) < n or any(not w[0] for w in want.values())
+    got = {r.partition_id: (r.docs_parsed, r.bytes_decoded, r.parse_failures)
+           for r in lineage(spark, out).filter(f"status = '{status}'")
+           .collect()}
+    assert got == want
 
 
 def test_matches_direct_pipeline(spark, corpus, tmp_path):
@@ -178,11 +250,40 @@ def _assert_only_committed(spark, out, *roots):
             assert committed[k] == n, d
 
 
+def _lose_log_file(path):
+    """Lose one lineage file as a real loss would: with its Hadoop
+    ``.crc`` sidecar (a stale sidecar would block the rerun's commit of
+    the same ``attempt-NNNNN.parquet`` name)."""
+    os.remove(path)
+    crc = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def test_recommit_over_a_stale_crc_sidecar(spark, tmp_path):
+    """A lineage file deleted without its Hadoop ``.crc`` sidecar (a plain
+    ``rm``) leaves the sidecar behind: the rerun's commit of the same name
+    drops it, lands, and the log reads back — instead of moving the data
+    onto the stale sidecar, raising, and failing every later read's
+    checksum."""
+    import time
+
+    from fast_pdf_parser_spark.plans.checkpoint import _append_lineage
+
+    out = str(tmp_path / "stale_crc")
+    _append_lineage(spark, out, "r", {0: (1, 2, 0)}, time.time(), 1)
+    os.remove(out + "/checkpoint/attempt-00001.parquet")
+    assert os.path.exists(out + "/checkpoint/.attempt-00001.parquet.crc")
+    _append_lineage(spark, out, "r", {0: (3, 4, 0)}, time.time(), 1)
+    assert [(r.docs_parsed, r.bytes_decoded)
+            for r in lineage(spark, out).collect()] == [(3, 4)]
+
+
 def _crash_before_lineage(out, root, bucket):
     """The state a crash after a wave's data write and before its lineage
     append leaves, here on a rerun whose job also died between task commit
-    and job commit: the lineage part file(s) holding *bucket*'s row are
-    gone, and a committed task's copy of the bucket's files waits under
+    and job commit: the lineage file(s) holding *bucket*'s row are gone,
+    and a committed task's copy of the bucket's files waits under
     ``<root>/_temporary`` — which must never surface."""
     import glob as globmod
     import shutil
@@ -190,7 +291,7 @@ def _crash_before_lineage(out, root, bucket):
     dropped = 0
     for f in globmod.glob(out + "/checkpoint/*.parquet"):
         if bucket in set(pd.read_parquet(f)["partition_id"]):
-            os.remove(f)
+            _lose_log_file(f)
             dropped += 1
     assert dropped >= 1
     base = os.path.join(out, root)
@@ -588,7 +689,7 @@ def test_bandless_rewrite_drops_stale_band_buckets(spark, tmp_path):
                         num_buckets=3, write_bands=True)
     for f in globmod.glob(out + "/checkpoint/*.parquet"):
         if set(pd.read_parquet(f)["run_id"]) == {"day1"}:
-            os.remove(f)
+            _lose_log_file(f)
     corpus = write_docs_bucketed(spark, day1, out, run_id="day1",
                                  num_buckets=3, write_bands=False)
     assert corpus.count() > 0
@@ -786,23 +887,48 @@ def test_bandless_sink_reads_empty_band_table(spark, tmp_path):
 
 
 @pytest.mark.parametrize("fail_at", [
-    "clean_staged", "bands_staged", "pre_lineage"])
+    "clean_staged", "bands_staged", "pre_lineage", "lineage_hidden"])
 def test_compaction_crash_matrix(spark, tmp_path, fail_at):
     """A crash at EVERY step between compaction's data write and its
-    lineage commit leaves the committed content exactly as before, with
-    no recovery call; a rerun commits the compaction with content
-    identical to the pre-crash sink and only committed attempts on disk."""
-    from fast_pdf_parser_spark.plans.checkpoint import compact_sink
+    lineage commit — the last one between the hidden lineage write and
+    its rename — leaves the committed content and the log exactly as
+    before, with no recovery call; a rerun commits the compaction with
+    content identical to the pre-crash sink and only committed attempts
+    on disk. Committing an already committed attempt again raises, and
+    its hidden leftover is never read as a commit."""
+    import glob as globmod
+    import time
+
+    from fast_pdf_parser_spark.plans.checkpoint import (
+        _append_lineage,
+        compact_sink,
+    )
 
     out = _compact_fixture(spark, tmp_path, f"compact_{fail_at}")
     before = _sink_state(spark, out)
 
+    def log():
+        return sorted(tuple(r) for r in lineage(spark, out).collect())
+
+    log_before = log()
     with pytest.raises(RuntimeError, match="simulated crash"):
         compact_sink(spark, out, run_id="opt", fail_at=fail_at)
     assert _sink_state(spark, out) == before
+    assert log() == log_before
+    hidden = globmod.glob(out + "/checkpoint/_attempt-*.parquet.tmp")
+    assert len(hidden) == (fail_at == "lineage_hidden")
     compact_sink(spark, out, run_id="opt")
     assert _sink_state(spark, out) == before
     _assert_only_committed(spark, out, "clean", "bands")
+    assert not globmod.glob(out + "/checkpoint/_*")
+
+    committed = log()
+    m = max(r[-1] for r in committed)
+    with pytest.raises(Exception, match="FileAlreadyExistsException"):
+        _append_lineage(spark, out, "again", {0: (1, 1, 0)}, time.time(), m)
+    assert globmod.glob(out + "/checkpoint/_attempt-*.parquet.tmp")
+    assert log() == committed
+    assert _sink_state(spark, out) == before
 
 
 def test_train_bpe_releases_prior_checkpoints(spark):
