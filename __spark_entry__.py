@@ -707,10 +707,9 @@ def _crawl_increment_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                " '[ \\t\\n]+'))), i -> CAST(i AS INT)) AS ids",
                "CAST(size(split(trim(clean_text), '[ \\t\\n]+')) AS INT)"
                " AS n_ids"))
-    back = write_packed_sequences(inc, base + "_pack",
+    back = write_packed_sequences(enc, base + "_pack",
                                   seq_len=CRAWL_SEQ_LEN,
-                                  seqs_per_shard=64, shard_width=100,
-                                  encoded=enc)
+                                  seqs_per_shard=64, shard_width=100)
     pk = back.agg(F.count("*").alias("n_seqs"),
                   F.sum("n_tokens").alias("n_toks")).collect()[0]
     n_seqs, n_toks = int(pk["n_seqs"]), int(pk["n_toks"] or 0)
@@ -839,8 +838,7 @@ def _train_assembly_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _scratch("tapack", sf_name)
     _fs_delete(spark, out)
     back = write_packed_sequences(enc, out, seq_len=TRAIN_ASM_SEQ_LEN,
-                                  seqs_per_shard=64, shard_width=100,
-                                  encoded=enc)
+                                  seqs_per_shard=64, shard_width=100)
     pk = back.agg(
         F.count("*").alias("s"), F.sum("n_tokens").alias("t"),
         F.sum("n_docs").alias("slices"),
@@ -906,9 +904,8 @@ def _text_pack_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_name = os.path.basename(os.path.normpath(sf_dir))
     out = _scratch("pack", sf_name)
     _fs_delete(spark, out)
-    back = write_packed_sequences(spark.table("documents"), out,
-                                  seq_len=128, seqs_per_shard=64,
-                                  shard_width=100, encoded=enc)
+    back = write_packed_sequences(enc, out, seq_len=128, seqs_per_shard=64,
+                                  shard_width=100)
     per_shard = (back.groupBy(F.col("shard").cast("long").alias("shard"))
                  .agg(
         F.count("*").cast("long").alias("n_seqs"),
@@ -947,17 +944,12 @@ def _text_encode_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prepare(spark, sf_dir)
     # the small sf corpus is one parquet split — spread the compute-bound
     # encoder across cores (at 100 TB the scan splits make this a no-op
-    # knob; see encode_token_ids docstring).  Encode ONCE and materialize
-    # (the _text_encode_pack_geometry idiom): pack_token_ids' default form
-    # runs a second id-free counting pass over the whole corpus for the
-    # shard totals, i.e. ~1.33x the dominant tokenizer compute (guide
-    # §1.2: don't compute things twice) — with `encoded` supplied it
-    # derives totals from the materialized ids instead.
+    # knob; see encode_token_ids docstring).  Materialized: the pack reads
+    # the encoding in two plan branches (ids and shard totals).
     enc = materialize(encode_token_ids(
         spark.table("documents"),
-        num_partitions=spark.sparkContext.defaultParallelism
-    ).filter(F.col("n_ids") > 0))
-    packed = pack_token_ids(spark.table("documents"), encoded=enc)
+        num_partitions=spark.sparkContext.defaultParallelism))
+    packed = pack_token_ids(enc)
     return packed.select(
         "seq_id", "n_docs", "n_tokens",
         F.aggregate("ids", F.lit(0).cast("bigint"),
@@ -994,10 +986,8 @@ def _text_encode_pack_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
       docs_packed              — docs that packed >= 1 token (DuckDB
                                  re-derives: non-blank text count)
-      total_tokens_conserved   — sum(seq n_tokens) == sum(encode n_ids)
-                                 == sum(count_token_ids n_ids): the pack
-                                 lost/duplicated nothing AND the id-free
-                                 counting pass agrees with the encoder
+      total_tokens_conserved   — sum(seq n_tokens) == sum(encode n_ids):
+                                 the pack lost/duplicated nothing
       seq_count_formula        — n_seqs == ceil(T / seq_len) with seq_ids
                                  contiguous 0..n_seqs-1
       all_full_but_last        — every seq but the last holds exactly
@@ -1018,20 +1008,19 @@ def _text_encode_pack_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fast_pdf_parser_spark.operators.packing import (
         SEQ_LEN,
         SHARD_WIDTH,
-        count_token_ids,
         encode_token_ids,
         pack_token_ids,
     )
     from fast_pdf_parser_spark.util import materialize
 
     _prepare(spark, sf_dir)
-    docs = spark.table("documents")
     # encode ONCE: feeds the pack, the totals and the ids-sum
     # conservation check
     enc = materialize(encode_token_ids(
-        docs, num_partitions=spark.sparkContext.defaultParallelism
+        spark.table("documents"),
+        num_partitions=spark.sparkContext.defaultParallelism
     ).filter(F.col("n_ids") > 0))
-    packed = pack_token_ids(docs, encoded=enc)
+    packed = pack_token_ids(enc)
 
     e = enc.agg(
         F.count("*").alias("d"),
@@ -1040,10 +1029,6 @@ def _text_encode_pack_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
                           lambda a, x: a + x)).alias("ids_sum"),
     ).collect()[0]
     d_enc, t_enc, ids_sum_enc = int(e["d"]), int(e["t"]), int(e["ids_sum"])
-    t_count = int(count_token_ids(
-        docs, num_partitions=spark.sparkContext.defaultParallelism)
-        .filter(F.col("n_ids") > 0)
-        .agg(F.sum("n_ids")).collect()[0][0])
 
     # expected doc-slice count from prefix sums — same shard-stitch shape
     # as the pack itself (per-shard window + tiny offsets relation), so
@@ -1087,7 +1072,7 @@ def _text_encode_pack_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         ("docs_packed", d_enc),
         ("total_tokens_conserved",
-         int(t_pack == t_enc == t_count)),
+         int(t_pack == t_enc)),
         ("seq_count_formula",
          int(s == -(-t_pack // SEQ_LEN) and int(p["lo"]) == 0
              and int(p["hi"]) == s - 1 and int(p["uniq"]) == s)),

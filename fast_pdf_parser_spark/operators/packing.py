@@ -10,8 +10,9 @@ loop):
 1. ``encode_token_ids`` — zero-shuffle Arrow-batched mapInPandas: one
    ``array<int>`` of ids per document (byte fallback included, so any
    input byte sequence encodes; ``decode`` inverts it exactly).
-2. ``pack_token_ids`` — the distributed concat-then-split pack, the way a
-   1000-executor cluster must run it: per-shard prefix-sum windows in
+2. ``pack_token_ids`` — the distributed concat-then-split pack of one
+   encoded relation (materialize a real-tokenizer encoding first: the
+   pack reads it twice), the way a 1000-executor cluster must run it: per-shard prefix-sum windows in
    parallel (shards are contiguous doc_id ranges, so shard order ==
    global order), a tiny one-row-per-shard totals relation turned into
    base offsets by a trivially small running sum, a broadcast equi-join
@@ -107,10 +108,9 @@ def _pruned(docs: DataFrame) -> DataFrame:
 def _driver_vocab(vocab_path: str | None) -> str | None:
     """Resolve the vocabulary ONCE, on the driver (the pipeline.py:559-567
     invariant): per-worker discovery (env var / drop-in file) can resolve
-    differently across executors — or between the count pass and the
-    encode pass — silently mixing two tokenizations within one pack, which
-    would corrupt every slice offset downstream. An explicit path an
-    executor cannot read fails loudly instead."""
+    differently across executors, silently mixing two tokenizations within
+    one encoding, which would corrupt every slice offset downstream. An
+    explicit path an executor cannot read fails loudly instead."""
     if vocab_path is not None:
         return vocab_path
     from fast_pdf_parser_spark.functions.tokenizer import find_real_vocab
@@ -118,63 +118,20 @@ def _driver_vocab(vocab_path: str | None) -> str | None:
     return find_real_vocab()
 
 
-def count_token_ids(docs: DataFrame, vocab_path: str | None = None,
-                    num_partitions: int = 0) -> DataFrame:
-    """(doc_id, text, ...) → (doc_id, n_ids int) — the id-free counting
-    pass. ``count_tokens`` rides the same trie regex as ``encode`` and is
-    fuzz-pinned to len(encode(text)) (tests/test_tokenizer.py), so this is
-    the cheap way to learn the pack geometry without materializing (or
-    recomputing) a single id array."""
-    import pandas as pd
-
-    from fast_pdf_parser_spark.util import ship_package
-
-    ship_package(docs.sparkSession)
-    vocab_path = _driver_vocab(vocab_path)
-    pruned = _pruned(docs)
-    if num_partitions:
-        pruned = pruned.repartition(num_partitions, "doc_id")
-
-    def count_fold(batches):
-        from fast_pdf_parser_spark.functions.tokenizer import get_tokenizer
-
-        tok = get_tokenizer(vocab_path)
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_ids": tok.count_tokens_many(list(pdf["text"])),
-            })
-
-    return pruned.mapInPandas(
-        count_fold, schema="doc_id bigint, n_ids int")
-
-
-def pack_token_ids(docs: DataFrame, seq_len: int = SEQ_LEN,
-                   shard_width: int = SHARD_WIDTH,
-                   vocab_path: str | None = None,
-                   num_partitions: int = 0,
-                   encoded: DataFrame | None = None) -> DataFrame:
+def pack_token_ids(encoded: DataFrame, seq_len: int = SEQ_LEN,
+                   shard_width: int = SHARD_WIDTH) -> DataFrame:
     """Packed training sequences with materialized ids: one row per
     sequence — (seq_id, n_docs, n_tokens, ids array<int>). Every sequence
     except the last has exactly ``seq_len`` tokens; ids concatenate the
     member documents' encodings in doc_id order.
 
-    ``encoded``: optional pre-encoded relation (doc_id, ids array<int>,
-    n_ids int) to pack INSTEAD of running the real tokenizer — the pack
-    machinery is encoder-agnostic. Used by the driver's text_pack_write
-    oracle row, whose synthetic encoding (ids = 1..n for a whitespace
-    word count) both SQL engines can derive, making the whole
-    pack+sink+read-back chain value-checkable; cheap projections may be
-    evaluated in both the ids branch and the totals branch (only the
-    real encoder needs the separate counting pass below).
-
-    ``num_partitions`` governs the TOKENIZER passes (the Python encode/
-    count folds run on the input partitioning, so input skew there means
-    straggler executors) and is deliberately inert when ``encoded`` is
-    supplied: the first thing the pack does with ``encoded`` is the shard
-    window, whose own hash exchange on ``shard`` already re-distributes
-    the relation — a doc_id repartition in front of it would be a second,
-    wasted shuffle of the full id stream.
+    ``encoded`` is (doc_id, ids array<int>, n_ids int) — encode_token_ids'
+    output or any other encoding (the pack is encoder-agnostic: the
+    driver's text_pack_write row packs a SQL-derivable ids = 1..n).
+    Documents with ``n_ids = 0`` pack nothing. The pack reads ``encoded``
+    in two plan branches, the ids and the shard totals, so an expensive
+    encoding must come in materialized (``util.materialize``), or the
+    encoder runs once per branch.
 
     Scale note: the shard-offset running sum below is a single-partition
     window, but over the SHARD-TOTALS relation (one row per
@@ -184,36 +141,16 @@ def pack_token_ids(docs: DataFrame, seq_len: int = SEQ_LEN,
     touching the packed output, since shard boundaries only affect WHERE
     prefix sums are stitched, not the doc_id-ordered token stream."""
     shard = (F.col("doc_id") / shard_width).cast("long")
-    if encoded is None:
-        # one vocabulary for BOTH passes, resolved here on the driver —
-        # the count and encode passes must tokenize identically or every
-        # slice offset downstream is wrong
-        vocab_path = _driver_vocab(vocab_path)
-        enc = encode_token_ids(docs, vocab_path, num_partitions) \
-            .filter(F.col("n_ids") > 0)
-        # shard totals come from a separate ID-FREE counting pass:
-        # deriving them from `local` would put the encoder in TWO plan
-        # branches and run it twice over the whole corpus (2x the
-        # dominant compute at scale); counting is ~3x cheaper than
-        # encoding and count == len(encode) is fuzz-pinned, so the
-        # geometry is identical
-        totals_src = (count_token_ids(docs, vocab_path, num_partitions)
-                      .filter(F.col("n_ids") > 0))
-    else:
-        enc = (encoded.select("doc_id", "ids", "n_ids")
-               .filter(F.col("n_ids") > 0))
-        totals_src = (encoded.select("doc_id", "n_ids")
-                      .filter(F.col("n_ids") > 0))
+    enc = (encoded.select("doc_id", "ids", "n_ids")
+           .filter(F.col("n_ids") > 0))
 
     w_local = (Window.partitionBy("shard").orderBy("doc_id")
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     local = (enc.withColumn("shard", shard)
              .withColumn("local_end", F.sum("n_ids").over(w_local)))
 
-    shard_tot = (totals_src
-                 .withColumn("shard", shard)
-                 .groupBy("shard").agg(
-                     F.sum("n_ids").alias("shard_tokens")))
+    shard_tot = (enc.withColumn("shard", shard).groupBy("shard")
+                 .agg(F.sum("n_ids").alias("shard_tokens")))
     w_off = (Window.orderBy("shard")
              .rowsBetween(Window.unboundedPreceding, -1))
     offsets = shard_tot.select(
@@ -255,13 +192,10 @@ def pack_token_ids(docs: DataFrame, seq_len: int = SEQ_LEN,
 SEQS_PER_SHARD = 8192  # sequences per training-shard file group
 
 
-def write_packed_sequences(docs: DataFrame, out_dir: str,
+def write_packed_sequences(encoded: DataFrame, out_dir: str,
                            seq_len: int = SEQ_LEN,
                            seqs_per_shard: int = SEQS_PER_SHARD,
-                           shard_width: int = SHARD_WIDTH,
-                           vocab_path: str | None = None,
-                           num_partitions: int = 0,
-                           encoded: DataFrame | None = None) -> DataFrame:
+                           shard_width: int = SHARD_WIDTH) -> DataFrame:
     """The last mile of the training-data path: pack_token_ids landed on
     disk as shard-partitioned parquet (``out/shard=K/``) — the artifact a
     data loader actually opens. Shards are contiguous seq_id ranges
@@ -273,10 +207,7 @@ def write_packed_sequences(docs: DataFrame, out_dir: str,
     column). Validation belongs to the caller/test: total tokens and the
     all-full-but-last invariant survive the round trip
     (tests/test_packing.py::test_write_packed_sequences_roundtrip)."""
-    packed = pack_token_ids(docs, seq_len, shard_width,
-                            vocab_path=vocab_path,
-                            num_partitions=num_partitions,
-                            encoded=encoded)
+    packed = pack_token_ids(encoded, seq_len, shard_width)
     # sort key must start with the dynamic-partition column: otherwise
     # the writer inserts its own SortExec(shard) and within-shard seq_id
     # order would rest on unspecified sort stability
@@ -288,7 +219,7 @@ def write_packed_sequences(docs: DataFrame, out_dir: str,
     # explicit schema: an all-filtered corpus writes only _SUCCESS and a
     # schema-inferred read would raise AFTER the write durably succeeded
     # (the write_docs_bucketed guard, plans/checkpoint.py)
-    return docs.sparkSession.read.schema(
+    return encoded.sparkSession.read.schema(
         "seq_id bigint, n_docs int, n_tokens int, ids array<int>, "
         "shard bigint").parquet(out_dir)
 

@@ -534,8 +534,8 @@ def extract_documents(
     at ingest with :func:`split_spans_table` — the storage layout for docs
     too large to ever materialize as one row (BENCH/GIANT_DOC_r6.json:
     512 MB/1 GB docs at 1 g heap). It is routed through the split path
-    with ``pre_split=True`` and unioned in, making this the ONE entry
-    point over a corpus stored as contiguous-bulk + pre-split-tail.
+    and unioned in, making this the ONE entry point over a corpus stored
+    as contiguous-bulk + pre-split-tail.
 
     Session conf: sets ``spark.sql.execution.arrow.maxRecordsPerBatch``
     to ``parse_options.arrow_max_records_per_batch`` on the caller's
@@ -574,8 +574,7 @@ def extract_documents(
             base, chunk_options, parse_options, vocab_path))
     if split_df is not None:
         parts.append(extract_documents_split(
-            split_df, chunk_options, parse_options, vocab_path,
-            pre_split=True))
+            split_df, chunk_options, parse_options, vocab_path))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -617,7 +616,7 @@ def split_spans_table(df: DataFrame) -> DataFrame:
     skew tail: authored ONCE at ingest (the author pays the whole-row
     materialization once, on a node sized for it), after which every
     pipeline run over the tail reads span-sized rows only — see
-    extract_documents_split(pre_split=True)."""
+    extract_documents_split."""
     ordered = F.array_sort(F.col("spans"), _span_cmp)
     return df.select("doc_id", F.posexplode(ordered).alias("pos", "span"))
 
@@ -627,11 +626,10 @@ def extract_documents_split(
     chunk_options: ChunkOptions = ChunkOptions(),
     parse_options: ParseOptions = ParseOptions(),
     vocab_path: str | None = None,
-    pre_split: bool = False,
 ) -> DataFrame:
     """Skew-tail variant of extract_documents for GIANT documents: one row
     per SPAN instead of one row per document, so no single Arrow batch —
-    and, with ``pre_split``, no single JVM row — ever holds a whole
+    and, over a pre-split input, no single JVM row — ever holds a whole
     document.
 
     Why it exists: the zero-shuffle path materializes each document as one
@@ -644,17 +642,17 @@ def extract_documents_split(
     the fold state across Arrow batch boundaries. Output is byte-identical
     to extract_documents (pinned by test).
 
-    Two input shapes:
+    Two input shapes, told apart by the ``span`` column:
 
-    - ``pre_split=False``: ``df`` is the standard (doc_id, spans) table;
-      the span array is sorted and exploded here. Convenience form — the
-      scan + explode still materializes each source row ONCE in the JVM
-      (UnsafeRow projection), so the heap floor stays ~2.5-3x the largest
-      document (vs ~10x on the contiguous path).
-    - ``pre_split=True``: ``df`` is already (doc_id, pos, span) in fold
-      order (author it with split_spans_table — one-time, at ingest).
-      No giant row exists anywhere: the JVM floor collapses to ordinary
-      row sizes (BENCH/GIANT_DOC_r6.json).
+    - (doc_id, spans): the standard table, converted here with
+      split_spans_table. Convenience form — the scan + explode still
+      materializes each source row ONCE in the JVM (UnsafeRow
+      projection), so the heap floor stays ~2.5-3x the largest document
+      (vs ~10x on the contiguous path).
+    - (doc_id, pos, span): already in fold order (author it with
+      split_spans_table — one-time, at ingest). No giant row exists
+      anywhere: the JVM floor collapses to ordinary row sizes
+      (BENCH/GIANT_DOC_r6.json).
 
     Cost: ONE shuffle of the span data (as bounded-size rows) — this is
     NOT the default path. At 100 TB, size-bucket the corpus (the A2 token
@@ -671,20 +669,14 @@ def extract_documents_split(
         str(parse_options.arrow_max_records_per_batch),
     )
 
-    if pre_split:
-        flat = df.select("doc_id", "pos", "span")
-        if chunk_options.page_limit > 0:
-            # pos is the fold order, so the pushdown is a plain filter —
-            # on a pos-partitioned store this also prunes whole files
-            flat = flat.filter(F.col("pos") < chunk_options.page_limit)
-    else:
-        ordered = F.array_sort(F.col("spans"), _span_cmp)
-        if chunk_options.page_limit > 0:
-            # same pushdown as the contiguous path; _DocFold's own limit
-            # check then never triggers (the slice already applied it)
-            ordered = F.slice(ordered, 1, chunk_options.page_limit)
-        flat = df.select("doc_id",
-                         F.posexplode(ordered).alias("pos", "span"))
+    if "span" not in df.columns:
+        df = split_spans_table(df)
+    flat = df.select("doc_id", "pos", "span")
+    if chunk_options.page_limit > 0:
+        # pos is the fold order, so the pushdown is a plain filter — on a
+        # pos-partitioned store this also prunes whole files; _DocFold's
+        # own limit check then never triggers
+        flat = flat.filter(F.col("pos") < chunk_options.page_limit)
     n = parse_options.num_partitions \
         or spark.sparkContext.defaultParallelism
     # pos only orders the rows: the fold reads (doc_id, span)

@@ -4167,8 +4167,8 @@ _NFC_INJECT = ("CASE CAST(doc_id % 4 AS INT) "
 # docs_packed is genuinely re-derived (the space-trim proxy matches the
 # Unicode prune on this corpus — the text_pack_manifest precedent); the
 # five invariant rows oracle against literal 1s, so any pack that drops
-# a token, duplicates a slice, mis-counts sequences or disagrees with
-# the id-free counting pass flips a bit and hash-mismatches. The Spark
+# a token, duplicates a slice or mis-counts sequences flips a bit and
+# hash-mismatches. The Spark
 # side (__spark_entry__._text_encode_pack_geometry) documents each.
 HYBRID_ORACLES["text_encode_pack_geometry"] = """
 SELECT 'docs_packed' AS invariant, CAST(count(*) AS BIGINT) AS val

@@ -268,7 +268,8 @@ def _append_lineage(spark: SparkSession, out_dir: str, run_id: str,
     driver with no Spark job. It is written hidden (log readers skip ``_``
     files, so a crash mid-write commits nothing), then renamed without
     overwrite to ``attempt-NNNNN.parquet`` (a stream epoch's:
-    ``epoch-NNNNN.parquet``): a second commit of one name raises."""
+    ``epoch-NNNNN.parquet``): a second commit of one name raises and
+    deletes its hidden file."""
     buckets = sorted(stats)
     wall, extra = divmod(int((time.time() - t0) * 1000), len(buckets))
     schema = to_arrow_schema(StructType.fromDDL(CHECKPOINT_SCHEMA))
@@ -296,8 +297,12 @@ def _append_lineage(spark: SparkSession, out_dir: str, run_id: str,
         fs.delete(hadoop.Path(os.path.join(log, f".{name}.crc")), False)
     rename = spark.sparkContext._gateway.new_array(hadoop.Options.Rename, 1)
     rename[0] = hadoop.Options.Rename.NONE
-    hadoop.FileContext.getFileContext(hidden.toUri(), fs.getConf()).rename(
-        hidden, final, rename)
+    try:
+        hadoop.FileContext.getFileContext(hidden.toUri(), fs.getConf()) \
+            .rename(hidden, final, rename)
+    except Exception:
+        fs.delete(hidden, False)  # and its .crc
+        raise
 
 
 def _commit_waves(spark: SparkSession, docs: DataFrame, out_dir: str,

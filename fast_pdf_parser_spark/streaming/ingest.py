@@ -92,7 +92,7 @@ def stream_extract(
 
 
 def fold_user_sessions(user_id, ts_chunks, state, gap_seconds):
-    """Shared per-key session fold for both stateful APIs.
+    """The per-key session fold of stream_sessionize_events.
 
     ``ts_chunks``: iterable of pandas-timestamp sequences (one per chunk of
     the micro-batch). Timestamps are sorted across ALL chunks before
@@ -164,88 +164,6 @@ def stream_sessionize_events(
         )
     )
     return _to_memory(out, "stream_sessions")
-
-
-def tws_available() -> bool:
-    """True when the transformWithState Python driver worker can run: it
-    needs the protobuf runtime (pyspark imports google.protobuf.descriptor
-    in its state-server plumbing)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def stream_sessionize_tws(
-    spark: SparkSession,
-    events_path: str,
-    gap_seconds: int = 1800,
-    max_files_per_trigger: int = 4,
-):
-    """Incremental sessionization on Spark 4's ``transformWithStateInPandas``
-    (the successor of applyInPandasWithState: typed ValueState via a
-    StatefulProcessor handle, RocksDB-backed on a cluster, timers for TTL).
-
-    Same semantics as stream_sessionize_events — closed sessions are
-    emitted, the open session lives in state across micro-batches — so the
-    two stateful APIs can be A/B-verified against each other and against
-    the batch oracle twin (events_sessionize). Returns (query, sink name).
-
-    Requires a working protobuf runtime (the transformWithState driver
-    worker imports google.protobuf.descriptor); absent here, raises
-    NotImplementedError up front instead of crashing the streaming query —
-    applyInPandasWithState (stream_sessionize_events) is the fallback with
-    identical semantics.
-    """
-    if not tws_available():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs google.protobuf, which this "
-            "environment lacks; use stream_sessionize_events instead"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, LongType, StructField, StructType,
-    )
-
-    state_schema = StructType([
-        StructField("last_epoch", DoubleType()),
-        StructField("session_id", IntegerType()),
-        StructField("n_events", LongType()),
-    ])
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("session", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            closed, new_state = fold_user_sessions(
-                user_id, (pdf["ts"].tolist() for pdf in rows),
-                self._state.get() if self._state.exists() else None,
-                gap_seconds)
-            self._state.update(new_state)
-            yield pd.DataFrame(
-                closed, columns=["user_id", "session_id", "n_events"])
-
-        def close(self) -> None:
-            pass
-
-    stream = _watch(spark, events_path, max_files_per_trigger)
-    out = (
-        stream.groupBy("user_id")
-        .transformWithStateInPandas(
-            SessionProcessor(),
-            outputStructType="user_id bigint, session_id int, n_events bigint",
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-    return _to_memory(out, "stream_sessions_tws")
 
 
 def stream_windowed_counts(
@@ -536,10 +454,7 @@ def stream_dedup_near_docs(
     claim: first owner wins; within a micro-batch the smallest doc_id
     claims an unowned band — deterministic under replay) → foreachBatch
     per-doc verdict (keep iff no band hit a foreign owner) appended
-    idempotently per epoch. transformWithStateInPandas is the Spark-4
-    successor for the claim stage; this environment lacks its protobuf
-    runtime (see tws_available), and applyInPandasWithState has identical
-    semantics here.
+    idempotently per epoch.
 
     State scale: one (band, band_key) -> owner row per distinct band
     bucket — 4 rows of ~24 bytes per unique doc, hash-partitioned by the

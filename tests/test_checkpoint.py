@@ -894,8 +894,8 @@ def test_compaction_crash_matrix(spark, tmp_path, fail_at):
     its rename — leaves the committed content and the log exactly as
     before, with no recovery call; a rerun commits the compaction with
     content identical to the pre-crash sink and only committed attempts
-    on disk. Committing an already committed attempt again raises, and
-    its hidden leftover is never read as a commit."""
+    on disk. Committing an already committed attempt again raises and
+    leaves no hidden file behind."""
     import glob as globmod
     import time
 
@@ -926,7 +926,8 @@ def test_compaction_crash_matrix(spark, tmp_path, fail_at):
     m = max(r[-1] for r in committed)
     with pytest.raises(Exception, match="FileAlreadyExistsException"):
         _append_lineage(spark, out, "again", {0: (1, 1, 0)}, time.time(), m)
-    assert globmod.glob(out + "/checkpoint/_attempt-*.parquet.tmp")
+    assert not globmod.glob(out + "/checkpoint/_attempt-*.parquet.tmp")
+    assert not globmod.glob(out + "/checkpoint/._attempt-*.parquet.tmp.crc")
     assert log() == committed
     assert _sink_state(spark, out) == before
 

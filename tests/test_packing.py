@@ -8,13 +8,14 @@ ordering shows up as a wrong id at some position.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from fast_pdf_parser_spark.functions.tokenizer import get_tokenizer
 from fast_pdf_parser_spark.operators.packing import (
     encode_token_ids,
     pack_token_ids,
+    write_packed_sequences,
 )
+from fast_pdf_parser_spark.util import materialize
 
 TEXTS = [
     "The quick brown fox jumps over the lazy dog.",
@@ -54,6 +55,17 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+@pytest.fixture
+def encoded(docs):
+    """The real-tokenizer encoding, materialized as every costly encoding
+    handed to the pack must be: the pack reads it in two plan branches."""
+    enc = materialize(encode_token_ids(docs))
+    try:
+        yield enc
+    finally:
+        enc.unpersist()
+
+
 def test_encode_matches_tokenizer_and_roundtrips(docs):
     tok = get_tokenizer()
     by_id = {r["doc_id"]: list(r["ids"])
@@ -68,9 +80,9 @@ def test_encode_matches_tokenizer_and_roundtrips(docs):
 
 
 @pytest.mark.parametrize("seq_len", [16, 64])
-def test_pack_matches_reference_exactly(docs, seq_len):
+def test_pack_matches_reference_exactly(encoded, seq_len):
     got = {r["seq_id"]: r
-           for r in pack_token_ids(docs, seq_len=seq_len,
+           for r in pack_token_ids(encoded, seq_len=seq_len,
                                    shard_width=3).collect()}
     order = sorted(zip([7, 2, 11, 23, 5, 17, 31, 13, 29, 3, 19, 37], TEXTS))
     want = reference_pack([t for _, t in order], seq_len)
@@ -83,43 +95,17 @@ def test_pack_matches_reference_exactly(docs, seq_len):
         assert got[s]["n_tokens"] == seq_len
 
 
-@pytest.mark.parametrize("kwargs", [{}, {"seq_len": 16, "shard_width": 3}])
-def test_encode_once_pack_equals_two_pass(docs, kwargs):
-    """text_encode_pack's encode-once path: packing a materialized
-    real-tokenizer encoding via ``encoded=`` must give exactly the default
-    form's sequences (which re-runs the tokenizer's counting pass for the
-    shard totals)."""
-    from fast_pdf_parser_spark.util import materialize
-
-    def rows(df):
-        return sorted((r["seq_id"], r["n_docs"], r["n_tokens"], list(r["ids"]))
-                      for r in df.collect())
-
-    enc = materialize(encode_token_ids(docs).filter(F.col("n_ids") > 0))
-    try:
-        got = rows(pack_token_ids(docs, encoded=enc, **kwargs))
-    finally:
-        enc.unpersist()
-    assert got == rows(pack_token_ids(docs, **kwargs))
-    assert got  # the fixture packs real tokens
-
-
-def test_write_packed_sequences_roundtrip(docs, spark, tmp_path):
+def test_write_packed_sequences_roundtrip(encoded, spark, tmp_path):
     """The durable training shards must read back byte-identical to the
     in-memory pack: same sequences, same ids, correct shard assignment,
     ordered streamable ranges."""
     from pyspark.sql import functions as F
 
-    from fast_pdf_parser_spark.operators.packing import (
-        pack_token_ids,
-        write_packed_sequences,
-    )
-
     out = str(tmp_path / "shards")
-    back = write_packed_sequences(docs, out, seq_len=16, seqs_per_shard=4,
+    back = write_packed_sequences(encoded, out, seq_len=16, seqs_per_shard=4,
                                   shard_width=3)
     mem = {r["seq_id"]: list(r["ids"])
-           for r in pack_token_ids(docs, seq_len=16, shard_width=3)
+           for r in pack_token_ids(encoded, seq_len=16, shard_width=3)
            .collect()}
     got = back.collect()
     assert {r["seq_id"]: list(r["ids"]) for r in got} == mem
@@ -135,25 +121,23 @@ def test_write_packed_sequences_roundtrip(docs, spark, tmp_path):
     # an all-filtered corpus must read back empty, not crash
     empty = spark.createDataFrame([(1, "   ")], "doc_id long, text string")
     assert write_packed_sequences(
-        empty, str(tmp_path / "empty_shards")).count() == 0
+        encode_token_ids(empty), str(tmp_path / "empty_shards")).count() == 0
     pruned = back.filter(F.col("shard") == 0)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert pruned.count() == min(4, len(mem))
     assert "PartitionFilters: [isnotnull(shard" in plan
 
 
-def test_pack_plan_no_corpus_wide_single_partition(docs):
+def test_pack_plan_no_corpus_wide_single_partition(encoded):
     """The only SinglePartition exchange feeds the tiny one-row-per-shard
     offsets relation (same contract as text_pack_manifest's plan pin);
     the documents-scale stages are hash-partitioned, and the offsets join
     is a broadcast."""
-    plan = pack_token_ids(docs)._jdf.queryExecution() \
+    plan = pack_token_ids(encoded)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     singles = plan.split("Exchange SinglePartition")
     # at most the one shard-offsets running-sum stage
     assert len(singles) - 1 <= 1, plan
-    # the ENCODER runs exactly once: shard totals come from the id-free
-    # counting pass, never from a second encode branch
-    assert plan.count("encode_fold") == 1, plan
-    assert plan.count("count_fold") == 1, plan
+    # the pack runs no tokenizer: both branches read the materialized ids
+    assert "encode_fold" not in plan and "count_fold" not in plan, plan

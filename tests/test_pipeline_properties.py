@@ -204,8 +204,7 @@ def test_split_path_byte_identical(spark):
                    extract_documents_split(df, opts, popts).collect())
         assert a == b
         c = sorted(tuple(r) for r in
-                   extract_documents_split(pre, opts, popts,
-                                           pre_split=True).collect())
+                   extract_documents_split(pre, opts, popts).collect())
         assert a == c
 
 

@@ -114,52 +114,6 @@ def test_watermarked_window_counts_match_batch(spark, tmp_path):
                    for ws, _ in missing)
 
 
-def test_transform_with_state_sessionize_matches_batch(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 typed-state API) must emit the
-    same closed sessions as the applyInPandasWithState path and the batch
-    cumsum twin. Gated: the API's driver worker needs protobuf, absent in
-    this container (mirror of the reference's GTEST_SKIP pattern)."""
-    import shutil
-
-    import pytest
-
-    from fast_pdf_parser_spark.streaming.ingest import (
-        stream_sessionize_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        with pytest.raises(NotImplementedError):
-            stream_sessionize_tws(spark, str(tmp_path), gap_seconds=1800)
-        pytest.skip("protobuf runtime absent: transformWithState gated off")
-
-    events_dir = tmp_path / "events_landing_tws"
-    events_dir.mkdir()
-    shutil.copy("/root/testdata/sf0.001/events.parquet",
-                events_dir / "part-0.parquet")
-    q, name = stream_sessionize_tws(spark, str(events_dir), gap_seconds=1800)
-    q.awaitTermination(180)
-    streamed = {
-        (r.user_id, r.session_id): r.n_events
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-
-    import __spark_entry__ as e
-
-    e._prepare(spark, "/root/testdata/sf0.001")
-    from fast_pdf_parser_spark.operators.relational import spark_sql
-
-    batch = spark.sql(spark_sql("events_sessionize")).collect()
-    last = {}
-    for r in batch:
-        last[r.user_id] = max(last.get(r.user_id, -1), r.session_id)
-    expected = {
-        (r.user_id, r.session_id): r.n_events
-        for r in batch if r.session_id != last[r.user_id]
-    }
-    assert streamed == expected
-
-
 def test_fold_user_sessions_cross_chunk_order():
     """The session fold must sort timestamps ACROSS chunks: out-of-order
     chunks (multiple files / Arrow batches per trigger) fold identically to

@@ -249,10 +249,7 @@ def main() -> None:
         spans = bulk
     elif use_split:
         spans = spark.read.parquet(split_path)
-
-        def extract_fn(df, parse_options):
-            return extract_documents_split(
-                df, parse_options=parse_options, pre_split=True)
+        extract_fn = extract_documents_split
     else:
         spans = spark.read.parquet(path)
         extract_fn = extract_documents
