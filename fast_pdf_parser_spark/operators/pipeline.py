@@ -64,6 +64,12 @@ OUTPUT_DDL = (
 )
 
 
+def _utf8_len(text: str) -> int:
+    """UTF-8 byte length without copying ASCII text (``isascii`` is O(1):
+    CPython keeps the flag on the string)."""
+    return len(text) if text.isascii() else len(text.encode("utf-8"))
+
+
 class _DocFold:
     """Incremental per-document fold: spans pushed ONE AT A TIME in
     document order (the (offset, kind, text) sort order), CORE rows
@@ -165,7 +171,7 @@ class _DocFold:
         elif kind == "text":
             self.total_pages += 1
             text = s["text"] or ""
-            self.bytes_decoded += len(text.encode("utf-8"))
+            self.bytes_decoded += _utf8_len(text)
             if self._chunker is None:
                 self._chunker = StreamingChunker(self._tok, self._opt)
             yield from self._chunk_rows(
@@ -180,7 +186,7 @@ class _DocFold:
                     html_main_content,
                 )
                 raw_html = s["text"] or ""
-                self.bytes_decoded += len(raw_html.encode("utf-8"))
+                self.bytes_decoded += _utf8_len(raw_html)
                 main = html_main_content(raw_html)
                 del raw_html
             except Exception as exc:

@@ -13,14 +13,19 @@ Pipeline (readability-style, public heuristics):
    boilerplate containers (``head/nav/header/footer/aside``) are removed
    entirely, however deeply nested;
 2. block extraction — ``h1-h6 / p / li / pre`` elements become candidate
-   blocks in document order. The parser is a real ``html.parser``
-   state machine, not a regex: optional close tags (``</p>``/``</li>``
-   are OPTIONAL in valid HTML and pervasively omitted on real pages) are
-   implied per the spec — an open ``<p>`` closes when any block-level
-   element opens or its parent closes; an open ``<li>`` closes on a
-   sibling ``<li>`` or when its list closes; an unclosed block at EOF is
-   still emitted. Nested block content (``<li><p>x</p></li>``) joins its
-   outer block once — never double-emitted;
+   blocks in document order, driven by ``_MainContent``'s start/end/data
+   handlers. Optional close tags (``</p>``/``</li>`` are OPTIONAL in valid
+   HTML and pervasively omitted on real pages) are implied per the spec —
+   an open ``<p>`` closes when any block-level element opens or its parent
+   closes; an open ``<li>`` closes on a sibling ``<li>`` or when its list
+   closes; an unclosed block at EOF is still emitted. Nested block content
+   (``<li><p>x</p></li>``) joins its outer block once — never
+   double-emitted. Two tokenizers feed those handlers, same events, same
+   output (the pdf lexer's two-strategy pattern): one compiled tag regex
+   (``_fast_main_content``) for markup inside the subset it recognizes —
+   tags, comments, ``<!DOCTYPE>``, ``<script>``/``<style>`` raw text —
+   and the stdlib ``html.parser`` state machine (``_parser_main_content``)
+   for every other document;
 3. boilerplate scoring — a block is dropped when its LINK DENSITY
    (characters inside ``<a>`` / total characters) exceeds 0.5 and it is
    short (<200 chars): menu rows, pagination, "related links" — the
@@ -42,6 +47,15 @@ from html import unescape as _unescape
 from html.parser import HTMLParser
 
 _WS_RUN = re.compile(r"[ \t\r\n]+")
+
+
+def _collapse_ws(text: str) -> str:
+    """``_WS_RUN.sub(" ", text)`` without the regex pass when every
+    whitespace run in ``text`` is already one plain space."""
+    if "  " in text or "\n" in text or "\t" in text or "\r" in text:
+        return _WS_RUN.sub(" ", text)
+    return text
+
 
 LINK_DENSITY_MAX = 0.5
 LINK_SHORT_CHARS = 200
@@ -103,7 +117,7 @@ class _MainContent(HTMLParser):
             self._anchor = 0 if force else self._anchor - 1
             if self._anchor == 0:
                 self._linked += len(
-                    _WS_RUN.sub(" ", "".join(self._abuf)).strip())
+                    _collapse_ws("".join(self._abuf)).strip())
                 self._abuf = []
 
     def _flush(self) -> None:
@@ -117,7 +131,7 @@ class _MainContent(HTMLParser):
             if text.strip():
                 self.lines.extend(text.split("\n"))
             return
-        text = _WS_RUN.sub(" ", "".join(parts)).strip()
+        text = _collapse_ws("".join(parts)).strip()
         if not text:
             return
         if linked / len(text) > LINK_DENSITY_MAX and \
@@ -224,13 +238,107 @@ class _MainContent(HTMLParser):
             if self._anchor:
                 self._abuf.append(data)
 
-    def close(self) -> None:  # unclosed block at EOF is still content
-        super().close()
+    def finish(self) -> str:
+        """End of input, for either tokenizer: flush the block still open
+        at EOF (it is content) and return the main-content text."""
         if self._block:
             self._flush()
-
-    def fallback_text(self) -> str:
+        if self.saw_block:
+            # block structure existed: an empty result here means every
+            # block was REJECTED as boilerplate — honor that verdict, do not
+            # resurrect the rejected text via the fallback
+            return "\n".join(self.lines)
+        # No recognized block elements at all (div-soup pages, bare
+        # fragments): never silently drop the document — return the visible
+        # text, boilerplate containers already removed. Tags become spaces
+        # (adjacent divs must not concatenate words), runs collapse.
         return _WS_RUN.sub(" ", "".join(self._fb)).strip()
+
+
+# The fast tokenizer's subset, one alternative per construct after a '<':
+# a start tag (group 1 name, group 2 the '/' of <x/>), an end tag (3), a
+# comment (4 its body) or a <!DOCTYPE ...> (5). Names are [a-zA-Z0-9] only
+# and attributes are separated by [ \t\n\r\f] (where html.parser's tag name
+# ends; not \s), plain or quoted; within that subset html.parser ends each
+# construct at the same '>' and emits the same events. Any other '<' matches
+# the empty tail (lastindex None): a bare '<', <![CDATA[, <?...>, other <!
+# declarations, end tags with attributes, unterminated constructs. Those,
+# and a comment whose body holds '--', send the document to html.parser.
+_TAG = re.compile(r"""<(?:
+    ([a-zA-Z][a-zA-Z0-9]*)
+    (?:[ \t\n\r\f]+[^\s/>"'=<]+
+       (?:[ \t\n\r\f]*=[ \t\n\r\f]*(?:"[^"]*"|'[^']*'|[^\s"'=<>`]+))?)*
+    [ \t\n\r\f]*(/?)>
+  | /\s*([a-zA-Z][a-zA-Z0-9]*)\s*>
+  | !--(.*?)--\s*>
+  | (![dD][oO][cC][tT][yY][pP][eE][^>]*)>
+)?""", re.VERBOSE | re.DOTALL)
+# html.parser's own raw-text close rule for <script>/<style> (set_cdata_mode)
+_RAW_CLOSE = {tag: re.compile(r"</\s*%s\s*>" % tag, re.I)
+              for tag in HTMLParser.CDATA_CONTENT_ELEMENTS}
+
+
+def _fast_main_content(html: str) -> str | None:
+    """The fast strategy: one ``_TAG.search`` loop drives ``_MainContent``'s
+    handlers with the events html.parser would emit — tag names lowercased,
+    ``attrs`` empty (no handler reads them), text between constructs
+    unescaped. None when ``html`` leaves the subset (the caller then runs
+    ``_parser_main_content`` on a fresh parser: this pass already changed
+    handler state)."""
+    parser = _MainContent()
+    start_tag = parser.handle_starttag
+    end_tag = parser.handle_endtag
+    data = parser.handle_data
+    search = _TAG.search
+    pos = 0
+    try:
+        while (m := search(html, pos)) is not None:
+            at = m.start()
+            if at > pos:
+                text = html[pos:at]
+                data(_unescape(text) if "&" in text else text)
+            pos = m.end()
+            kind = m.lastindex
+            if kind == 2:
+                tag = m.group(1).lower()
+                start_tag(tag, [])
+                if m.group(2):
+                    end_tag(tag)  # <x/>: handle_startendtag's two events
+                elif tag in _RAW_CLOSE:
+                    close = _RAW_CLOSE[tag].search(html, pos)
+                    if close is None:
+                        return None
+                    if close.start() > pos:
+                        data(html[pos:close.start()])  # raw, not unescaped
+                    end_tag(tag)
+                    pos = close.end()
+            elif kind == 3:
+                end_tag(m.group(3).lower())
+            elif kind is None or (kind == 4 and "--" in m.group(4)):
+                return None
+            # otherwise a comment or <!DOCTYPE>: no handler reads either
+        if pos < len(html):
+            text = html[pos:]
+            data(_unescape(text) if "&" in text else text)
+        return parser.finish()
+    except Exception:
+        # a handler error: html.parser meets the same event and contains it
+        return None
+
+
+def _parser_main_content(html: str) -> str:
+    """The html.parser strategy: the fallback for input outside the fast
+    subset, and the reference the fast strategy is tested against."""
+    parser = _MainContent()
+    try:
+        parser.feed(html)
+        parser.close()
+        return parser.finish()
+    except Exception:
+        # tag soup beyond the parser: never drop the document — strip every
+        # tag and return the visible text
+        return _WS_RUN.sub(
+            " ", _unescape(re.sub(r"<[^>]*>", " ", html))).strip()
 
 
 def html_main_content(html: str) -> str:
@@ -238,23 +346,6 @@ def html_main_content(html: str) -> str:
     chunker consumes (headings as ``#``-runs, list items as ``- ``,
     ``pre`` verbatim). Boilerplate containers and high-link-density short
     blocks are dropped; optional/omitted close tags are implied."""
-    parser = _MainContent()
-    try:
-        parser.feed(html or "")
-        parser.close()
-    except Exception:
-        # tag soup beyond the parser: never drop the document — strip every
-        # tag and return the visible text
-        return _WS_RUN.sub(
-            " ", _unescape(re.sub(r"<[^>]*>", " ", html or ""))).strip()
-    if parser.saw_block:
-        # block structure existed: an empty result here means every block
-        # was REJECTED as boilerplate — honor that verdict, do not resurrect
-        # the rejected text via the fallback
-        return "\n".join(parser.lines)
-    # No recognized block elements at all (div-soup pages, bare fragments):
-    # never silently drop the document — strip every tag and return the
-    # visible text, boilerplate containers already removed above. Tags
-    # become spaces (adjacent divs must not concatenate words), runs
-    # collapse.
-    return parser.fallback_text()
+    html = html or ""
+    out = _fast_main_content(html)
+    return _parser_main_content(html) if out is None else out

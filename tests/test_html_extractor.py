@@ -1,9 +1,17 @@
 """HTML main-content extraction tests: boilerplate strip, link-density
-heuristic, markdown mapping, builder roundtrip, pipeline e2e."""
+heuristic, markdown mapping, builder roundtrip, pipeline e2e, and the
+equality of the two tokenizers (the compiled tag regex and its html.parser
+fallback)."""
 
 import pandas as pd
+import pytest
+from hypothesis import given, settings, strategies as st
 
 from fast_pdf_parser_spark.sources.html_extractor import (
+    _WS_RUN,
+    _collapse_ws,
+    _fast_main_content,
+    _parser_main_content,
     html_main_content,
 )
 from fast_pdf_parser_spark.sources.synth import (
@@ -166,6 +174,7 @@ def test_fuzz_never_raises_no_tags_leak():
         soup = "".join(rnd.choice(frags) for _ in range(rnd.randint(0, 40)))
         out = html_main_content(soup)
         assert isinstance(out, str)
+        assert out == _parser_main_content(soup), soup
     # well-formed block docs never leak markup
     for i in range(10):
         out = html_main_content(html_from_page(i, 0))
@@ -339,3 +348,91 @@ def test_drop_container_implies_block_close():
     # script/style are phrasing content: they do NOT close an open <p>
     html2 = "<p>one<script>var x=1;</script> two</p>"
     assert html_main_content(html2) == "one two"
+
+
+# -- the fast tokenizer against its html.parser reference -------------------
+
+_TAG_NAMES = st.sampled_from(
+    ["p", "li", "ul", "h2", "pre", "div", "a", "nav", "main", "br", "img",
+     "P", "LI", "Div", "H1", "A"])
+_ATTRS = st.sampled_from(
+    ["href", "class", "data-x", "hidden", "href=x", "href=/x/", "title=a>b",
+     "title='a>b'", 'title="a>b"', "href = 'q'", "alt=\"it's\""])
+_WS = st.sampled_from([" ", "  ", "\n", "\t"])
+_START = st.builds(
+    lambda name, attrs, close: "<" + name + "".join(
+        sep + a for sep, a in attrs) + close,
+    _TAG_NAMES, st.lists(st.tuples(_WS, _ATTRS), max_size=3),
+    st.sampled_from([">", " >", "/>", " />"]))
+_END = st.builds(lambda name, ws: "</" + name + ws + ">",
+                 _TAG_NAMES, st.sampled_from(["", " ", "\n"]))
+_RAW = st.builds(
+    lambda tag, body, lead, upper, trail: (
+        f"<{tag}>{body}</{lead}{tag.upper() if upper else tag}{trail}>"),
+    st.sampled_from(["script", "style"]),
+    st.sampled_from(["", "var a = 1 < 2;", "</p><p>x", "if (a&&b) {}"]),
+    st.sampled_from(["", " "]), st.booleans(), st.sampled_from(["", " "]))
+_TEXT = st.sampled_from(
+    ["word", "two words", " ", "\n", "&amp;", "&nbsp", "&nbsp;x", "&#65;",
+     "a & b", "x > y", "\u00e9\u20ac", "&lt;tag&gt;"])
+_MISC = st.sampled_from(
+    ["<!-- note -->", "<!---->", "<!-- a - b --\n>", "<!DOCTYPE html>",
+     "<!doctype html>"])
+_MARKUP = st.lists(st.one_of(_START, _END, _RAW, _TEXT, _MISC),
+                   max_size=30).map("".join)
+
+
+@settings(max_examples=300, deadline=None)
+@given(html=_MARKUP)
+def test_fast_strategy_equals_parser_on_generated_markup(html):
+    # everything the generator emits is inside the fast subset: the fast
+    # strategy engages and its output is the html.parser path's, exactly
+    assert _fast_main_content(html) == _parser_main_content(html)
+
+
+def test_fast_strategy_engages_on_every_synth_page():
+    pages = [s["text"] for i in range(40)
+             for s in make_doc(i, seed=11, include_html=True)["spans"]
+             if s["kind"] == "html"]
+    assert len(pages) > 100
+    for html in pages:
+        fast = _fast_main_content(html)
+        assert fast is not None
+        assert fast == html_main_content(html) == _parser_main_content(html)
+
+
+@pytest.mark.parametrize("html, handled", [
+    # outside the subset: the fast strategy reports "not handled"
+    ("<p>a < b</p>", False),                          # bare '<' in text
+    ("<p>x</p><", False),                             # bare '<' at EOF
+    ("<p>a<![CDATA[x<y]]>b</p>", False),              # CDATA section
+    ("<?xml version='1.0'?><p>t</p>", False),         # processing instr.
+    ("<!ENTITY e 'x'><p>t</p>", False),               # other <! decl.
+    ("<p>a<!x>b</p>", False),                         # bogus comment
+    ("<my-tag>x</my-tag><p>t</p>", False),            # '-' in a tag name
+    ("<p>x</p:q>", False),                            # ':' in an end tag
+    ("<p>x</p class='y'>", False),                    # end tag attributes
+    ("<p>text<a href='x'", False),                    # unterminated tag
+    ("<p>text<!-- open", False),                      # unterminated comment
+    ("<p>t</p><script>var a = 1;", False),            # unterminated script
+    ("<p>t</p><style>a{}</style", False),             # unterminated style
+    ("<p>a<!-- x -- y -->b</p>", False),              # '--' in a comment
+    # inside the subset, at its edges
+    ("<script>a</ script>b</script>", True),          # stdlib close rule
+    ("<p>a<style>x</STYLE >b</p>", True),
+    ("<!DOCTYPE html><P>x<BR/>y</P >", True),
+    ("<p title='a>b' data-x=y>t</p>", True),
+    ("<p>a &amp; b &nbsp c &#65;</p>", True),
+])
+def test_fast_strategy_fallback_boundary(html, handled):
+    reference = _parser_main_content(html)
+    assert _fast_main_content(html) == (reference if handled else None)
+    assert html_main_content(html) == reference
+
+
+@settings(max_examples=200, deadline=None)
+@given(text=st.text(alphabet=" \t\r\n\x0b\x0c\xa0ab", max_size=12))
+def test_collapse_ws_equals_the_regex(text):
+    # both tokenizers share the handlers, so this shortcut is pinned
+    # against the regex it skips, not against the html.parser path
+    assert _collapse_ws(text) == _WS_RUN.sub(" ", text)
