@@ -141,11 +141,6 @@ def _prepare(spark: SparkSession, sf_dir: str) -> None:
     # target stays max(total/maxParallelism, floor) on any cluster).
     spark.conf.set(
         "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-    # probe_band_table raises the parquet In-pushdown threshold for the
-    # duration of its consuming query (the session conf is the only
-    # lever the v1 reader honors); resetting it here bounds the leak to
-    # that one invocation instead of every later scan (advice r9)
-    spark.conf.unset("spark.sql.parquet.pushdown.inFilterThreshold")
     # free every block util.materialize persisted in earlier queries: they
     # keep their lineage, so a DataFrame still held from an earlier query
     # recomputes instead of pinning its intermediates on the heap

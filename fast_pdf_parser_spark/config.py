@@ -9,12 +9,14 @@ Reference:
   public default remains 0.
 - ``ParseOptions``: include/fast_pdf_parser/fast_pdf_parser.h:12-19
   (thread_count=hw, max_memory_per_page=50MB, batch_size=10).
-  ``thread_count`` maps to Spark task parallelism, ``batch_size`` to Arrow
-  ``maxRecordsPerBatch``, the per-page memory budget to the giant-doc
-  routing threshold. The reference's extract_positions/fonts projection
-  flags are not options here: the pipeline selects only (doc_id, spans)
-  before the fold, and ``pdf_lexer.extract_page_structured`` takes them
-  as its own parameters.
+  ``thread_count`` maps to Spark task parallelism, ``batch_size`` to the
+  fold's working slice (``arrow_max_records_per_batch`` rows of each Arrow
+  input batch), the per-page memory budget to Spark's own Arrow byte cap
+  (``spark.sql.execution.arrow.maxBytesPerBatch``) and the giant-doc
+  routing threshold. No option is applied by writing session conf. The
+  reference's extract_positions/fonts projection flags are not options
+  here: the pipeline selects only (doc_id, spans) before the fold, and
+  ``pdf_lexer.extract_page_structured`` takes them as its own parameters.
 """
 
 from __future__ import annotations
@@ -69,8 +71,11 @@ class ParseOptions(_PartialUpdate):
     # Spark analogue of the reference thread pool size; 0 = leave the
     # session's parallelism alone.
     num_partitions: int = 0
-    # Arrow batch sizing — the analogue of the reference's batch_size=10 /
-    # 50MB-per-page memory budget (fast_pdf_parser.h:15,18).
+    # Rows of each Arrow input batch the fold converts and folds at once
+    # (zero-copy slices; <= 0 = the whole batch) — the analogue of the
+    # reference's batch_size=10 (fast_pdf_parser.h:18). The JVM→Python
+    # batch itself is bounded by Spark's maxBytesPerBatch, the analogue
+    # of its 50MB-per-page budget (fast_pdf_parser.h:15).
     arrow_max_records_per_batch: int = 64
     # Giant-doc auto-routing threshold in span-text bytes (the Spark
     # analogue of the reference's per-page/batch memory budget,

@@ -101,8 +101,8 @@ def find_real_vocab() -> str | None:
     """Locate a genuine ``cl100k_base.tiktoken`` if one is present.
 
     Resolution order: ``$FAST_PDF_PARSER_SPARK_VOCAB``, then the package
-    DATA DIR drop-in. Discovery is DRIVER-SIDE only: extract_documents
-    resolves this once and threads the explicit path into the UDF closure,
+    DATA DIR drop-in. Discovery is DRIVER-SIDE only: every Spark job
+    resolves it once (driver_vocab) and threads the path into its closure,
     so one job never mixes two tokenizations — an executor that cannot
     read the resolved path fails loudly (per-worker re-discovery could
     silently fall back to the fixture vocab on executors where the env
@@ -123,6 +123,16 @@ def find_real_vocab() -> str | None:
         if c and os.path.isfile(c):
             return c
     return None
+
+
+def driver_vocab(vocab_path: str | None = None) -> str | None:
+    """The vocabulary a Spark job threads into its UDF closures:
+    ``vocab_path`` itself, else :func:`find_real_vocab` resolved ONCE, on
+    the driver. Per-worker discovery (env var / drop-in file) can resolve
+    differently on executors than on the driver, silently mixing two
+    tokenizations within one job; an explicit path an executor cannot read
+    fails loudly instead."""
+    return vocab_path if vocab_path is not None else find_real_vocab()
 
 
 def parse_vocab_text(data: str) -> dict[bytes, int]:

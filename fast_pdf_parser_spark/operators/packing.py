@@ -39,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from fast_pdf_parser_spark.functions.tokenizer import driver_vocab
+
 SEQ_LEN = 128          # tokens per packed training sequence
 SHARD_WIDTH = 100      # contiguous doc_ids per prefix-sum shard
 
@@ -65,7 +67,9 @@ def encode_token_ids(docs: DataFrame, vocab_path: str | None = None,
     from fast_pdf_parser_spark.util import ship_package
 
     ship_package(docs.sparkSession)  # workers need the tokenizer module
-    vocab_path = _driver_vocab(vocab_path)
+    # one tokenization per encoding: a mixed one would corrupt every
+    # slice offset downstream
+    vocab_path = driver_vocab(vocab_path)
     pruned = _pruned(docs)
     if num_partitions:
         pruned = pruned.repartition(num_partitions, "doc_id")
@@ -103,19 +107,6 @@ def _pruned(docs: DataFrame) -> DataFrame:
     return (docs.select("doc_id", "text")
             .filter(F.col("text").rlike(
                 r"[^\p{IsWhite_Space}\x1c-\x1f]")))
-
-
-def _driver_vocab(vocab_path: str | None) -> str | None:
-    """Resolve the vocabulary ONCE, on the driver (the pipeline.py:559-567
-    invariant): per-worker discovery (env var / drop-in file) can resolve
-    differently across executors, silently mixing two tokenizations within
-    one encoding, which would corrupt every slice offset downstream. An
-    explicit path an executor cannot read fails loudly instead."""
-    if vocab_path is not None:
-        return vocab_path
-    from fast_pdf_parser_spark.functions.tokenizer import find_real_vocab
-
-    return find_real_vocab()
 
 
 def pack_token_ids(encoded: DataFrame, seq_len: int = SEQ_LEN,

@@ -23,9 +23,13 @@ Spark-first design (SURVEY.md §3.1 "Spark lifecycle equivalent"):
   selects exactly the spans process_document would keep, regardless of the
   array's stored order.
 - Skew: documents range from 1 to >1000 pages (chunk_test_summary.md:9-44).
-  ``repartition_for_skew`` salts doc rows uniformly and AQE re-coalesces;
-  ``arrow_max_records_per_batch`` bounds how many docs share one Arrow batch
-  (the analogue of the reference's batch_size=10 / 50MB-per-page budget).
+  ``repartition_for_skew`` salts doc rows uniformly and AQE re-coalesces.
+  The reference's batch_size=10 is the fold's own working slice:
+  ``arrow_max_records_per_batch`` bounds how many input rows one fold piece
+  converts and folds before its output is flushed. Its 50MB-per-page budget
+  is Spark's ``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MiB by
+  default), which caps the JVM→Python batch; the pipeline writes no session
+  conf.
 
 Interleaving contract (SURVEY.md §1.3, FIXTURES.md §2): per doc_id the output
 is an ordered span sequence where each maximal RUN of text/pdf spans is
@@ -50,7 +54,10 @@ import base64
 from pyspark.sql import DataFrame, functions as F
 
 from fast_pdf_parser_spark.config import ChunkOptions, ParseOptions
-from fast_pdf_parser_spark.functions.tokenizer import get_tokenizer
+from fast_pdf_parser_spark.functions.tokenizer import (
+    driver_vocab,
+    get_tokenizer,
+)
 
 # Output: one row per output span, plus ChunkResult metadata
 # (hierarchical_chunker.h:19-26) and doc-level lineage metrics.
@@ -383,14 +390,15 @@ def _span_rows(doc_ids, span_col):
 
 
 def _fold_batches(inputs, tokenizer, chunk_options: ChunkOptions):
-    """The one fold loop: ``inputs`` yields, per input Arrow batch, an
-    iterable of (doc_id, spans in fold order, complete) pieces (from
-    _whole_docs or _span_rows); row-tuple batches come out via _FlushState.
+    """The one fold loop: ``inputs`` yields, per input slice (of at most
+    ``arrow_max_records_per_batch`` rows of an Arrow batch), an iterable of
+    (doc_id, spans in fold order, complete) pieces (from _whole_docs or
+    _span_rows); row-tuple batches come out via _FlushState.
 
     A piece continues the open document when its doc_id matches and the
     previous piece was not ``complete``; the open document carries across
-    input batches. Completed-doc rows are flushed at the end of EVERY
-    input batch, so output never waits on the next input batch's fold."""
+    input slices and batches. Completed-doc rows are flushed at the end of
+    EVERY input slice, so output never waits on the next slice's fold."""
     state = _FlushState()
     fold: _DocFold | None = None
 
@@ -419,11 +427,16 @@ def _fold_batches(inputs, tokenizer, chunk_options: ChunkOptions):
 
 
 def _make_processor(chunk_options: ChunkOptions, vocab_path: str | None,
-                    column: str, pieces_of):
+                    column: str, pieces_of, max_records: int):
     """The mapInArrow processor of every extraction path: (doc_id,
     ``column``) Arrow batches in, OUTPUT_DDL Arrow batches out.
     ListArray.to_pylist is the single input conversion; ``pieces_of``
-    (_whole_docs or _span_rows) says what one input row is."""
+    (_whole_docs or _span_rows) says what one input row is.
+
+    Each input batch is folded in zero-copy slices of at most
+    ``max_records`` rows (<= 0: the whole batch), and completed rows are
+    flushed after each slice: the slice, not the JVM's batch, bounds how
+    much input is converted to Python objects at once."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
@@ -444,10 +457,13 @@ def _make_processor(chunk_options: ChunkOptions, vocab_path: str | None,
 
         def inputs():
             for batch in batches:
-                doc_ids = batch.column("doc_id").to_pylist()
-                values = batch.column(column).to_pylist()
-                del batch  # spans free as they are folded
-                yield pieces_of(doc_ids, values)
+                n = max_records if max_records > 0 else batch.num_rows
+                for start in range(0, batch.num_rows, max(n, 1)):
+                    piece = batch.slice(start, n)
+                    doc_ids = piece.column("doc_id").to_pylist()
+                    values = piece.column(column).to_pylist()
+                    del piece  # spans free as they are folded
+                    yield pieces_of(doc_ids, values)
 
         for rows in _fold_batches(inputs(), tokenizer, chunk_options):
             yield rows_to_batch(rows)
@@ -477,7 +493,9 @@ def repartition_for_skew(df: DataFrame, num_partitions: int) -> DataFrame:
     Documents cannot be split (the passes need whole-doc locality), so the
     best general strategy is statistically uniform placement of doc rows —
     ``repartition`` on a hash of doc_id — plus AQE coalescing of the small
-    partitions afterwards. The arrow batch cap bounds per-batch memory.
+    partitions afterwards. Spark's Arrow byte cap
+    (``spark.sql.execution.arrow.maxBytesPerBatch``) bounds per-batch
+    memory.
 
     When the input is already well-distributed parquet, prefer
     ``num_partitions=0`` (no shuffle) and control task granularity with
@@ -543,27 +561,12 @@ def extract_documents(
     and unioned in, making this the ONE entry point over a corpus stored
     as contiguous-bulk + pre-split-tail.
 
-    Session conf: sets ``spark.sql.execution.arrow.maxRecordsPerBatch``
-    to ``parse_options.arrow_max_records_per_batch`` on the caller's
-    session and leaves it set. The conf is read when the plan executes,
-    so two lazy extracts built with different values both run with the
-    one set last.
+    Writes no session conf: ``parse_options.arrow_max_records_per_batch``
+    travels in the fold's closure (see :func:`_make_processor`), so two
+    lazy extracts built with different values each run with their own.
     """
     chunk_options.validate()
-    spark = df.sparkSession
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        str(parse_options.arrow_max_records_per_batch),
-    )
-    if vocab_path is None:
-        # resolve the vocab ONCE, on the driver, and thread the explicit
-        # path into the UDF closure: per-worker discovery (env var / data
-        # dir) can resolve differently on executors than on the driver,
-        # silently mixing two tokenizations within one job. An explicit
-        # path an executor cannot read fails loudly instead.
-        from fast_pdf_parser_spark.functions.tokenizer import find_real_vocab
-
-        vocab_path = find_real_vocab()
+    vocab_path = driver_vocab(vocab_path)
 
     base = df.select("doc_id", "spans")
     parts: list[DataFrame] = []
@@ -610,7 +613,8 @@ def _extract_contiguous(
         pruned = repartition_for_skew(pruned, parse_options.num_partitions)
 
     return pruned.mapInArrow(
-        _make_processor(chunk_options, vocab_path, "spans", _whole_docs),
+        _make_processor(chunk_options, vocab_path, "spans", _whole_docs,
+                        parse_options.arrow_max_records_per_batch),
         schema=OUTPUT_DDL,
     )
 
@@ -634,9 +638,10 @@ def extract_documents_split(
     vocab_path: str | None = None,
 ) -> DataFrame:
     """Skew-tail variant of extract_documents for GIANT documents: one row
-    per SPAN instead of one row per document, so no single Arrow batch —
-    and, over a pre-split input, no single JVM row — ever holds a whole
-    document.
+    per SPAN instead of one row per document, so no single Arrow batch
+    holds a whole document larger than Spark's Arrow byte cap
+    (``spark.sql.execution.arrow.maxBytesPerBatch``, 64 MiB by default) —
+    and, over a pre-split input, no single JVM row ever holds one.
 
     Why it exists: the zero-shuffle path materializes each document as one
     JVM row feeding one Arrow batch — a 512 MB document needs ~5 GB of
@@ -665,16 +670,10 @@ def extract_documents_split(
     estimate is the cheap proxy), store the giant-doc bucket pre-split,
     and route only it here; the bulk keeps the zero-shuffle plan.
 
-    Session conf: sets ``spark.sql.execution.arrow.maxRecordsPerBatch``
-    as :func:`extract_documents` does, and leaves it set.
+    Like :func:`extract_documents`, writes no session conf.
     """
     chunk_options.validate()
     spark = df.sparkSession
-    spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        str(parse_options.arrow_max_records_per_batch),
-    )
-
     if "span" not in df.columns:
         df = split_spans_table(df)
     flat = df.select("doc_id", "pos", "span")
@@ -689,14 +688,9 @@ def extract_documents_split(
     flat = (flat.repartition(n, "doc_id")
             .sortWithinPartitions("doc_id", "pos")
             .select("doc_id", "span"))
-
-    if vocab_path is None:
-        from fast_pdf_parser_spark.functions.tokenizer import find_real_vocab
-
-        vocab_path = find_real_vocab()
-
     return flat.mapInArrow(
-        _make_processor(chunk_options, vocab_path, "span", _span_rows),
+        _make_processor(chunk_options, driver_vocab(vocab_path), "span",
+                        _span_rows, parse_options.arrow_max_records_per_batch),
         schema=OUTPUT_DDL,
     )
 

@@ -683,10 +683,11 @@ _NEAR_TAIL_DUCK = _NEAR_CTES_DUCK + "\n" + _NEAR_VERDICT_DUCK
 def near_incremental_spark_sql(corpus_view: str) -> str:
     """Spark side of dedup_incremental_near with corpus bands DERIVED ON
     READ — kept as the storage-free form (and as the equality baseline
-    for the stored-band path, tests/test_plans.py), but at 100 TB this
-    re-tokenizes and re-minhashes the ENTIRE corpus per batch; the
-    product path is near_incremental_stored_spark_sql over the band
-    table the sink persists (r7 verdict #1)."""
+    for the stored-band path, tests/test_checkpoint.py), but at 100 TB
+    this re-tokenizes and re-minhashes the ENTIRE corpus per batch; the
+    product path is near_verdict_prebanded_sql over the band table the
+    sink persists, pruned by plans/checkpoint.probe_band_table (r7
+    verdict #1)."""
     return (
         "WITH " + _NEAR_BATCH_CTE + ",\n"
         + f"corpus AS (SELECT doc_id, clean_text AS text "
@@ -704,8 +705,8 @@ def band_signatures_spark_sql(view: str, text_col: str = "clean_text") -> str:
     dedup_minhash_signatures/dedup_lsh_pairs derive it ad hoc, the
     bucketed sink persists it per bucket at write time
     (plans/checkpoint.write_docs_bucketed(write_bands=True)), and
-    near_incremental_stored_spark_sql serves candidate generation from
-    the persisted copy. One definition means stored and derived bands
+    near_verdict_prebanded_sql serves candidate generation from the
+    persisted copy. One definition means stored and derived bands
     are equal by construction (asserted in tests/test_checkpoint.py)."""
     return (
         f"WITH corpus AS (SELECT doc_id, {text_col} AS text FROM {view}),\n"
@@ -730,11 +731,13 @@ def near_verdict_prebanded_sql(batch_view: str, batch_band_view: str,
     band signatures arrive as a view (derived once, also used to prune the
     stored band-table scan — plans/checkpoint.probe_band_table), and the
     corpus side is the PRUNED stored band table. Same _NEAR_TAIL chain, so
-    verdict semantics are identical to near_incremental_stored_spark_sql
-    by construction: pruning drops only whole (band, band_key) groups
-    whose key no batch row carries (the predicate is on band_key alone),
-    which can never join in cand and never change a surviving group's
-    bsize cap."""
+    verdict semantics are identical to near_incremental_spark_sql (bands
+    derived on read) by construction: pruning drops only whole (band,
+    band_key) groups whose key no batch row carries (the predicate is on
+    band_key alone), which can never join in cand and never change a
+    surviving group's bsize cap. Candidate generation scans only the
+    band columns; the corpus text is read only by the jaccard verify
+    join (plan-asserted in tests/test_plans.py)."""
     return (
         f"WITH batch AS (SELECT doc_id, text FROM {batch_view}),\n"
         f"corpus AS (SELECT doc_id, clean_text AS text "
@@ -743,40 +746,6 @@ def near_verdict_prebanded_sql(batch_view: str, batch_band_view: str,
         f"FROM {batch_band_view}),\n"
         f"corpus_band AS (SELECT doc_id, band, band_key "
         f"FROM {corpus_band_view}),\n"
-        + _NEAR_TAIL_SPARK
-    )
-
-
-def near_incremental_stored_spark_sql(corpus_view: str,
-                                      band_view: str) -> str:
-    """Spark side of dedup_incremental_near served from the PERSISTED
-    band table (r7 verdict #1 — the batch twin of the streaming band
-    claim store, streaming/ingest.py): candidate generation scans ONLY
-    ``band_view`` (doc_id, band, band_key — written once per bucket at
-    sink time, O(batch) per daily increment instead of O(corpus)
-    re-minhash), and ``corpus_view``'s text is touched only by the
-    jaccard VERIFY join against the candidate doc_ids. The plan is
-    asserted to keep text out of the candidate side
-    (tests/test_plans.py); the DuckDB twin still re-derives corpus,
-    bands and verdicts from `documents` directly, so the whole
-    sink-roundtrip + stored-band + verify chain stays value-checked."""
-    return ("WITH " + _NEAR_BATCH_CTE + ",\n"
-            + _stored_near_suffix(corpus_view, band_view))
-
-
-def _stored_near_suffix(corpus_view: str, band_view: str) -> str:
-    """The shared stored-band tail: corpus text (verify join only), batch
-    band derivation, the persisted corpus_band alias, then the common
-    candidate/verify/verdict chain. ONE definition so a threshold or
-    band-shape change can never diverge the standalone row from the
-    capstone's verdicts (review r8) — the caller supplies only its batch
-    CTE."""
-    return (
-        f"corpus AS (SELECT doc_id, clean_text AS text "
-        f"FROM {corpus_view}),\n"
-        + _minhash_band_ctes_spark("batch") + ",\n"
-        + f"corpus_band AS (SELECT doc_id, band, band_key "
-          f"FROM {band_view}),\n"
         + _NEAR_TAIL_SPARK
     )
 

@@ -53,6 +53,8 @@ Bucket granularity keeps the checkpoint table tiny (hundreds of rows for a
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import time
 
@@ -472,11 +474,12 @@ def write_docs_bucketed(
     ``out/bands/attempt=N/bucket=K/bkp=J/``, derived from the DURABLE
     clean copy of the same attempt N. This is the batch twin of the
     streaming band claim store (streaming/ingest.py): incremental near-dup
-    (relational.near_incremental_stored_spark_sql) generates candidates by
-    scanning ONLY the stored band columns — never re-minhashing the corpus
-    (r7 verdict #1). Clean and bands commit with the same lineage row, so
-    they can never disagree, not even in a crash window; a bandless run
-    commits no bands: bands-match-clean OR bands-absent.
+    (relational.near_verdict_prebanded_sql over ``probe_band_table``)
+    generates candidates by scanning ONLY the stored band columns — never
+    re-minhashing the corpus (r7 verdict #1). Clean and bands commit with
+    the same lineage row, so they can never disagree, not even in a crash
+    window; a bandless run commits no bands: bands-match-clean OR
+    bands-absent.
 
     Returns the committed corpus reader (``read_clean``: bucket and split
     are partition columns, so downstream filters get pruning for free).
@@ -606,11 +609,14 @@ def probe_band_table(spark: SparkSession, out_dir: str,
     - batch has <= max_pushdown_keys distinct keys (every daily-increment
       and streaming-micro-batch case): collect the key list (bounded by
       construction), filter the scan on ``bkp IN (keys % PARTS)`` — a
-      PartitionFilter, directories skipped — AND ``band_key IN (keys)``,
-      pushed into the parquet reader where the key-sorted row groups and
-      the band_key bloom filter skip pages inside surviving partitions.
-      The scan reads only the probed fraction (plan-asserted in
-      tests/test_plans.py).
+      PartitionFilter, directories skipped — AND an OR of
+      ``band_key IN (chunk)`` over chunks of at most the session's
+      ``spark.sql.parquet.pushdown.inFilterThreshold`` keys (read, never
+      written: a longer IN list would reach the reader as a useless
+      min/max range over uniform hash keys). The literal keys reach the
+      parquet reader, where the key-sorted row groups and the band_key
+      bloom filter skip pages inside surviving partitions. The scan reads
+      only the probed fraction (plan-asserted in tests/test_plans.py).
     - larger batches: bkp partition pruning still applies (the distinct
       bkp list is bounded by BAND_PROBE_PARTS), and the key membership
       runs as a broadcast LEFT SEMI join — no driver round-trip of an
@@ -622,12 +628,7 @@ def probe_band_table(spark: SparkSession, out_dir: str,
     (band, band_key) groups: surviving groups keep their exact bsize for
     the mega-bucket cap and dropped groups could never have joined —
     verdicts are identical to the full-scan form by construction
-    (equality-tested in tests/test_checkpoint.py).
-
-    Session conf: the pushdown shape sets
-    ``spark.sql.parquet.pushdown.inFilterThreshold`` to
-    ``max(max_pushdown_keys, 10)`` on the caller's session and leaves it
-    set; ``__spark_entry__._prepare`` resets it at each driver query."""
+    (equality-tested in tests/test_checkpoint.py)."""
     bands = read_band_table(spark, out_dir)
     keys_df = batch_bands.select("band_key").distinct()
     # bounded collect: we only ever materialize max_pushdown_keys + 1
@@ -636,22 +637,12 @@ def probe_band_table(spark: SparkSession, out_dir: str,
     if len(head) <= max_pushdown_keys:
         keys = [int(r.band_key) for r in head]
         bkps = sorted({k % BAND_PROBE_PARTS for k in keys})
-        # the default parquet In-pushdown threshold (10) would rewrite a
-        # larger key list to a useless min/max range over uniform hash
-        # keys; raise it so the literal key set reaches the reader where
-        # the bloom/row-group stats can act on it.  The session conf is
-        # the ONLY lever that works: the v1 parquet reader captures this
-        # threshold from the session conf when the consuming query
-        # builds its reader (a DataFrameReader option is ignored, and a
-        # save/restore here would revert before the caller's lazy
-        # verdict query ever executes).  Cross-query leakage (advice r9)
-        # is bounded instead by __spark_entry__._prepare, which resets
-        # the threshold to its default at the start of every driver
-        # query invocation.
-        spark.conf.set("spark.sql.parquet.pushdown.inFilterThreshold",
-                       str(max(max_pushdown_keys, 10)))
-        pruned = bands.filter(
-            F.col("bkp").isin(bkps) & F.col("band_key").isin(keys))
+        n = max(1, int(spark.conf.get(
+            "spark.sql.parquet.pushdown.inFilterThreshold")))
+        member = functools.reduce(operator.or_, (
+            F.col("band_key").isin(keys[i:i + n])
+            for i in range(0, len(keys), n)), F.lit(False))
+        pruned = bands.filter(F.col("bkp").isin(bkps) & member)
     else:
         bkp_rows = (batch_bands.select(
             F.pmod(F.col("band_key"), F.lit(BAND_PROBE_PARTS))

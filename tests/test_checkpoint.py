@@ -552,7 +552,6 @@ def test_band_sink_stored_equals_derived(spark, tmp_path):
         _HASH60_SPARK,
         band_signatures_spark_sql,
         near_incremental_spark_sql,
-        near_incremental_stored_spark_sql,
     )
     from fast_pdf_parser_spark.plans.checkpoint import (
         read_band_table,
@@ -577,19 +576,13 @@ def test_band_sink_stored_equals_derived(spark, tmp_path):
                for r in derived.collect())
     assert s == d and len(s) == corpus.count() * 4  # 16 seeds / 4 per band
 
-    # and the two near-incremental forms (stored-band vs derived-on-read)
-    # produce byte-identical verdicts over the same sink
-    stored.createOrReplaceTempView("band_corpus_bands")
-    via_store = spark.sql(near_incremental_stored_spark_sql(
-        "band_corpus", "band_corpus_bands")).collect()
+    # and the PRUNED probe (r8 verdict #1 — the serve path the driver
+    # row uses) yields verdicts byte-identical to the derived-on-read
+    # form over the same sink, on both the key-pushdown shape and the
+    # big-batch semi-join fallback
     via_derive = spark.sql(
         near_incremental_spark_sql("band_corpus")).collect()
     key = lambda r: (r.doc_id, r.near_in_corpus, r.best_jaccard_x1e4)  # noqa: E731
-    assert sorted(map(key, via_store)) == sorted(map(key, via_derive))
-
-    # and the PRUNED probe (r8 verdict #1 — the serve path the driver
-    # row uses) yields the same verdicts as the full-scan form, on both
-    # the key-pushdown shape and the big-batch semi-join fallback
     from fast_pdf_parser_spark.operators.relational import (
         near_batch_spark_sql,
         near_verdict_prebanded_sql,
@@ -605,7 +598,7 @@ def test_band_sink_stored_equals_derived(spark, tmp_path):
         via_pruned = spark.sql(near_verdict_prebanded_sql(
             "bc_batch", "bc_batch_bands",
             "band_corpus", "bc_bands_pruned")).collect()
-        assert sorted(map(key, via_pruned)) == sorted(map(key, via_store))
+        assert sorted(map(key, via_pruned)) == sorted(map(key, via_derive))
 
 
 def test_band_sink_crash_resume_and_empty_bucket(spark, tmp_path):

@@ -23,10 +23,9 @@ def test_entry_returns_rows(spark):
     assert {"doc_id", "offset", "kind", "text", "media_ref"} <= cols
 
 
-def test_entry_leaves_only_the_batch_size_conf(spark):
+def test_entry_leaves_session_conf_unchanged(spark):
     """Between two query boundaries the flagship query changes no session
-    conf except the Arrow batch size extract_documents sets; any new leak
-    between queries fails here."""
+    conf; any leak between queries fails here."""
     entrymod._prepare(spark, SF_DIR)
     before = dict(spark.conf.getAll)
     assert entrymod.entry(spark).count() > 0
@@ -34,7 +33,7 @@ def test_entry_leaves_only_the_batch_size_conf(spark):
     after = dict(spark.conf.getAll)
     changed = {k for k in before.keys() | after.keys()
                if before.get(k) != after.get(k)}
-    assert changed <= {"spark.sql.execution.arrow.maxRecordsPerBatch"}
+    assert changed == set()
 
 
 def test_prepare_registers_views_per_session(spark):

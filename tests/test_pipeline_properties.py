@@ -178,7 +178,7 @@ def test_spark_partition_invariance(spark):
 
 def test_split_path_byte_identical(spark):
     """The giant-doc split path (one row per span, shuffled by doc_id,
-    fold state carried across Arrow batches) must produce BYTE-IDENTICAL
+    fold state carried across input slices) must produce BYTE-IDENTICAL
     output to the zero-shuffle one-row-per-doc path — every column
     including the doc_* meta — with and without a page limit, over a
     corpus with text+pdf+media+html spans."""
@@ -191,8 +191,9 @@ def test_split_path_byte_identical(spark):
 
     docs = list(iter_docs(24, seed=13, include_pdf=True, include_html=True))
     df = spark.createDataFrame(pd.DataFrame(docs), schema=SPANS_DDL)
-    # tiny Arrow batches force documents to straddle batch boundaries in
-    # the split processor — the cross-batch fold-state carry is the point
+    # 3-row fold slices make documents straddle slice boundaries in the
+    # split processor (one span per row, so every document of more than
+    # 3 spans crosses one) — the cross-slice fold-state carry is the point
     popts = ParseOptions(arrow_max_records_per_batch=3)
     from fast_pdf_parser_spark.operators.pipeline import split_spans_table
 

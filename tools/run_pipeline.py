@@ -37,7 +37,10 @@ def parse_args(argv=None):
     p.add_argument("--overlap-tokens", type=int, default=0)
     p.add_argument("--page-limit", type=int, default=0)
     p.add_argument("--format", choices=["parquet", "json"], default="parquet")
-    p.add_argument("--arrow-batch", type=int, default=64)
+    p.add_argument("--arrow-batch", type=int, default=64,
+                   help="docs the fold converts and folds per slice of "
+                        "each Arrow input batch (the reference's "
+                        "batch_size); 0 = whole batches")
     p.add_argument("--concurrent-buckets", type=int, default=0,
                    help="buckets per commit job; 0 = auto")
     p.add_argument("--quiet", action="store_true")
